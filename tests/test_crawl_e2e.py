@@ -35,9 +35,7 @@ def run_engine(spark, workdir, web, max_epochs=5, **cfg_kw):
 @pytest.fixture(scope="module")
 def engine(spark, tmp_path_factory, web):
     wd = str(tmp_path_factory.mktemp("lake-e2e"))
-    # bloom_min_articles=0 forces the bloom seen-filter path so the e2e
-    # byte-identity/seen-set gates exercise it even at fixture scale
-    return run_engine(spark, wd, web, bloom_min_articles=0)
+    return run_engine(spark, wd, web)
 
 
 def test_byte_identity_and_seen_set(spark, engine, golden):
@@ -117,15 +115,13 @@ def test_resume_from_checkpoint(spark, tmp_path, web, golden):
     assert eng3.articles.read(spark).count() == n_before
 
 
-def test_date_filter_and_cross_run_dedup(spark, tmp_path, web):
-    """Date-windowed crawl keeps only in-range articles; re-crawling the same
-    web with a wider window skips already-seen urls (UNIQUE(url) semantics,
-    database.py:57)."""
+def test_date_filter_window(spark, tmp_path, web):
+    """A date-windowed crawl stores exactly the reference's windowed article
+    set, and every stored published_date lies inside the window."""
     wd = str(tmp_path / "lake-dates")
     pages = html_synth.pages_df(spark, web)
     seeds = html_synth.seeds_df(spark, web)
-    cfg = CrawlConfig(start_date="2024-01-01", end_date="2024-01-02",
-                      bloom_min_articles=0)
+    cfg = CrawlConfig(start_date="2024-01-01", end_date="2024-01-02")
     eng = CrawlEngine(spark, wd, pages, cfg)
     eng.run(seeds, max_epochs=5)
     golden_windowed = refspec.simulate_crawl(
@@ -173,31 +169,6 @@ def test_hot_host_salting_preserves_results(spark, tmp_path, web, golden):
     assert got == want
 
 
-def test_bloom_rebuilds_when_seen_set_outgrows_capacity(spark, tmp_path, web):
-    """Round-2 advice: a long crawl can outgrow the 10x headroom the bloom
-    was sized for, silently degrading FPP. The engine must re-size: after
-    the seen set exceeds the sized capacity, the next _seen_probe() call
-    rebuilds a larger filter (persisted seen_shards table + manifest meta;
-    crawl results stay correct — the exact anti-join backstop is separately
-    e2e-gated)."""
-    wd = str(tmp_path / "lake-bloomgrow")
-    eng = run_engine(spark, wd, web, max_epochs=2, bloom_min_articles=0)
-    meta0 = eng.seen_shards.meta()
-    assert meta0 and meta0["capacity"] >= 100_000
-    snaps0 = eng.seen_shards.committed_epochs()
-    # simulate the seen set outgrowing the filter (long-crawl state)
-    eng._articles_rows = meta0["capacity"] + 1
-    probe = eng._seen_probe(99)
-    assert probe is not None
-    meta1 = eng.seen_shards.meta()
-    assert meta1["capacity"] >= (meta0["capacity"] + 1) * 10
-    assert eng.seen_shards.committed_epochs() != snaps0   # rebuilt snapshot
-    # and a steady-state call does NOT rebuild again
-    snaps1 = eng.seen_shards.committed_epochs()
-    eng._seen_probe(99)
-    assert eng.seen_shards.committed_epochs() == snaps1
-
-
 def test_replay_after_articles_commit_crash(spark, tmp_path, web):
     """THE OTHER crash window (found round 5): articles.append(N) committed,
     pipeline checkpoint for N not yet. The replay of N must re-produce
@@ -213,7 +184,7 @@ def test_replay_after_articles_commit_crash(spark, tmp_path, web):
     wd = str(tmp_path / "lake-replay")
     pages = html_synth.pages_df(spark, web)
     seeds = html_synth.seeds_df(spark, web)
-    eng = CrawlEngine(spark, wd, pages, CrawlConfig(bloom_min_articles=0))
+    eng = CrawlEngine(spark, wd, pages, CrawlConfig())
     eng.bootstrap(seeds)
     eng.run_epoch(0)
     stale = [r.asDict() for r in eng.frontier.read(spark).collect()]
@@ -223,7 +194,7 @@ def test_replay_after_articles_commit_crash(spark, tmp_path, web):
     n_after_1 = eng.articles.read(spark).count()
     assert n_after_1 > 0
     # craft the crash state: frontier stale at epoch-1 input, epoch-1
-    # checkpoint missing, epoch-1 articles/metrics/seen_shards committed
+    # checkpoint missing, epoch-1 articles/metrics committed
     eng.frontier.overwrite(stale_df, 1)
     ck = os.path.join(wd, "checkpoints", "_manifest.json")
     man = json.load(open(ck))
@@ -231,31 +202,10 @@ def test_replay_after_articles_commit_crash(spark, tmp_path, web):
     json.dump(man, open(ck, "w"))
     shutil.rmtree(os.path.join(wd, "checkpoints", "epoch=1"),
                   ignore_errors=True)
-    eng2 = CrawlEngine(spark, wd, pages, CrawlConfig(bloom_min_articles=0))
+    eng2 = CrawlEngine(spark, wd, pages, CrawlConfig())
     eng2.run(max_epochs=3)                     # resumes AT epoch 1 (replay)
     arts = eng2.articles.read(spark)
     assert arts.count() == n_after_1           # nothing lost
     assert arts.groupBy("url").count().filter(
         F.col("count") > 1).count() == 0       # nothing duplicated
 
-
-def test_engine_bloom_never_collects_bits_to_driver(spark, tmp_path, web,
-                                                    golden, monkeypatch):
-    """Round-4 verdict Next #1 done-criterion: no bloom bytes ever visit
-    the driver in the engine path — the filter is built, merged, and probed
-    as (shard, bits) DataFrames against the persisted seen_shards table.
-    add_df (the driver fold) must be unreachable from run_epoch; the seen
-    set must still exactly match the reference."""
-    from web_crawler_spark.operators import dedup as dd
-
-    def boom(self, df, url_col="url"):
-        raise AssertionError("driver-side bloom fold called in engine path")
-    monkeypatch.setattr(dd.BloomShards, "add_df", boom)
-    wd = str(tmp_path / "lake-driverfree")
-    # compact_after=1 also exercises the or_merge compaction path in-run
-    eng = run_engine(spark, wd, web, bloom_min_articles=0,
-                     seen_shards_compact_after=1)
-    got = {r.url for r in eng.articles.read(spark).select("url").collect()}
-    assert got == {a["url"] for a in golden["articles"]}
-    assert eng.seen_shards.meta()["capacity"] >= 100_000
-    assert len(eng.seen_shards.committed_epochs()) >= 1

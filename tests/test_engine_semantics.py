@@ -189,42 +189,7 @@ def test_metrics_include_skipped_robots(spark, tmp_path, web):
     assert blocked == 0
 
 
-# ------------------------------------------------------- bloom + scheduling
-def test_bloom_jvm_hash_no_false_negatives(spark):
-    """Bloom property after the xxhash64 move: every inserted url probes
-    True (no false negatives), and seen_filter stays exact on overlap."""
-    from web_crawler_spark.operators import dedup
-    u = F.concat(F.lit("https://h/x"), F.col("id").cast("string"))
-    seen = spark.range(1000).select(u.alias("url"))
-    b = dedup.BloomShards.sized_for(1000)
-    b.add_df(seen)
-    h1, h2 = dedup.bloom_hash_cols(F.col("url"))
-    probed = seen.withColumn("m", b.might_contain_udf()(h1, h2))
-    assert probed.filter(~F.col("m")).count() == 0
-    cand = spark.range(500, 1500).select(u.alias("url"))
-    out = {r["url"] for r in
-           dedup.seen_filter(cand, seen, b).collect()}
-    want = {f"https://h/x{i}" for i in range(1000, 1500)}
-    assert out == want
-
-
-def test_bloom_build_hashes_jvm_side(spark):
-    """The build/probe plans carry xxhash64 expressions — Python no longer
-    hashes urls in the seen filter (round-2 judge item 8)."""
-    import contextlib
-    import io
-    from web_crawler_spark.operators import dedup
-    u = F.concat(F.lit("https://h/x"), F.col("id").cast("string"))
-    seen = spark.range(100).select(u.alias("url"))
-    b = dedup.BloomShards.sized_for(100)
-    b.add_df(seen)
-    out = dedup.seen_filter(spark.range(200).select(u.alias("url")), seen, b)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain(True)
-    assert "xxhash64" in buf.getvalue()
-
-
+# ------------------------------------------------------------- scheduling
 def test_two_phase_truncation_equals_single_window(spark):
     """truncate_per_host with prebucketing returns exactly the same rows as
     the single-window plan (exact distributed top-k), while its plan sorts

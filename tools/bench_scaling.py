@@ -92,15 +92,15 @@ N_BUCKETS = 64
 def prepare(workdir: str) -> None:
     from web_crawler_spark import html_synth
     from web_crawler_spark.session import get_spark
+    from web_crawler_spark.sources.tables import write_bucketed_pages
     spark = get_spark("scaling-prepare", cores=32)
     pages = html_synth.synth_pages_range(spark, N_DOCS, n_hosts=N_HOSTS,
                                          n_partitions=64)
-    # pages as a url-bucketed table: workers re-attach CREATE TABLE metadata
+    # pages as a url-bucketed table: workers re-attach the bucket metadata
     # over this location so the fetch join reads buckets scan-locally
-    (pages.select("url", "warc_ts", "html", "text", "lang")
-     .write.mode("overwrite").bucketBy(N_BUCKETS, "url").sortBy("url")
-     .option("path", os.path.join(workdir, "pages_bucketed"))
-     .saveAsTable("pages_bucketed"))
+    write_bucketed_pages(pages.select("url", "warc_ts", "html", "text", "lang"),
+                         os.path.join(workdir, "pages_bucketed"),
+                         table="pages_bucketed", n_buckets=N_BUCKETS)
     pages.select("url_raw", "doc_id") \
         .write.mode("overwrite").parquet(os.path.join(workdir, "frontier"))
     # ~4% deterministic slice for the steady-state warm pass (same schema,
@@ -124,19 +124,14 @@ def run_epoch(spark, workdir: str, cores: int) -> dict:
     from web_crawler_spark.functions import canonicalize as canon
     from web_crawler_spark.functions import extract as ex
     from web_crawler_spark.operators import politeness
+    from web_crawler_spark.sources.tables import read_bucketed_pages
 
     # re-attach the bucketed pages table written by prepare(): bucket
     # metadata lives in this session's catalog, data at the shared path —
     # the fetch join then needs NO exchange on the html side (verified: the
     # plan's only Exchange is the frontier)
-    spark.sql(f"""
-        CREATE TABLE pages_bucketed
-            (url string, warc_ts timestamp, html binary, text string,
-             lang string)
-        USING parquet
-        CLUSTERED BY (url) SORTED BY (url) INTO {N_BUCKETS} BUCKETS
-        LOCATION '{os.path.join(workdir, "pages_bucketed")}'""")
-    pages = spark.table("pages_bucketed")
+    pages = read_bucketed_pages(spark, os.path.join(workdir, "pages_bucketed"),
+                                table="pages_bucketed", n_buckets=N_BUCKETS)
     raw = spark.read.parquet(os.path.join(workdir, "frontier"))
     # warm: touch footers + JIT the scan paths, not the pipeline under test
     pages.select(F.count("*")).collect()

@@ -1815,7 +1815,6 @@ def corpus_assembly_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tok", 128)
 
 
-_PR_SRC_SQL = "(CASE WHEN doc_id % 10 < 3 THEN 0 ELSE 1 + doc_id % 19 END)"
 _PR_DST_SQL = "(CASE WHEN jd % 10 < 3 THEN 0 ELSE 1 + jd % 19 END)"
 
 
@@ -1823,8 +1822,8 @@ _PR_DST_SQL = "(CASE WHEN jd % 10 < 3 THEN 0 ELSE 1 + jd % 19 END)"
     WITH j AS (
       SELECT doc_id, (doc_id * 31 + 7) % 499 AS jd FROM documents),
     e AS (
-      SELECT DISTINCT {_PR_SRC_SQL} AS src, {_PR_DST_SQL} AS dst
-      FROM j WHERE {_PR_SRC_SQL} <> {_PR_DST_SQL}),
+      SELECT DISTINCT {_HOST_SQL} AS src, {_PR_DST_SQL} AS dst
+      FROM j WHERE {_HOST_SQL} <> {_PR_DST_SQL}),
     nodes AS (SELECT DISTINCT v FROM
               (SELECT src AS v FROM e UNION ALL SELECT dst FROM e)),
     nn AS (SELECT count(*) AS n FROM nodes),

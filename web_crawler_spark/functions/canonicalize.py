@@ -105,14 +105,6 @@ def canonicalize_udf():
 
 
 @lru_cache(maxsize=1)
-def host_udf():
-    @pandas_udf("string")
-    def _host(urls: pd.Series) -> pd.Series:
-        return urls.map(lambda u: refspec.url_host(u) if u else None)
-    return _host
-
-
-@lru_cache(maxsize=1)
 def canon_host_udf():
     """url → struct(url_canon, host) in ONE Arrow pass (vectorized batch
     canonicalizer; host extracted from the canonical form, which always has
@@ -128,21 +120,6 @@ def canon_host_udf():
         hosts = canon_urls.str.extract(r"^[^:]+://([^/]+)", expand=False)
         return pd.DataFrame({"url_canon": canon_urls, "host": hosts})
     return _ch.asNondeterministic()
-
-
-@lru_cache(maxsize=1)
-def absolutize_udf():
-    @pandas_udf("string")
-    def _abs(base: pd.Series, href: pd.Series) -> pd.Series:
-        out = []
-        for b, h in zip(base, href):
-            if h is None:
-                out.append(None)
-                continue
-            u = refspec.absolute_url(b or "", h)
-            out.append(u if refspec.is_valid_url(u) else None)
-        return pd.Series(out, dtype="object")
-    return _abs
 
 
 def with_canonical(df, url_col: str = "url") -> "DataFrame":

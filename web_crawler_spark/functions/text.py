@@ -61,14 +61,6 @@ def quality_cols(text):
     }
 
 
-def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    cols = quality_cols(F.col(text_col))
-    out = df
-    for name, c in cols.items():
-        out = out.withColumn(name, c)
-    return out
-
-
 def langid_col(text):
     """n-gram-free language-ID heuristic: distinct-stopword hit counts per
     language; argmax wins, 'und' if nothing hits. Deterministic tie-break by

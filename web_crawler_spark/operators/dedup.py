@@ -5,22 +5,15 @@ D1 — order-preserving in-batch dedup (reference: list(dict.fromkeys(...)),
      (which is tie-nondeterministic under parallelism).
 
 D2 — global URL-seen set (reference: articles.url UNIQUE constraint,
-     database.py:57) as a two-stage filter that scales to 10^10 URLs:
-       1. sharded Bloom filters built distributed (applyInPandas per shard),
-          merged driver-side, broadcast — O(bits) driver memory, tunable fpp;
-          candidates that pass the bloom are *probably new*.
-       2. exact left_anti join against the articles table restricted to the
-          bloom-positive rows — removes the false positives; at 10^10 URLs the
-          anti-join input is |new| + fpp·|frontier|, not |seen|·|frontier|.
-     In local tests both stages run; stage 1 is validated to produce no false
-     negatives (bloom property) so correctness never depends on fpp.
+     database.py:57) is not an operator here: the epoch plan filters its
+     scheduled article rows with one exact left_anti join against the
+     committed `articles.url` column (plans/epoch.py, step 2).
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
-from typing import Dict, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -39,348 +32,6 @@ def first_occurrence(df: DataFrame, key: str, order_col: str) -> DataFrame:
     w = Window.partitionBy(key).orderBy(F.col(order_col).asc())
     return (df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1).drop("__rn"))
-
-
-# ---------------------------------------------------------------------------
-# D2 — sharded Bloom URL-seen filter
-# ---------------------------------------------------------------------------
-
-def bloom_hash_cols(url_col):
-    """Two independent 64-bit hash COLUMNS, JVM-side (whole-stage codegen):
-    xxhash64(url) and xxhash64(url, 1). Replaces the round-1 per-row Python
-    blake2b loop — at 10^10 URLs the seen-filter's hashing now never enters
-    Python; the pandas side only does vectorized numpy bit math over the
-    precomputed values. Deterministic across runs/workers (fixed seed 42
-    inside Spark's xxhash64)."""
-    return (F.xxhash64(url_col), F.xxhash64(url_col, F.lit(1)))
-
-
-def _as_u64(s: pd.Series) -> np.ndarray:
-    """Signed bigint column → uint64 bit-pattern (wrapping view)."""
-    return s.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
-
-
-#: sparse bits-payload header (round 5). A `bits` payload is either
-#:   * DENSE  — the raw shard bit array, length n_bits//8 (a power of two,
-#:     >= 128 by construction: n_bits is a pow2 >= 2^10), or
-#:   * SPARSE — magic + uint32-LE SET-BIT POSITIONS (sorted unique), padded
-#:     with one 0xFFFFFFFF sentinel iff the total length would be a power
-#:     of two.
-#: The discriminator is therefore structural, not probabilistic: a payload
-#: whose length is a power of two IS dense; anything else must carry the
-#: magic. Small epochs append positions (~4 B per set bit) instead of a
-#: capacity-sized zero array per touched shard — at the 10^10-URL filter a
-#: 1M-url epoch appends ~30 MB instead of ~16 GB of (mostly-zero) dense
-#: buffers, and compaction (or_merge_bits) re-densifies.
-_SPARSE_MAGIC = b"WCSSPOS1"
-_SPARSE_PAD = b"\xff\xff\xff\xff"
-
-
-def _sparse_payload(positions: np.ndarray) -> bytes:
-    body = _SPARSE_MAGIC + positions.astype("<u4").tobytes()
-    n = len(body)
-    if n >= 128 and (n & (n - 1)) == 0:     # never collide with dense pow2
-        body += _SPARSE_PAD
-    return body
-
-
-def _densify(payload, n_bits: int) -> np.ndarray:
-    """Decode a bits payload (dense or sparse) to the dense uint8 array."""
-    b = bytes(payload)
-    n = len(b)
-    if n == n_bits // 8:                    # pow2 by construction: dense
-        return np.frombuffer(b, dtype=np.uint8)
-    if b[:8] == _SPARSE_MAGIC:
-        pos = np.frombuffer(b, dtype="<u4", offset=8)
-        pos = pos[pos < n_bits]             # drop the pad sentinel
-        arr = np.zeros(n_bits // 8, dtype=np.uint8)
-        np.bitwise_or.at(arr, (pos // 8).astype(np.int64),
-                         np.uint8(1) << (pos % 8).astype(np.uint8))
-        return arr
-    raise ValueError(
-        f"unrecognized bloom bits payload: {n} bytes for n_bits={n_bits} "
-        "(neither the dense length nor sparse-magic-prefixed)")
-
-
-class BloomShards:
-    """Partitioned bloom filter: shard by xxhash64(url) % n_shards; each shard
-    is an independent bit array sized for expected_per_shard at target fpp.
-
-    Scale story: at 10^10 seen URLs, 1% fpp ⇒ ~9.6 bits/URL ⇒ 12 GB total,
-    sharded into n_shards broadcast pieces; each executor only needs the
-    shards present in its partition's hash range when probing after a
-    shard-aligned repartition. (In local tests the whole dict broadcasts.)
-    """
-
-    def __init__(self, n_shards: int = 16, n_bits_per_shard: int = 1 << 17,
-                 n_hashes: int = 7):
-        self.n_shards = n_shards
-        self.n_bits = n_bits_per_shard
-        self.n_hashes = n_hashes
-        self.bits: Dict[int, np.ndarray] = {}
-
-    @classmethod
-    def sized_for(cls, expected_n: int, fpp: float = 0.01,
-                  n_shards: Optional[int] = None) -> "BloomShards":
-        if n_shards is None:
-            # auto-shard so one probe task's bit array stays executor-sized:
-            # ~9.6 bits/URL at 1% fpp ⇒ a 10^10-URL filter is ~12 GB — cap a
-            # shard at 64 MB (⇒ 256 shards there), floor at 16 for small sets
-            total_bytes = int(expected_n * -math.log(fpp)
-                              / (math.log(2) ** 2)) // 8
-            n_shards = max(16, 1 << max(0, (total_bytes // (64 << 20))
-                                        .bit_length()))
-        per = max(1024, expected_n // n_shards + 1)
-        m = int(-per * math.log(fpp) / (math.log(2) ** 2))
-        m = 1 << max(10, m.bit_length())            # round up to pow2 words
-        k = max(1, round(m / per * math.log(2)))
-        return cls(n_shards=n_shards, n_bits_per_shard=m, n_hashes=min(k, 12))
-
-    # -- build (distributed) -------------------------------------------------
-    def build_bits_df(self, df: DataFrame, url_col: str = "url",
-                      sparse: bool = False) -> DataFrame:
-        """Distributed shard build as a (shard, bits) DataFrame — no driver
-        materialization. Hashing is entirely JVM-side (bloom_hash_cols):
-        the applyInPandas stage receives precomputed (h1, h2) and only ORs
-        bits — a vectorized numpy pass, no per-row Python anywhere. At
-        10^10 URLs this is the stage whose output lands in the persisted
-        `seen_shards` lakehouse table (SURVEY §6) instead of the driver.
-
-        ``sparse=True`` emits the positions payload when it is smaller
-        than the dense array (see _SPARSE_MAGIC): the per-epoch append
-        shape — an epoch's write cost becomes O(bits set), not
-        O(filter capacity). Every consumer (or_merge_bits, the cogroup
-        probe, add_df) decodes both formats via _densify."""
-        n_bits, n_hashes = self.n_bits, self.n_hashes
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            shard = int(pdf["__shard"].iloc[0])
-            h1, h2 = _as_u64(pdf["__h1"]), _as_u64(pdf["__h2"])
-            all_idx = np.concatenate([
-                (h1 + np.uint64(i) * h2) % np.uint64(n_bits)
-                for i in range(n_hashes)])
-            if sparse:
-                pos = np.unique(all_idx)        # sorted unique positions
-                if 8 + 4 * len(pos) < n_bits // 8:
-                    return pd.DataFrame({"shard": [shard],
-                                         "bits": [_sparse_payload(pos)]})
-            arr = np.zeros(n_bits // 8, dtype=np.uint8)
-            np.bitwise_or.at(arr, (all_idx // 8).astype(np.int64),
-                             np.uint8(1) << (all_idx % 8).astype(np.uint8))
-            return pd.DataFrame({"shard": [shard], "bits": [arr.tobytes()]})
-
-        h1, h2 = bloom_hash_cols(F.col(url_col))
-        return (df.select(h1.alias("__h1"), h2.alias("__h2"))
-                .withColumn("__shard",
-                            F.pmod(F.col("__h1"), F.lit(self.n_shards))
-                            .cast("int"))
-                .groupBy("__shard")
-                .applyInPandas(build, schema="shard int, bits binary"))
-
-    def or_merge_bits(self_or_shards, shards: DataFrame = None) -> DataFrame:
-        """OR-combine multiple (shard, bits) rows per shard into one DENSE
-        row — the incremental cross-epoch merge (and the sparse-append
-        compaction), executed where the shards live (one exchange keyed on
-        shard; the union of epoch shard tables never visits the driver).
-        Empty-bits rows are tolerated; sparse rows are densified.
-
-        Callable both ways for API compat: BloomShards.or_merge_bits(df)
-        (dense-only legacy form, n_bits inferred from the first dense row)
-        or instance.or_merge_bits(df) (knows n_bits, decodes sparse)."""
-        if isinstance(self_or_shards, BloomShards):
-            n_bits = self_or_shards.n_bits
-        else:                                  # legacy static call
-            shards, n_bits = self_or_shards, None
-
-        def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-            nb = n_bits
-            if nb is None:
-                # dense rows are pow2-length; sparse decoding needs the
-                # true n_bits, so the static form requires >=1 dense row
-                lens = [len(b) for b in pdf["bits"] if b is not None
-                        and len(b) and bytes(b[:8]) != _SPARSE_MAGIC]
-                if not lens and any(b is not None and len(b)
-                                    for b in pdf["bits"]):
-                    raise ValueError(
-                        "or_merge_bits(static) on an all-sparse shard "
-                        "group: call it on the sized BloomShards instance")
-                nb = (max(lens) * 8) if lens else 0
-            acc = None
-            for b in pdf["bits"]:
-                if b is None or not len(b):    # tolerate empty-bits rows
-                    continue
-                a = _densify(b, nb)
-                acc = a.copy() if acc is None else acc | a
-            if acc is None:                    # nothing real for this shard
-                return pd.DataFrame({"shard": pd.Series([], dtype="int32"),
-                                     "bits": pd.Series([], dtype=object)})
-            return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
-                                 "bits": [acc.tobytes()]})
-
-        return (shards.groupBy("shard")
-                .applyInPandas(merge, schema="shard int, bits binary"))
-
-    def add_df(self, df: DataFrame, url_col: str = "url") -> "BloomShards":
-        """Build shards distributed, then fold into the driver-held dict
-        (the broadcast-probe form used at local scale). The driver-free
-        variant is build_bits_df → seen-shards table → flag_maybe_seen."""
-        for row in self.build_bits_df(df, url_col).collect():
-            arr = _densify(row["bits"], self.n_bits).copy()
-            if row["shard"] in self.bits:
-                self.bits[row["shard"]] |= arr
-            else:
-                self.bits[row["shard"]] = arr
-        return self
-
-    def total_bytes(self) -> int:
-        """Bytes the broadcast probe would ship to EVERY worker — the
-        engine switches to the shard-aligned plan above this size."""
-        return sum(a.nbytes for a in self.bits.values())
-
-    # -- probe (shard-aligned) -------------------------------------------------
-    def bits_df(self, spark) -> DataFrame:
-        """The shard bit arrays as a (shard, bits) DataFrame — the form the
-        shard-aligned probe consumes. At 10^10 URLs this table lives in the
-        lakehouse next to `articles` (built by add_df's applyInPandas stage
-        writing shards instead of collecting); here it ships from the
-        driver-held dict."""
-        return spark.createDataFrame(
-            [(int(s), arr.tobytes()) for s, arr in sorted(self.bits.items())],
-            schema="shard int, bits binary")
-
-    def flag_maybe_seen(self, candidates: DataFrame, url_col: str = "url",
-                        bits: "Optional[DataFrame]" = None) -> DataFrame:
-        """Shard-aligned probe (round-3 verdict Next #4): candidates are
-        repartitioned by pmod(h1, n_shards) and COGROUPED with the one
-        (shard, bits) row for their shard — each task materializes exactly
-        one shard's bytes, never the whole filter. The broadcast probe
-        (might_contain_udf) ships every shard to every worker: fine at
-        local scale, but the 10^10-URL filter is ~12 GB and only the
-        shard-aligned plan survives it. Returns the input plus
-        __maybe_seen boolean; equality with the broadcast path is
-        regression-tested.
-
-        ``bits`` overrides the driver-held dict with an external
-        (shard, bits) DataFrame — the persisted `seen_shards` lakehouse
-        table (SURVEY §6): build_bits_df → table → probe, with the filter
-        bytes never visiting the driver at any point."""
-        spark = candidates.sparkSession
-        h1, h2 = bloom_hash_cols(F.col(url_col))
-        cand = (candidates
-                .withColumn("__h1", h1).withColumn("__h2", h2)
-                .withColumn("__shard",
-                            F.pmod(F.col("__h1"), F.lit(self.n_shards))
-                            .cast("int")))
-        out_ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in cand.schema
-        ) + ", __maybe_seen boolean"
-        probe = _sharded_probe_fn(self.n_bits, self.n_hashes)
-        flagged = (cand.groupBy("__shard")
-                   .cogroup((bits if bits is not None
-                             else self.bits_df(spark)).groupBy("shard"))
-                   .applyInPandas(probe, schema=out_ddl))
-        return flagged.drop("__h1", "__h2", "__shard")
-
-    # -- probe (broadcast) ----------------------------------------------------
-    def might_contain_udf(self):
-        """(h1, h2) → bool. Hash columns are computed JVM-side by the caller
-        (bloom_hash_cols); the UDF is pure vectorized numpy bit probing —
-        shard routing replicates JVM pmod via numpy's divisor-sign modulo."""
-        bits, n_shards, n_bits, n_hashes = (
-            dict(self.bits), self.n_shards, self.n_bits, self.n_hashes)
-
-        @pandas_udf("boolean")
-        def probe(h1s: pd.Series, h2s: pd.Series) -> pd.Series:
-            if not len(h1s):
-                return pd.Series([], dtype="bool")
-            out = np.zeros(len(h1s), dtype=bool)
-            h1_signed = h1s.to_numpy(dtype=np.int64, na_value=0)
-            h1, h2 = h1_signed.view(np.uint64), _as_u64(h2s)
-            shards = h1_signed % n_shards        # == JVM pmod
-            for s in np.unique(shards):
-                arr = bits.get(int(s))
-                if arr is None:
-                    continue
-                sel = shards == s
-                ok = np.ones(int(sel.sum()), dtype=bool)
-                sh1, sh2 = h1[sel], h2[sel]
-                for i in range(n_hashes):
-                    idx = (sh1 + np.uint64(i) * sh2) % np.uint64(n_bits)
-                    ok &= (arr[(idx // 8).astype(np.int64)]
-                           >> (idx % 8).astype(np.uint8)) & 1 == 1
-                out[sel] = ok
-            return pd.Series(out)
-
-        return probe
-
-
-def _sharded_probe_fn(n_bits: int, n_hashes: int):
-    """Cogroup probe body for BloomShards.flag_maybe_seen. Module-level
-    factory ON PURPOSE: its closure carries two ints — the shard's bit
-    array arrives as the cogrouped (shard, bits) row, so the serialized
-    task ships ~KBs however large the filter is (tested by
-    test_sharded_probe_closure_is_bitsfree)."""
-
-    def probe(cpdf: pd.DataFrame, bpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(cpdf):
-            return cpdf.assign(__maybe_seen=pd.Series([], dtype="bool"))
-        if not len(bpdf):                      # no bits for this shard
-            return cpdf.assign(__maybe_seen=False)
-        # OR every row for this shard: an un-merged multi-epoch seen_shards
-        # table has one row per epoch, and missing any of them would create
-        # bloom FALSE NEGATIVES — the one failure mode the two-stage seen
-        # filter cannot tolerate (bloom-negative skips the exact anti-join).
-        # Rows may be dense or sparse (positions) payloads.
-        arr = None
-        for b in bpdf["bits"]:
-            if b is None or not len(b):
-                continue
-            a = _densify(b, n_bits)
-            arr = a.copy() if arr is None else arr | a
-        if arr is None:
-            return cpdf.assign(__maybe_seen=False)
-        h1, h2 = _as_u64(cpdf["__h1"]), _as_u64(cpdf["__h2"])
-        ok = np.ones(len(cpdf), dtype=bool)
-        for i in range(n_hashes):
-            idx = (h1 + np.uint64(i) * h2) % np.uint64(n_bits)
-            ok &= (arr[(idx // 8).astype(np.int64)]
-                   >> (idx % 8).astype(np.uint8)) & 1 == 1
-        return cpdf.assign(__maybe_seen=ok)
-
-    return probe
-
-
-def seen_filter(candidates: DataFrame, seen_df: Optional[DataFrame],
-                bloom: Optional[BloomShards], url_col: str = "url",
-                shard_aligned: bool = False,
-                bits: Optional[DataFrame] = None) -> DataFrame:
-    """Return candidate rows whose url is NOT in the seen set.
-
-    bloom-negative ⇒ definitely new (no false negatives) — passes without
-    join; bloom-positive ⇒ exact left_anti against seen_df. With no bloom,
-    falls back to the plain anti-join. seen_df is read with only url_col
-    (column pruning reaches the parquet scan). ``shard_aligned=True`` probes
-    via the cogrouped per-shard plan (each task holds ONE shard's bytes)
-    instead of broadcasting the whole filter — the 10^10-URL shape.
-
-    ``bits`` feeds the probe from an external (shard, bits) DataFrame — the
-    persisted `seen_shards` lakehouse table — so the filter bytes never
-    visit the driver (round-4 verdict Next #1); implies shard_aligned."""
-    if seen_df is None:
-        return candidates
-    seen_urls = seen_df.select(F.col(url_col))
-    if bloom is None or (bits is None and not bloom.bits):
-        return candidates.join(seen_urls, on=url_col, how="left_anti")
-    if shard_aligned or bits is not None:
-        flagged = bloom.flag_maybe_seen(candidates, url_col, bits=bits)
-    else:
-        probe = bloom.might_contain_udf()
-        h1, h2 = bloom_hash_cols(F.col(url_col))
-        flagged = candidates.withColumn("__maybe_seen", probe(h1, h2))
-    fresh = flagged.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-    suspect = (flagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-               .join(seen_urls, on=url_col, how="left_anti"))
-    return fresh.unionByName(suspect)
 
 
 # ---------------------------------------------------------------------------

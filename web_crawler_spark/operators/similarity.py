@@ -119,8 +119,8 @@ def kmeans_centroids(embeddings: DataFrame, n_clusters: int = 16,
     aggregates in the same job (one exchange of n_clusters rows/partition)
     — standard one-job-per-iteration distributed k-means that works
     unchanged at 10^9 vectors (the only driver-side materialization is the
-    n_clusters×dim centroid table itself, a bounded broadcast build like
-    the bloom shards). Means are decimal-summed then divided in double, so
+    n_clusters×dim centroid table itself, a bounded broadcast build).
+    Means are decimal-summed then divided in double, so
     centroid values are identical regardless of partition order — which is
     what lets the DuckDB oracle restate the whole quantizer value-for-value
     (and the engine stay bit-identical across parallelism levels).

@@ -24,8 +24,8 @@ Scale notes (the 100 TB story):
     equi shuffle join, salted on hot hosts before the shuffle (AQE skew-join
     is also on as a backstop). At 10^10 pages both sides are
     bucket-partitionable by url in Iceberg, making the join co-located.
-  * the seen filter is bloom-shard broadcast + residual anti-join — the only
-    full-table touch of `articles` is column-pruned to `url`.
+  * the seen filter is one exact anti-join against `articles`, the only
+    full-table touch of it, column-pruned to `url`.
   * parse (Arrow UDF) runs only on rows that survived seen+date gates.
   * every epoch appends to articles/metrics/checkpoints atomically; a crash
     resumes from the last committed epoch (tables.LakeTable contract).
@@ -93,11 +93,6 @@ class CrawlConfig:
     max_retries: int = 3                 # base_crawler.py:43-48
     hot_threshold: int = 50_000
     n_salt: int = 8
-    bloom_fpp: float = 0.01
-    #: below this many seen articles the bloom prefilter costs more jobs
-    #: than the plain anti-join it would save — build it only past the
-    #: threshold (0 forces the bloom path, used by tests)
-    bloom_min_articles: int = 500_000
     host_delays: Dict[str, float] = field(default_factory=dict)  # robots map
     #: fault injection for the retry path (S5/T3): {url: n} makes the fetch
     #: return HTTP 429 for that url until `retries >= n` — the sandbox pages
@@ -110,16 +105,6 @@ class CrawlConfig:
     #: built via operators.robots.collect_rules; delays merged into
     #: host_delays at engine init, prefixes filter the frontier each epoch
     robots_rules: Dict[str, tuple] = field(default_factory=dict)
-    #: retained for API compat; the engine now ALWAYS probes via the
-    #: shard-aligned cogroup plan fed by the persisted seen_shards table
-    #: (round-4 verdict Next #1: no bloom bytes ever visit the driver).
-    #: The broadcast probe remains available at operator level
-    #: (dedup.seen_filter without bits=).
-    bloom_broadcast_max_bytes: int = 64 << 20
-    #: compact the seen_shards table (distributed or_merge_bits rewrite)
-    #: once it holds more than this many snapshots — bounds the probe-side
-    #: scan to ~this×|filter| bytes while keeping per-epoch writes append-only
-    seen_shards_compact_after: int = 6
     #: OPT-IN frontier scan pruning (round-4 verdict Next #2): when set,
     #: epoch N only considers rows with next_fetch_ts <= epoch_start +
     #: fetch_horizon, and the DeltaFrontier read SKIPS add files whose
@@ -165,13 +150,6 @@ class CrawlEngine:
         self.partition_checkpoints = LakeTable(
             os.path.join(workdir, "partition_checkpoints"), PARTITION_CK_DDL)
         self.sources = LakeTable(os.path.join(workdir, "sources"), SOURCES_DDL)
-        # persisted bloom state (SURVEY §6 seen_shards): (shard, bits) rows
-        # built distributed per epoch; sizing params live in the table's
-        # manifest meta so bits and params commit atomically together.
-        # Survives restarts — a resumed crawl probes the committed filter
-        # instead of rebuilding it.
-        self.seen_shards = LakeTable(os.path.join(workdir, "seen_shards"),
-                                     "shard int, bits binary")
         # host→host link graph (only when authority budgets are on — the
         # LakeTable ctor mkdirs, and a default run must leave the workdir
         # layout untouched). Edge rows are distinct (src, dst) per epoch —
@@ -181,7 +159,6 @@ class CrawlEngine:
                       "src string, dst string")
             if self.cfg.rank_host_budgets else None)
         self._frontier_rows: Optional[int] = None  # carried across epochs
-        self._articles_rows: Optional[int] = None  # running seen-set size
         self._horizon_skew: float = 0.0  # fetch_horizon fast-forward (below)
         if self.cfg.robots_rules:
             from ..operators import robots
@@ -231,53 +208,6 @@ class CrawlEngine:
         self.frontier.overwrite(f, epoch=0)
 
     # ----------------------------------------------------------------- epoch
-    def _seen_shards_key(self) -> int:
-        """Next seen_shards snapshot key: strictly increasing, NEVER reused
-        (reusing a key makes LakeTable.overwrite rmtree a committed dir
-        before the manifest swap — the crash hazard DeltaFrontier's fresh
-        dir names exist to kill). A replay double-appending an epoch's bits
-        under a new key is harmless: bloom OR is idempotent, duplicates can
-        only create false positives, which the exact anti-join absorbs."""
-        done = self.seen_shards.committed_epochs()
-        return (max(done) + 1) if done else 0
-
-    def _seen_probe(self, epoch: int):
-        """Bloom probe state for epoch N, fully driver-free (round-4 verdict
-        Next #1): the filter lives in the persisted seen_shards table as
-        (shard, bits) rows; sizing params ride the table manifest's meta.
-        Returns (BloomShards params, bits DataFrame) or None while the seen
-        set is under bloom_min_articles (below that the plain anti-join is
-        cheaper than the probe's cogroup exchange).
-
-        (Re)build triggers: no committed filter yet, or the seen set
-        outgrew the capacity the filter was sized for (10x headroom) —
-        silently degraded FPP would route most scheduled URLs through the
-        exact anti-join suspect path. The rebuild reads articles
-        *before_epoch* so a replayed epoch never folds its own orphan
-        output into the filter it probes."""
-        if self._articles_rows is None:            # resume: count once
-            self._articles_rows = self.articles.read(
-                self.spark, before_epoch=epoch).count()
-        n_seen = self._articles_rows
-        if n_seen < self.cfg.bloom_min_articles:
-            return None
-        meta = self.seen_shards.meta()
-        if not meta or n_seen > meta["capacity"]:
-            capacity = max(n_seen * 10, 100_000)
-            bloom = dedup.BloomShards.sized_for(capacity,
-                                                fpp=self.cfg.bloom_fpp)
-            art = self.articles.read(self.spark, before_epoch=epoch)
-            self.seen_shards.overwrite(
-                bloom.build_bits_df(art.select("url"), "url"),
-                self._seen_shards_key(),
-                meta={"capacity": capacity, "n_shards": bloom.n_shards,
-                      "n_bits": bloom.n_bits, "n_hashes": bloom.n_hashes})
-        else:
-            bloom = dedup.BloomShards(n_shards=meta["n_shards"],
-                                      n_bits_per_shard=meta["n_bits"],
-                                      n_hashes=meta["n_hashes"])
-        return bloom, self.seen_shards.read(self.spark)
-
     def run_epoch(self, epoch: int) -> Dict[str, int]:
         import time as _time
         _timing = os.environ.get("WCS_EPOCH_TIMING") == "1"
@@ -397,22 +327,22 @@ class CrawlEngine:
         n_sched_total = sc["n"]
         n_sched_arts = sc["na"] or 0
 
-        # 2) global seen-filter for article rows (bloom + exact anti-join).
-        #    Both the exact side and the bloom read AS-OF this epoch
-        #    (before_epoch): after a crash between epoch N's articles append
-        #    and the pipeline checkpoint, the replay of N must not treat its
-        #    own orphan output as already-seen (that filtered the replayed
-        #    articles out and rewrote the epoch EMPTY — the data-loss window
+        # 2) global seen-filter for article rows: one exact anti-join
+        #    against the stored urls (column-pruned to the parquet scan).
+        #    The seen side is read AS-OF this epoch (before_epoch): after a
+        #    crash between epoch N's articles append and the pipeline
+        #    checkpoint, the replay of N must not treat its own orphan
+        #    output as already-seen (that filtered the replayed articles
+        #    out and rewrote the epoch EMPTY — the data-loss window
         #    test_replay_after_articles_commit_crash pins).
         arts = sched.filter(F.col("kind") == "article")
         lists = sched.filter(F.col("kind") == "list")
-        has_seen = any(e < epoch for e in self.articles.committed_epochs())
-        seen_df = self.articles.read(self.spark, before_epoch=epoch) \
-            if has_seen else None
         _mark("sched_count")
-        probe = self._seen_probe(epoch) if has_seen else None
-        bloom, seen_bits = probe if probe else (None, None)
-        fresh = dedup.seen_filter(arts, seen_df, bloom, "url", bits=seen_bits)
+        fresh = arts
+        if any(e < epoch for e in self.articles.committed_epochs()):
+            fresh = arts.join(
+                self.articles.read(self.spark, before_epoch=epoch)
+                .select("url"), "url", "left_anti")
 
         # 3) in-epoch order-preserving dedup (D1): first discovery wins
         fresh = dedup.first_occurrence(fresh, key="url",
@@ -621,32 +551,6 @@ class CrawlEngine:
         n_ok_arts = at["arts_ok"] or 0
         n_parsed = at["parsed"] or 0
         _mark("counts")
-        if bloom is not None and n_parsed:
-            # fold this epoch's new urls into the persisted filter — a
-            # distributed (shard, bits) append, zero bytes through the
-            # driver (the old add_df fold collected capacity-sized shard
-            # arrays per epoch: ~12 GB/epoch at the 10^10-URL filter).
-            # sparse=True writes set-bit POSITIONS when smaller than the
-            # dense array (round 5): the append costs O(bits set), not
-            # O(capacity) — a 1M-url epoch against the 10^10 filter
-            # appends ~30 MB of positions instead of ~16 GB of mostly-zero
-            # dense buffers. Append-only with periodic or_merge compaction
-            # (re-densifies) bounding the probe-side scan; fresh snapshot
-            # keys keep every commit crash-safe, and a replayed epoch's
-            # duplicate append is harmless (bloom OR is idempotent).
-            self.seen_shards.append(
-                bloom.build_bits_df(out_articles.select("url"), "url",
-                                    sparse=True),
-                self._seen_shards_key())
-            if (len(self.seen_shards.committed_epochs())
-                    > cfg.seen_shards_compact_after):
-                merged = bloom.or_merge_bits(
-                    self.seen_shards.read(self.spark))
-                self.seen_shards.overwrite(merged, self._seen_shards_key())
-        if self._articles_rows is not None:
-            self._articles_rows += n_parsed
-        else:
-            self._articles_rows = n_parsed
         # Commit order is the crash-safety contract:
         #   stage the frontier delta (old snapshot still committed)
         #   -> pipeline checkpoint commit (epoch is now "done")

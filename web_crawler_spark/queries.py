@@ -23,14 +23,6 @@ def active_sources(sources: DataFrame) -> DataFrame:
     return sources.filter(F.col("is_active") == 1)
 
 
-def recent_articles(articles: DataFrame, limit: int = 10) -> DataFrame:
-    """O1 — ORDER BY published_date DESC LIMIT n (database.py:231-237)."""
-    return (articles
-            .orderBy(F.col("published_date").desc_nulls_last(),
-                     F.col("url").desc())
-            .limit(limit))
-
-
 def latest_with_source(articles: DataFrame, sources: DataFrame,
                        limit: int = 10) -> DataFrame:
     """J1 — articles ⋈ sources broadcast join + top-k (database.py:257-268)."""
@@ -70,18 +62,6 @@ def count_by_source(articles: DataFrame) -> DataFrame:
 def count_total(articles: DataFrame) -> DataFrame:
     """A2 — SELECT COUNT(*) (database.py:301-306)."""
     return articles.agg(F.count("*").alias("n_articles"))
-
-
-def count_scraped_on(articles: DataFrame, date: str) -> DataFrame:
-    """A3 — WHERE DATE(scraped_date)=? (database.py:308-316)."""
-    return (articles.filter(F.to_date(F.col("scraped_date")) == date)
-            .agg(F.count("*").alias("n_articles")))
-
-
-def count_scraped_since(articles: DataFrame, date: str) -> DataFrame:
-    """A4 — WHERE DATE(scraped_date)>=? (database.py:318-326)."""
-    return (articles.filter(F.to_date(F.col("scraped_date")) >= date)
-            .agg(F.count("*").alias("n_articles")))
 
 
 def count_by_source_name(articles: DataFrame, sources: DataFrame) -> DataFrame:

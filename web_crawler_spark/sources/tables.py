@@ -112,22 +112,11 @@ class LakeTable:
     def committed_epochs(self) -> List[int]:
         return sorted(self._read_manifest()["epochs"])
 
-    def meta(self) -> dict:
-        """Table-level metadata committed atomically WITH the data manifest
-        (Iceberg table-properties equivalent) — e.g. the seen_shards bloom
-        sizing params, which must never be able to disagree with the bit
-        arrays they describe (a sidecar file could after a crash)."""
-        return self._read_manifest().get("meta", {})
-
-    def _commit(self, epoch: int, meta: Optional[dict] = None) -> None:
-        man = self._read_manifest()
-        epochs = set(man["epochs"])
+    def _commit(self, epoch: int) -> None:
+        epochs = set(self.committed_epochs())
         epochs.add(epoch)
-        payload = {"epochs": sorted(epochs)}
-        kept = meta if meta is not None else man.get("meta")
-        if kept is not None:
-            payload["meta"] = kept
-        _atomic_write_json(self.path, self._manifest_path, payload)
+        _atomic_write_json(self.path, self._manifest_path,
+                           {"epochs": sorted(epochs)})
 
     # -- io ------------------------------------------------------------------
     def _epoch_dir(self, epoch: int) -> str:
@@ -145,7 +134,7 @@ class LakeTable:
         NOTE for replayed epochs: a plan that READS this table's epoch N
         while replace-appending epoch N would scan files this call deletes —
         replaying readers must read with ``before_epoch`` (run_epoch's
-        seen_df does)."""
+        seen filter does)."""
         d = self._epoch_dir(epoch)
         if epoch in self.committed_epochs() and not replace:
             raise ValueError(f"epoch {epoch} already committed to {self.path}")
@@ -154,12 +143,11 @@ class LakeTable:
         df.write.mode("overwrite").parquet(d)
         self._commit(epoch)
 
-    def overwrite(self, df: DataFrame, epoch: int,
-                  meta: Optional[dict] = None) -> None:
+    def overwrite(self, df: DataFrame, epoch: int) -> None:
         """Replace table contents with df as the single epoch `epoch`
         (frontier compaction between epochs)."""
         self.stage_overwrite(df, epoch)
-        self.commit_staged_overwrite(epoch, meta=meta)
+        self.commit_staged_overwrite(epoch)
 
     # two-phase overwrite: stage (write data, old contents still committed)
     # then commit (atomic manifest swap). Lets the epoch pipeline order its
@@ -172,19 +160,14 @@ class LakeTable:
         df.write.mode("overwrite").parquet(staging)
         return staging
 
-    def commit_staged_overwrite(self, epoch: int,
-                                meta: Optional[dict] = None) -> None:
+    def commit_staged_overwrite(self, epoch: int) -> None:
         d = self._epoch_dir(epoch)
         staging = d + ".staging"
         old = [self._epoch_dir(e) for e in self.committed_epochs() if e != epoch]
         if os.path.exists(d):
             shutil.rmtree(d)
         os.replace(staging, d)
-        payload = {"epochs": [epoch]}
-        kept = meta if meta is not None else self._read_manifest().get("meta")
-        if kept is not None:
-            payload["meta"] = kept
-        _atomic_write_json(self.path, self._manifest_path, payload)
+        _atomic_write_json(self.path, self._manifest_path, {"epochs": [epoch]})
         for o in old:
             shutil.rmtree(o, ignore_errors=True)
 
