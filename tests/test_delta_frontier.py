@@ -20,15 +20,14 @@ DDL = ("url string, host string, kind string, parser_class string, "
        "list_title string, list_summary string, epoch_added int")
 
 
-def _rows(spark, n, epoch_added=0, retries=0, host="h.com", start=0,
-          next_fetch_ts=0.0):
+def _rows(spark, n, epoch_added=0, retries=0, host="h.com", start=0):
     return spark.range(start, start + n).select(
         F.concat(F.lit(f"https://{host}/a/"), F.col("id").cast("string"))
         .alias("url"),
         F.lit(host).alias("host"), F.lit("article").alias("kind"),
         F.lit("rbc").alias("parser_class"), F.lit(1).alias("source_id"),
         F.lit(1).alias("priority"), F.col("id").alias("discovered_seq"),
-        F.lit(float(next_fetch_ts)).alias("next_fetch_ts"),
+        F.lit(0.0).alias("next_fetch_ts"),
         F.lit(retries).alias("retries"),
         F.lit(None).cast("string").alias("date_str"),
         F.lit(None).cast("string").alias("list_title"),
@@ -224,127 +223,24 @@ def test_engine_drain_epoch_uses_replace(spark, tmp_path):
     assert not eng.frontier.is_empty()          # drained, not uninitialized
 
 
-def test_read_due_before_prunes_files_and_matches_filter(spark, tmp_path):
-    """Round-4 verdict Next #2: read(due_before=t) must (a) SKIP add files
-    whose manifest min(next_fetch_ts) exceeds t — assert via inputFiles(),
-    the files the scan actually plans — and (b) be value-equal to
-    read().filter(next_fetch_ts <= t)."""
-    t = DeltaFrontier(str(tmp_path / "f"), DDL)
-    t.overwrite(_rows(spark, 20, next_fetch_ts=0.0), epoch=0)
-    # epoch-1 delta: deferred retries, all far beyond the horizon
-    t.commit_delta(1, t.stage_delta(
-        _rows(spark, 15, epoch_added=1, start=100, next_fetch_ts=9_000.0),
-        _rows(spark, 0).select(*DeltaFrontier.KEY), 1))
-    # epoch-2 delta: due rows again
-    t.commit_delta(2, t.stage_delta(
-        _rows(spark, 5, epoch_added=2, start=200, next_fetch_ts=10.0),
-        _rows(spark, 0).select(*DeltaFrontier.KEY), 2))
-    man = t._manifest()
-    assert all("stats" in e for e in man["adds"].values())
-    pruned = t.read(spark, due_before=100.0)
-    full = t.read(spark)
-    # file-level assert: no file of the deferred delta is planned
-    deferred_dir = [n for n, e in man["adds"].items()
-                    if all(r and r[0] > 100.0 for r in e["stats"].values())]
-    assert deferred_dir, "fixture must contain a fully-deferred delta"
-    planned = set(pruned.inputFiles())
-    for d in deferred_dir:
-        assert not any(f"/{d}/" in p for p in planned), (d, planned)
-    assert len(planned) < len(set(full.inputFiles()))
-    # value equivalence with the naive full-scan filter
-    naive = full.filter(F.col("next_fetch_ts") <= 100.0)
-    assert sorted(r.url for r in pruned.collect()) == \
-        sorted(r.url for r in naive.collect())
-    assert pruned.count() == 25
-    # horizon beyond everything == full read
-    assert t.read(spark, due_before=1e12).count() == full.count() == 40
-    # horizon before everything == empty, schema intact
-    nothing = t.read(spark, due_before=-1.0)
-    assert nothing.count() == 0
-    assert nothing.columns == full.columns
-
-
-def test_due_before_survives_replace_and_compaction(spark, tmp_path):
-    """Stats must ride EVERY commit path (commit_delta, commit_replace,
-    overwrite/compaction) or pruning silently degrades to full scans."""
-    t = DeltaFrontier(str(tmp_path / "f"), DDL, compact_ratio=0.1)
-    t.overwrite(_rows(spark, 50, next_fetch_ts=5.0), epoch=0)
-    assert all("stats" in e for e in t._manifest()["adds"].values())
-    # compaction path (overwrite of the live view)
-    dels = _rows(spark, 30, next_fetch_ts=5.0).select(*DeltaFrontier.KEY)
-    t.commit_delta(1, t.stage_delta(
-        _rows(spark, 10, epoch_added=1, start=100, next_fetch_ts=900.0),
-        dels, 1))
-    assert t.maybe_compact(spark, 2)
-    assert all("stats" in e for e in t._manifest()["adds"].values())
-    assert t.read(spark, due_before=10.0).count() == 20
-    # commit_replace path (drain fast path)
-    staged = t.stage_adds(_rows(spark, 7, epoch_added=3, start=300,
-                                next_fetch_ts=50.0), 3)
-    t.commit_replace(staged)
-    assert all("stats" in e for e in t._manifest()["adds"].values())
-    assert t.read(spark, due_before=10.0).count() == 0
-    assert t.read(spark, due_before=60.0).count() == 7
-
-
-def test_engine_fetch_horizon_defers_far_future_rows(spark, tmp_path):
-    """Opt-in engine wiring: with fetch_horizon set, rows whose
-    next_fetch_ts lies beyond epoch_start+horizon are NOT scheduled (they
-    stay live in the frontier), and the frontier arithmetic stays exact.
-    Default (None) schedules everything — reference semantics."""
-    pages = spark.createDataFrame(
-        [(f"https://h.com/a/{i}", None, None, None, None)
-         for i in range(400)],
-        schema="url string, warc_ts timestamp, html binary, "
-               "text string, lang string")
-    due = _rows(spark, 300, next_fetch_ts=0.0)
-    deferred = _rows(spark, 100, start=10_000, next_fetch_ts=1e9)
-    cfg = CrawlConfig(per_host_budget=10_000, request_delay=0.0,
-                      fetch_horizon=3600.0)
-    eng = CrawlEngine(spark, str(tmp_path / "lake"), pages, cfg)
-    eng.frontier.overwrite(due.unionByName(deferred), epoch=0)
-    stats = eng.run_epoch(0)
-    assert stats["frontier_in"] == 400
-    assert stats["frontier_out"] == 100          # deferred rows stay live
-    live = eng.frontier.read(spark).collect()
-    assert len(live) == 100
-    assert all(r.next_fetch_ts == 1e9 for r in live)
-    # default engine on the same input consumes everything in one epoch
-    eng2 = CrawlEngine(spark, str(tmp_path / "lake2"), pages,
-                       CrawlConfig(per_host_budget=10_000,
-                                   request_delay=0.0))
-    eng2.frontier.overwrite(due.unionByName(deferred), epoch=0)
-    assert eng2.run_epoch(0)["frontier_out"] == 0
-    # an epoch where EVERY row is deferred must not starve or spin: the
-    # horizon fast-forwards (manifest min_stat, driver-side) to the
-    # earliest cohort and consumes it — the horizon is a scheduling
-    # preference ("no deferred scans while due work exists"), never a
-    # fence that loses rows (review r5 starvation fix)
-    eng3 = CrawlEngine(spark, str(tmp_path / "lake3"), pages, cfg)
-    eng3.frontier.overwrite(_rows(spark, 50, next_fetch_ts=1e9), epoch=0)
-    s3 = eng3.run_epoch(0)
-    assert eng3._horizon_skew > 0          # fast-forward engaged
-    assert s3["frontier_out"] == 0         # earliest cohort consumed
-    assert eng3.frontier.read(spark).count() == 0
-
-
-def test_fetch_horizon_converges_past_backoff_penalties(spark, tmp_path):
-    """Review r5: with request_delay=0 the virtual clock is FROZEN, so a
-    fixed horizon (epoch_start + 30) could never reach a 60 s backoff
-    penalty — the retried url would starve forever. The engine must
-    fast-forward the horizon (manifest min_stat / zero-progress skew) and
-    still fetch the victim."""
+def test_backoff_converges_with_frozen_clock(spark, tmp_path, inject_429):
+    """With request_delay=0 the virtual clock is FROZEN, so a 429'd url's
+    60 s backoff penalty lies beyond every later epoch's start. The read
+    still schedules every live row whatever its next_fetch_ts, so the
+    victim is fetched on the next epoch and the frontier drains."""
     from web_crawler_spark import html_synth, refspec
+    from web_crawler_spark.plans.epoch import pages_fetcher
     web = html_synth.synth_web(n_articles=40, n_hosts=2, seed=13)
     golden = refspec.simulate_crawl(web["pages"], web["seeds"])
     victim = golden["articles"][0]["url"]
-    eng = CrawlEngine(spark, str(tmp_path / "w"),
-                      html_synth.pages_df(spark, web),
-                      CrawlConfig(request_delay=0.0, fetch_horizon=30.0,
-                                  fault_429={victim: 1}))
+    pages = html_synth.pages_df(spark, web)
+    eng = CrawlEngine(spark, str(tmp_path / "w"), pages,
+                      CrawlConfig(request_delay=0.0,
+                                  fetch_via=inject_429(pages_fetcher(pages),
+                                                       {victim: 1})))
     eng.run(html_synth.seeds_df(spark, web), max_epochs=8)
     stored = {r["url"] for r in eng.articles.read(spark).collect()}
-    assert victim in stored, "429'd url starved behind the frozen horizon"
+    assert victim in stored, "429'd url starved behind the frozen clock"
     assert stored == {a["url"] for a in golden["articles"]}
     assert eng.frontier.read(spark).count() == 0
 

@@ -9,7 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from web_crawler_spark import html_synth, refspec
-from web_crawler_spark.plans.epoch import CrawlConfig, CrawlEngine
+from web_crawler_spark.plans.epoch import (CrawlConfig, CrawlEngine,
+                                           pages_fetcher)
 
 
 @pytest.fixture(scope="module")
@@ -17,21 +18,25 @@ def web():
     return html_synth.synth_web(n_articles=60, n_hosts=3, seed=7)
 
 
-def _engine(spark, wd, web, **cfg):
+def _engine(spark, wd, web, wrap_fetch=None, **cfg):
     pages = html_synth.pages_df(spark, web)
     seeds = html_synth.seeds_df(spark, web)
+    if wrap_fetch is not None:
+        cfg["fetch_via"] = wrap_fetch(pages_fetcher(pages))
     eng = CrawlEngine(spark, wd, pages, CrawlConfig(**cfg))
     return eng, seeds
 
 
 # ---------------------------------------------------------------- S5/T3 429
-def test_backoff_requeue_retries_then_succeeds(spark, tmp_path, web):
+def test_backoff_requeue_retries_then_succeeds(spark, tmp_path, web,
+                                               inject_429):
     """A url 429-ing once is re-enqueued with the 60 s penalty and fetched
     on a later epoch; the final article set equals the fault-free golden."""
     golden = refspec.simulate_crawl(web["pages"], web["seeds"])
     victims = [a["url"] for a in golden["articles"]][:3]
-    eng, seeds = _engine(spark, str(tmp_path / "w"), web,
-                         fault_429={u: 1 for u in victims})
+    eng, seeds = _engine(
+        spark, str(tmp_path / "w"), web,
+        wrap_fetch=lambda f: inject_429(f, {u: 1 for u in victims}))
     eng.bootstrap(seeds)
     eng.run_epoch(0)
     # epoch 0 list pages fetched; epoch 1 articles fetched, victims 429
@@ -51,14 +56,16 @@ def test_backoff_requeue_retries_then_succeeds(spark, tmp_path, web):
     assert arts.count() == len(victims)
 
 
-def test_backoff_gives_up_after_max_retries(spark, tmp_path, web):
+def test_backoff_gives_up_after_max_retries(spark, tmp_path, web,
+                                            inject_429):
     """A url that 429s more than max_retries times is dropped for good
     (Retry(total=3) semantics, base_crawler.py:43-48) and the frontier
     still drains."""
     golden = refspec.simulate_crawl(web["pages"], web["seeds"])
     victim = golden["articles"][0]["url"]
     eng, seeds = _engine(spark, str(tmp_path / "w"), web,
-                         fault_429={victim: 99}, max_retries=3)
+                         wrap_fetch=lambda f: inject_429(f, {victim: 99}),
+                         max_retries=3)
     eng.run(seeds, max_epochs=10)
     stored = {r["url"] for r in eng.articles.read(spark).collect()}
     assert victim not in stored
@@ -89,6 +96,38 @@ def test_sources_registry_and_last_crawled(spark, tmp_path, web):
     for sid in crawled_ids:
         assert src[sid]["last_crawled"] is not None, sid
         assert "#epoch=" in src[sid]["last_crawled"]
+
+
+def test_last_crawled_survives_crash_after_checkpoint(spark, tmp_path, web,
+                                                      monkeypatch):
+    """A crash between epoch N's pipeline checkpoint and its frontier swap
+    must not lose N's S13 stamp: run() resumes at N+1, so no replay of N
+    will ever stamp it again. Every source that stored articles in N reads
+    a stamp of epoch >= N after the resume."""
+    from web_crawler_spark.sources.tables import DeltaFrontier
+    wd = str(tmp_path / "w")
+    eng, seeds = _engine(spark, wd, web)
+    eng.bootstrap(seeds)
+    eng.run_epoch(0)
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before the frontier swap")
+    with monkeypatch.context() as m:
+        m.setattr(DeltaFrontier, "commit_delta", crash)
+        m.setattr(DeltaFrontier, "commit_replace", crash)
+        with pytest.raises(RuntimeError, match="frontier swap"):
+            eng.run_epoch(1)
+    assert 1 in eng.checkpoints.committed_epochs()
+    eng2, _ = _engine(spark, wd, web)
+    eng2.run(max_epochs=6)
+    stored_1 = {r["source_id"] for r in eng2.articles.read(spark)
+                .filter(F.col("epoch") == 1).select("source_id").collect()}
+    assert stored_1, "fixture must store articles in epoch 1"
+    stamps = {r["id"]: r["last_crawled"]
+              for r in eng2.sources.read(spark).collect()}
+    lost = {sid: stamps[sid] for sid in stored_1
+            if int(stamps[sid].rsplit("#epoch=", 1)[1]) < 1}
+    assert not lost, lost
 
 
 # ------------------------------------------------------------------- S7/S8

@@ -86,7 +86,7 @@ def test_engine_live_fetch_matches_join_path(spark, tmp_path, web):
 def test_live_fetch_429_feeds_backoff(spark, tmp_path, web):
     """Real transport status codes drive the S5 requeue: a url whose
     transport 429s once is re-enqueued with the rate-limit penalty and
-    stored on a later epoch — same machinery as the fault_429 knob."""
+    stored on a later epoch — same machinery as the inject_429 test fake."""
     golden = refspec.simulate_crawl(web["pages"], web["seeds"])
     victim = golden["articles"][0]["url"]
     pages = _page_bytes(web)

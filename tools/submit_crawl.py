@@ -40,12 +40,6 @@ def main() -> None:
                     help="shared fixture cache (pages+seeds parquet); "
                          "reused across runs/parallelism levels so the "
                          "python fixture build happens once")
-    ap.add_argument("--fetch-horizon", type=float, default=None,
-                    help="opt-in frontier scan pruning: each epoch only "
-                         "considers rows with next_fetch_ts <= epoch_start "
-                         "+ horizon; deferred retries stay enqueued and "
-                         "their delta files are skipped via manifest "
-                         "min/max stats (default: off, full read)")
     ap.add_argument("--rank-budgets", action="store_true",
                     help="opt-in authority-weighted per-host budgets: log "
                          "the discovered host link graph and scale each "
@@ -110,8 +104,7 @@ def main() -> None:
     seeds = spark.read.parquet(seeds_path)
 
     eng = CrawlEngine(spark, args.workdir, pages,
-                      CrawlConfig(fetch_horizon=args.fetch_horizon,
-                                  per_host_budget=args.per_host_budget,
+                      CrawlConfig(per_host_budget=args.per_host_budget,
                                   rank_host_budgets=args.rank_budgets,
                                   rank_budget_floor=args.rank_budget_floor))
     t0 = time.time()

@@ -95,11 +95,13 @@ def crawl_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Archive list pages → link-extraction UDF → posexplode → canonicalize
     (U1 + P1/P2/P12 + D1)."""
     archives = html_synth.archive_pages_from_documents(spark, sf_dir)
+    null = F.lit(None).cast("string")
     links = (archives
              .select(F.posexplode(
-                 ex.extract_links_udf()(
-                     F.col("html"), F.col("url"),
-                     F.lit("rbc"))).alias("pos", "link"))
+                 ex.extract_any_udf()(
+                     F.lit("list"), F.col("html"), F.col("url"),
+                     F.lit("rbc"), null, null).getField("links"))
+                     .alias("pos", "link"))
              .select(F.col("link.url").alias("url"),
                      F.col("link.date_str").alias("date_str")))
     return (canon.with_canonical(links)

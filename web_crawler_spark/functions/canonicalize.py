@@ -14,7 +14,6 @@ import re
 from functools import lru_cache
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -132,19 +131,3 @@ def with_canonical(df, url_col: str = "url") -> "DataFrame":
             .drop("__ch")
             .filter(F.col("url_canon").isNotNull()))
 
-
-def host_salt(host_col: Column, hot_hosts_salts, n_salt: int = 8) -> Column:
-    """Salted partition key to break hot-domain skew (north_rule).
-
-    ``hot_hosts_salts`` is a broadcast-able map {host: n_sub} built from per
-    -epoch host counts; cold hosts keep salt 0 (single partition â€” politeness
-    order preserved), hot hosts fan out into n_sub sub-keys. The salt must be
-    deterministic per URL so retries land on the same sub-partition: we use
-    xxhash64(url) % n_sub.
-    """
-    expr = F.lit(0)
-    for h, n in hot_hosts_salts.items():
-        expr = F.when(host_col == h,
-                      F.pmod(F.xxhash64(F.col("url_canon")), F.lit(int(n)))
-                      ).otherwise(expr)
-    return expr.cast("int")

@@ -15,7 +15,6 @@ selector configs are broadcast (closure-captured constants — tiny).
 from __future__ import annotations
 
 from functools import lru_cache
-from typing import List, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -23,80 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from .. import refspec
-
-ARTICLE_SCHEMA = ("struct<title:string, content:string, summary:string,"
-                  " published_date:string>")
-LINKS_SCHEMA = ("array<struct<url:string, date_str:string, title:string,"
-                " summary:string>>")
-
-
-@lru_cache(maxsize=1)
-def extract_article_udf():
-    """(html, parser_class, list_title, list_summary) →
-    struct(title, content, summary, published_date).
-
-    list_title/list_summary are the frontier-carried list-page metadata
-    (the investing parser's articles cache, investing_parser.py:29,191-197);
-    null for every other parser class. Returns all-null struct fields for
-    unparseable/missing-title pages; the caller drops rows with null title
-    (rbc_ukraine_parser.py:163-165)."""
-    @pandas_udf(ARTICLE_SCHEMA)
-    def _extract(html: pd.Series, parser_class: pd.Series,
-                 list_title: pd.Series, list_summary: pd.Series
-                 ) -> pd.DataFrame:
-        titles: List[Optional[str]] = []
-        contents: List[Optional[str]] = []
-        summaries: List[Optional[str]] = []
-        dates: List[Optional[str]] = []
-        for h, pc, lt, ls in zip(html, parser_class, list_title, list_summary):
-            art = None
-            if h is not None:
-                meta = ({"title": lt, "summary": ls}
-                        if lt is not None or ls is not None else None)
-                try:
-                    art = refspec.extract_article(h, pc or "rbc",
-                                                  list_meta=meta)
-                except Exception:
-                    art = None
-            if art is None:
-                titles.append(None); contents.append(None)
-                summaries.append(None); dates.append(None)
-            else:
-                titles.append(art["title"])
-                contents.append(art["content"])
-                summaries.append(art.get("summary"))
-                dates.append(art.get("published_date"))
-        return pd.DataFrame({"title": titles, "content": contents,
-                             "summary": summaries, "published_date": dates})
-    # Pure, but flagged nondeterministic so Catalyst materializes the struct
-    # ONCE instead of inlining the UDF into every downstream field reference
-    # (observed: 6 evaluations per row in the epoch plan without this — the
-    # parse stage was ~6x slower than the raw extractor).
-    return _extract.asNondeterministic()
-
-
-@lru_cache(maxsize=1)
-def extract_links_udf():
-    """List-page html → ordered array of (url, date_str): the UDTF-shaped
-    1-page→N-links step (base_crawler.py:144-150); caller explodes with
-    posexplode so discovery order is preserved as ``discovered_seq``."""
-    @pandas_udf(LINKS_SCHEMA)
-    def _links(html: pd.Series, base_url: pd.Series,
-               parser_class: pd.Series) -> pd.Series:
-        out = []
-        for h, b, pc in zip(html, base_url, parser_class):
-            if h is None:
-                out.append([])
-                continue
-            try:
-                links = refspec.extract_links(h, b or "", pc or "rbc")
-            except Exception:
-                links = []
-            out.append(links)   # already [{url, date_str, title, summary}]
-        return pd.Series(out)
-    # same single-evaluation guard as extract_article_udf
-    return _links.asNondeterministic()
-
 
 EXTRACT_SCHEMA = (
     "struct<title:string, content:string, summary:string,"
@@ -108,15 +33,23 @@ EXTRACT_SCHEMA = (
 @lru_cache(maxsize=1)
 def extract_any_udf():
     """(kind, html, base_url, parser_class, list_title, list_summary) →
-    struct(article fields..., links).
+    struct(title, content, summary, published_date, links).
 
-    The engine-side combined extractor: one Arrow pass per fetched row,
-    branching on kind ('list' → link extraction, else article parse). This
-    lets the epoch pipeline drop the html column BEFORE its post-fetch
-    checkpoint — at 100 TB the html payload then lives only inside the
-    scan+join stage and is never materialized to block storage. Same
-    refspec calls per row as the standalone UDFs (which remain for the
-    single-purpose driver queries)."""
+    The one extraction UDF: one Arrow pass per row, branching on kind.
+    'list' → ``links``, the ordered array of (url, date_str, title,
+    summary) — the UDTF-shaped 1-page→N-links step (base_crawler.py:
+    144-150); callers explode it with posexplode so discovery order is
+    preserved as ``discovered_seq``. Any other kind → the article fields,
+    all null for unparseable/missing-title pages (callers drop null-title
+    rows, rbc_ukraine_parser.py:163-165). list_title/list_summary are the
+    frontier-carried list-page metadata (the investing parser's articles
+    cache, investing_parser.py:29,191-197), null for every other parser
+    class. Null html (unfetched / non-ok rows) yields an all-null struct.
+
+    The epoch pipeline calls it on mixed list+article rows, which lets it
+    drop the html column BEFORE its post-fetch checkpoint — at 100 TB the
+    html payload then lives only inside the scan+join stage and is never
+    materialized to block storage. Driver queries pass a literal kind."""
     @pandas_udf(EXTRACT_SCHEMA)
     def _any(kind: pd.Series, html: pd.Series, base_url: pd.Series,
              parser_class: pd.Series, list_title: pd.Series,
@@ -147,6 +80,10 @@ def extract_any_udf():
         return pd.DataFrame({"title": titles, "content": contents,
                              "summary": summaries, "published_date": dates,
                              "links": links_out})
+    # Pure, but flagged nondeterministic so Catalyst materializes the struct
+    # ONCE instead of inlining the UDF into every downstream field reference
+    # (observed: 6 evaluations per row in the epoch plan without this — the
+    # parse stage was ~6x slower than the raw extractor).
     return _any.asNondeterministic()
 
 
@@ -220,11 +157,10 @@ def parse_articles(fetched: DataFrame, start_date: str | None = None,
     Plan shape (checked in tests via .explain): single projection with the
     Arrow eval, then JVM-side filter/normalize — no extra shuffle."""
     cols = fetched.columns
-    lt = F.col("list_title") if "list_title" in cols \
-        else F.lit(None).cast("string")
-    ls = F.col("list_summary") if "list_summary" in cols \
-        else F.lit(None).cast("string")
+    null = F.lit(None).cast("string")
+    lt = F.col("list_title") if "list_title" in cols else null
+    ls = F.col("list_summary") if "list_summary" in cols else null
     df = fetched.withColumn(
-        "art", extract_article_udf()(F.col("html"), F.col("parser_class"),
-                                     lt, ls))
+        "art", extract_any_udf()(F.lit("article"), F.col("html"), null,
+                                 F.col("parser_class"), lt, ls))
     return finish_articles(df, start_date, end_date)

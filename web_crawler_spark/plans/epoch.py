@@ -83,6 +83,23 @@ SCRAPED_TS = "2024-01-01T00:00:00"
 # sequential source-then-page-order total order in one sortable bigint
 SEQ_STRIDE = 1_000_000
 
+#: PageRank iterations behind authority-weighted budgets
+RANK_N_ITERS = 3
+
+
+def pages_fetcher(pages: DataFrame) -> Callable[[DataFrame], DataFrame]:
+    """The default fetch (CrawlConfig.fetch_via shape): a left join of the
+    scheduled rows against the pages table on url; a missing page is a
+    terminal 404, like the reference's RequestException → skip."""
+    pages = pages.select("url", "html")
+
+    def fetch(to_fetch: DataFrame) -> DataFrame:
+        return (to_fetch.join(pages, on="url", how="left")
+                .withColumn("fetch_status",
+                            F.when(F.col("html").isNull(), F.lit("404"))
+                            .otherwise(F.lit("ok"))))
+    return fetch
+
 
 @dataclass
 class CrawlConfig:
@@ -94,27 +111,10 @@ class CrawlConfig:
     hot_threshold: int = 50_000
     n_salt: int = 8
     host_delays: Dict[str, float] = field(default_factory=dict)  # robots map
-    #: fault injection for the retry path (S5/T3): {url: n} makes the fetch
-    #: return HTTP 429 for that url until `retries >= n` — the sandbox pages
-    #: table cannot rate-limit, so tests drive the 429/backoff machinery
-    #: through this knob (reference behavior: Retry(total=3,
-    #: backoff_factor=1), base_crawler.py:43-48; 60 s penalty,
-    #: api/base_fetcher.py:123-126)
-    fault_429: Dict[str, int] = field(default_factory=dict)
     #: broadcast robots rules {host: (crawl_delay, [disallow_prefix, ...])}
     #: built via operators.robots.collect_rules; delays merged into
     #: host_delays at engine init, prefixes filter the frontier each epoch
     robots_rules: Dict[str, tuple] = field(default_factory=dict)
-    #: OPT-IN frontier scan pruning (round-4 verdict Next #2): when set,
-    #: epoch N only considers rows with next_fetch_ts <= epoch_start +
-    #: fetch_horizon, and the DeltaFrontier read SKIPS add files whose
-    #: manifest min(next_fetch_ts) lies beyond that horizon (backoff
-    #: requeues land in their own delta files, so a retry-heavy frontier is
-    #: mostly never scanned). Deferred rows simply stay enqueued — same
-    #: contract as budget truncation. None (default) keeps reference
-    #: semantics exactly: every live row is scheduled, however far out its
-    #: next_fetch_ts.
-    fetch_horizon: Optional[float] = None
     #: OPT-IN authority-weighted per-host budgets (the loop the
     #: host_pagerank operator's docstring promises): when True the engine
     #: logs the discovered host→host link graph to a `link_edges` table and
@@ -126,12 +126,11 @@ class CrawlConfig:
     #: per-host politeness order).
     rank_host_budgets: bool = False
     rank_budget_floor: int = 100
-    rank_n_iters: int = 3
-    #: OPT-IN live-fetch hook (S4-live): a callable DataFrame -> DataFrame
-    #: that appends (html binary, fetch_status string) to the scheduled
-    #: rows — build one with sources.live_fetch.make_live_fetcher. None
-    #: (default) keeps the input_hint contract: fetch = join against the
-    #: pages table.
+    #: fetch hook: a callable DataFrame -> DataFrame that appends (html
+    #: binary, fetch_status string) to the scheduled rows — e.g.
+    #: sources.live_fetch.make_live_fetcher (S4-live). None (default) keeps
+    #: the input_hint contract: pages_fetcher, a join against the pages
+    #: table.
     fetch_via: Optional[Callable[[DataFrame], DataFrame]] = None
 
 
@@ -159,7 +158,6 @@ class CrawlEngine:
                       "src string, dst string")
             if self.cfg.rank_host_budgets else None)
         self._frontier_rows: Optional[int] = None  # carried across epochs
-        self._horizon_skew: float = 0.0  # fetch_horizon fast-forward (below)
         if self.cfg.robots_rules:
             from ..operators import robots
             merged = robots.host_delays(self.cfg.robots_rules,
@@ -209,44 +207,15 @@ class CrawlEngine:
 
     # ----------------------------------------------------------------- epoch
     def run_epoch(self, epoch: int) -> Dict[str, int]:
-        import time as _time
-        _timing = os.environ.get("WCS_EPOCH_TIMING") == "1"
-        _marks = [("start", _time.time())]
-
-        def _mark(name: str) -> None:
-            if _timing:
-                _marks.append((name, _time.time()))
-
         cfg = self.cfg
         epoch_start_ts = float(epoch) * cfg.per_host_budget * cfg.request_delay
-        # carried from the previous epoch's frontier write (one count saved).
-        # frontier_in is ALWAYS the full live count — the horizon-pruned
-        # read below only narrows what this epoch *considers*; deferred
-        # rows stay live and stay counted.
+        # carried from the previous epoch's frontier write (one count saved)
         frontier_in = self._frontier_rows
         if frontier_in is None:
             frontier_in = self.frontier.read(self.spark).count()
         if frontier_in == 0:
             return {"frontier_in": 0, "articles_out": 0, "frontier_out": 0}
-        # opt-in manifest-stats scan pruning: skip add files whose min
-        # next_fetch_ts is beyond this epoch's horizon (deferred retries
-        # never scanned; they simply stay enqueued like budget-truncated
-        # rows). Default None = reference semantics, full read.
-        # _horizon_skew guards against starvation (review r5): the virtual
-        # clock epoch_start_ts can advance slower than backoff penalties —
-        # or not at all when request_delay=0 — so when the manifest proves
-        # NOTHING is due (min recorded next_fetch_ts beyond the horizon),
-        # the horizon fast-forwards to the earliest deferred cohort.
-        # Driver-side manifest arithmetic, no job; a larger horizon only
-        # widens eligibility, never skips a due row.
-        due = None
-        if cfg.fetch_horizon is not None:
-            due = epoch_start_ts + cfg.fetch_horizon + self._horizon_skew
-            mn = self.frontier.min_stat()
-            if mn is not None and mn > due:
-                self._horizon_skew += mn - due
-                due = mn
-        frontier = self.frontier.read(self.spark, due_before=due)
+        frontier = self.frontier.read(self.spark)
 
         # 0) robots gate: disallowed paths never reach the scheduler. The
         #    dropped rows are tombstoned below so a blocked row is consumed
@@ -288,7 +257,7 @@ class CrawlEngine:
                 from ..operators.pagerank import pagerank_ranks
                 ranks = pagerank_ranks(
                     self.link_edges.read(self.spark, before_epoch=epoch),
-                    n_iters=cfg.rank_n_iters, node_type="string")
+                    n_iters=RANK_N_ITERS, node_type="string")
                 floor = min(cfg.rank_budget_floor, cfg.per_host_budget)
                 span = cfg.per_host_budget - floor
                 mx = ranks.agg(F.max("rank_micro").alias("__mx"))
@@ -313,7 +282,6 @@ class CrawlEngine:
             approx_rows=frontier_in,
             host_budgets=host_budgets)
         sched = sched.localCheckpoint(eager=True)  # cut lineage per epoch
-        _mark("sched_ckpt")
         # Rows the budget did NOT schedule simply STAY in the frontier —
         # the merge-on-read delta commit below never touches them (round-3
         # verdict Next #3: the old design materialized `leftover` via a
@@ -337,7 +305,6 @@ class CrawlEngine:
         #    test_replay_after_articles_commit_crash pins).
         arts = sched.filter(F.col("kind") == "article")
         lists = sched.filter(F.col("kind") == "list")
-        _mark("sched_count")
         fresh = arts
         if any(e < epoch for e in self.articles.committed_epochs()):
             fresh = arts.join(
@@ -358,32 +325,10 @@ class CrawlEngine:
         if salts:
             fresh = politeness.salted_repartition(fresh, salts).drop("host_salt")
         to_fetch = fresh.unionByName(lists.select(*fresh.columns))
-        if cfg.fetch_via is not None:
-            # capability-gated live path (sources/live_fetch.py): the
-            # callable appends html + fetch_status itself; real status
-            # codes (404/429/error) feed the same backoff machinery the
-            # synthetic statuses below do. fault_429 is a join-path test
-            # knob and deliberately does not compose here.
-            fetched = cfg.fetch_via(to_fetch)
-        else:
-            fetched = to_fetch.join(
-                self.pages.select("url", "html"), on="url", how="left")
-            status = F.when(F.col("html").isNull(), F.lit("404"))
-            if cfg.fault_429:
-                # injected rate-limit faults (S5/T3): url 429s until its
-                # configured retry count is reached — drives the same
-                # backoff path a live fetcher would hit
-                fdf = self.spark.createDataFrame(
-                    list(cfg.fault_429.items()),
-                    schema="url string, __fault_n int")
-                fetched = fetched.join(F.broadcast(fdf), "url", "left")
-                status = status.when(
-                    F.col("__fault_n").isNotNull() &
-                    (F.col("retries") < F.col("__fault_n")), F.lit("429"))
-            fetched = fetched.withColumn("fetch_status",
-                                         status.otherwise(F.lit("ok")))
-            if cfg.fault_429:
-                fetched = fetched.drop("__fault_n")
+        # the fetcher appends html + fetch_status; a 429 (live transport or
+        # a test fake) feeds the backoff requeue in step 6
+        fetch = cfg.fetch_via or pages_fetcher(self.pages)
+        fetched = fetch(to_fetch)
         # Combined extraction BEFORE the checkpoint, html dropped: one Arrow
         # pass per fetched row (lists → links, articles → parsed struct; the
         # UDF sees null html for non-ok rows so 404/429 rows cost nothing).
@@ -397,8 +342,6 @@ class CrawlEngine:
                 F.col("url"), F.col("parser_class"),
                 F.col("list_title"), F.col("list_summary"))).drop("html")
         fetched = fetched.localCheckpoint(eager=True)
-
-        _mark("fetch_extract_ckpt")
 
         # NOTE: the epoch counts below are DELIBERATELY explicit agg jobs,
         # not Observations riding the write actions. Measured at the 1M-
@@ -482,8 +425,8 @@ class CrawlEngine:
         # (measured: one of the fixed I/O costs dominating large epochs).
 
         # 6) requeue failures with backoff (sandbox: 404s are terminal like
-        #    the reference's RequestException → skip; 429 faults, if injected
-        #    upstream, do requeue)
+        #    the reference's RequestException → skip; a 429 from the
+        #    fetcher does requeue)
         failed = fetched.filter(F.col("fetch_status") == "429")
         requeued = politeness.backoff_requeue(
             failed.select(*[c for c in frontier.columns], "fetch_status",
@@ -536,23 +479,21 @@ class CrawlEngine:
                    .select("epoch", "partition_id", "watermark_ts",
                            "rows_in", "rows_out"))
         self.partition_checkpoints.append(part_ck, epoch, replace=True)
-        _mark("part_ck_write")
 
         self.articles.append(
             out_articles.select("source_id", "url", "title", "content",
                                 "published_date", "scraped_date", "epoch",
                                 "priority", "discovered_seq"),
             epoch, replace=True)
-        _mark("articles_write")
         at = cube.agg(F.sum("arts_total").alias("arts_total"),
                       F.sum("arts_ok").alias("arts_ok"),
                       F.sum("parsed").alias("parsed")).first()
         n_attempted_arts = at["arts_total"] or 0
         n_ok_arts = at["arts_ok"] or 0
         n_parsed = at["parsed"] or 0
-        _mark("counts")
         # Commit order is the crash-safety contract:
         #   stage the frontier delta (old snapshot still committed)
+        #   -> metrics + sources (S13) rewrites, replay-idempotent
         #   -> pipeline checkpoint commit (epoch is now "done")
         #   -> ONE atomic frontier manifest swap publishing adds+deletes.
         # Crash before the checkpoint: replay of epoch N reads seen state
@@ -605,24 +546,11 @@ class CrawlEngine:
         # hand-edited frontier states.
         n_front_out = frontier_in - n_robots_dropped - n_sched_total + n_adds
         if n_front_out > 0 and n_sched_total == 0 and n_adds == 0:
-            if cfg.fetch_horizon is not None:
-                # an all-deferred epoch fully explains zero progress and
-                # the arithmetic stays exact (nothing left or entered) —
-                # NO O(frontier) recount (review r5: the recount would
-                # defeat the pruning in exactly its target regime).
-                # Mixed files can still yield 0 due rows after the
-                # residual filter even past the min_stat fast-forward;
-                # bump the skew so the crawl converges instead of
-                # spinning on the same horizon.
-                self._horizon_skew += max(cfg.fetch_horizon, 1.0)
-            else:
-                # the recount runs pre-commit, so it still sees the rows
-                # this epoch's STAGED tombstones will remove — in this
-                # branch exactly the robots-dropped ones (nothing was
-                # scheduled)
-                n_front_out = (self.frontier.read(self.spark).count()
-                               - n_robots_dropped)
-        _mark("frontier_stage")
+            # the recount runs pre-commit, so it still sees the rows this
+            # epoch's STAGED tombstones will remove — in this branch exactly
+            # the robots-dropped ones (nothing was scheduled)
+            n_front_out = (self.frontier.read(self.spark).count()
+                           - n_robots_dropped)
         m = (cube.groupBy("host")
              .agg(F.sum("fetched_ok").alias("fetched"),
                   F.sum("errors").alias("errors"),
@@ -639,7 +567,24 @@ class CrawlEngine:
                      "skipped_dup", "skipped_date", "skipped_robots",
                      "errors"))
         self.metrics.append(m, epoch, replace=True)
-        _mark("metrics_write")
+        # S13 — last_crawled per source (database.py:134-146, applied after
+        # each source crawl at crawler_manager.py:134). Runs BEFORE the
+        # pipeline checkpoint: run() resumes after the last checkpointed
+        # epoch, so a stamp written after it would be lost for good by a
+        # crash in between. A replay of a crashed epoch re-stamps the same
+        # sources with the same deterministic stamp (it encodes the epoch),
+        # so the rewrite is idempotent.
+        if not self.sources.is_empty():
+            touched = (fetched.filter(F.col("fetch_status") == "ok")
+                       .select(F.col("source_id").alias("id")).distinct())
+            src = self.sources.read(self.spark)
+            stamp = f"{SCRAPED_TS}#epoch={epoch:06d}"  # zero-padded: string max == numeric max
+            upd = (src.join(touched.withColumn("__lc", F.lit(stamp)),
+                            "id", "left")
+                   .withColumn("last_crawled",
+                               F.coalesce("__lc", "last_crawled"))
+                   .drop("__lc"))
+            self.sources.overwrite(upd, epoch + 1)
         self._frontier_rows = n_front_out
         self.checkpoints.append(
             self.spark.createDataFrame(
@@ -660,28 +605,6 @@ class CrawlEngine:
             # (full read, ~0 rows out).
             self.frontier.maybe_compact(self.spark, epoch + 1,
                                         live_rows=n_front_out)
-        _mark("frontier_commit")
-
-        # S13 — last_crawled per source (database.py:134-146, applied after
-        # each source crawl at crawler_manager.py:134). Runs after the
-        # frontier swap: a crash here loses only dim metadata, which the
-        # epoch replay refreshes; the deterministic stamp encodes the epoch.
-        if not self.sources.is_empty():
-            touched = (fetched.filter(F.col("fetch_status") == "ok")
-                       .select(F.col("source_id").alias("id")).distinct())
-            src = self.sources.read(self.spark)
-            stamp = f"{SCRAPED_TS}#epoch={epoch:06d}"  # zero-padded: string max == numeric max
-            upd = (src.join(touched.withColumn("__lc", F.lit(stamp)),
-                            "id", "left")
-                   .withColumn("last_crawled",
-                               F.coalesce("__lc", "last_crawled"))
-                   .drop("__lc"))
-            self.sources.overwrite(upd, epoch + 1)
-        if _timing:
-            import sys as _sys
-            deltas = {b[0]: round(b[1] - a[1], 2)
-                      for a, b in zip(_marks, _marks[1:])}
-            print(f"# epoch {epoch} timing: {deltas}", file=_sys.stderr)
         return {"frontier_in": frontier_in, "articles_out": n_parsed,
                 "frontier_out": n_front_out}
 

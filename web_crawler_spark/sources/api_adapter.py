@@ -125,9 +125,9 @@ def refetch_full_content(articles: DataFrame, pages: DataFrame,
     flagged = articles.withColumn(
         "fetch_content", F.col("url").isNotNull() & (F.col("url") != ""))
     joined = flagged.join(pages.select("url", "html"), "url", "left")
-    art = ex.extract_article_udf()(
-        F.col("html"), F.lit("generic"),
-        F.lit(None).cast("string"), F.lit(None).cast("string"))
+    null = F.lit(None).cast("string")
+    art = ex.extract_any_udf()(F.lit("article"), F.col("html"), null,
+                               F.lit("generic"), null, null)
     joined = joined.withColumn("__full", art.getField("content")).drop("html")
     full_ok = (F.col("fetch_content") & F.col("__full").isNotNull() &
                (F.length("__full") > min_chars))

@@ -38,7 +38,7 @@ Transport protocol
 ``transport(urls: list[str]) -> list[tuple[str, bytes | None]]`` — one
 ``(status, body)`` per input URL, same order. Status "ok" marks success;
 anything else ("404", "429", "error", ...) flows into the engine's
-backoff/requeue machinery exactly like the join path's synthetic statuses.
+backoff/requeue machinery, like the default join fetcher's 404s.
 Retries are NOT the transport's job: the frontier owns retry state (S5,
 operators/politeness.backoff_requeue), mirroring how the reference's
 Retry(total=3) is subsumed by the engine-level backoff.

@@ -245,39 +245,6 @@ def _dir_bytes(d: str) -> int:
     return total
 
 
-def _file_column_ranges(d: str, column: str) -> dict:
-    """Per-parquet-file [min, max] of a column, read from the FOOTERS of a
-    just-staged directory — the Iceberg manifest column-stats shape, no
-    Spark job. Files whose stats are unavailable map to None (never
-    pruned). Keys are file names relative to the directory."""
-    import pyarrow.parquet as pq
-    out = {}
-    for fn in sorted(os.listdir(d)):
-        if not fn.endswith(".parquet"):
-            continue
-        mn = mx = None
-        ok = True
-        try:
-            md = pq.ParquetFile(os.path.join(d, fn)).metadata
-            for rg in range(md.num_row_groups):
-                col = None
-                for i in range(md.row_group(rg).num_columns):
-                    c = md.row_group(rg).column(i)
-                    if c.path_in_schema == column:
-                        col = c
-                        break
-                st = col.statistics if col is not None else None
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                mn = st.min if mn is None else min(mn, st.min)
-                mx = st.max if mx is None else max(mx, st.max)
-        except Exception:
-            ok = False
-        out[fn] = [mn, mx] if (ok and mn is not None) else None
-    return out
-
-
 class DeltaFrontier:
     """Merge-on-read frontier table — Iceberg v2 equality-delete semantics.
 
@@ -380,14 +347,6 @@ class DeltaFrontier:
             i += 1
         return name
 
-    #: the column whose per-file min/max ride the manifest for scan pruning
-    #: (round-4 verdict Next #2): an epoch with a fetch horizon skips add
-    #: files whose min next_fetch_ts lies beyond it — backoff/requeued rows
-    #: land in their own files (they are written by their own union branch's
-    #: tasks), so a frontier dominated by deferred retries is mostly
-    #: never scanned. Iceberg: manifest column stats + partition pruning.
-    STATS_COL = "next_fetch_ts"
-
     def _stage(self, df: DataFrame, name: str) -> dict:
         staging = os.path.join(self.path, name + ".staging")
         if os.path.exists(staging):
@@ -395,11 +354,8 @@ class DeltaFrontier:
         df.write.mode("overwrite").parquet(staging)
         # parquet footer count — metadata read, no data scan
         rows = df.sparkSession.read.parquet(staging).count()
-        entry = {"name": name, "staging": staging, "rows": rows,
-                 "bytes": _dir_bytes(staging)}
-        if self.STATS_COL in df.columns:
-            entry["stats"] = _file_column_ranges(staging, self.STATS_COL)
-        return entry
+        return {"name": name, "staging": staging, "rows": rows,
+                "bytes": _dir_bytes(staging)}
 
     def stage_delta(self, adds: DataFrame, dels: DataFrame,
                     epoch: int) -> dict:
@@ -440,10 +396,7 @@ class DeltaFrontier:
 
     @staticmethod
     def _entry(staged_one: dict) -> dict:
-        e = {"rows": staged_one["rows"], "bytes": staged_one["bytes"]}
-        if "stats" in staged_one:
-            e["stats"] = staged_one["stats"]
-        return e
+        return {"rows": staged_one["rows"], "bytes": staged_one["bytes"]}
 
     def commit_delta(self, epoch: int, staged: dict) -> None:
         man = self._manifest()
@@ -485,48 +438,10 @@ class DeltaFrontier:
                 f"{missing} — the table is corrupt")
         return dirs
 
-    def min_stat(self) -> Optional[float]:
-        """Smallest recorded per-file min of STATS_COL across committed add
-        files — driver-side manifest arithmetic, no job. None when no file
-        has stats (legacy snapshots). Used by the engine to fast-forward a
-        fetch horizon past an all-deferred frontier without scanning it."""
-        mn = None
-        for e in self._manifest()["adds"].values():
-            for rng in (e.get("stats") or {}).values():
-                if rng is not None:
-                    mn = rng[0] if mn is None else min(mn, rng[0])
-        return mn
-
-    def _prune_paths(self, man: dict, due_before: float) -> list:
-        """Manifest-stats file pruning (round-4 verdict Next #2): return the
-        parquet paths that can contain a row with STATS_COL <= due_before.
-        Driver-side manifest arithmetic only — no Spark job, no footer
-        reads. A file whose recorded min exceeds the horizon provably holds
-        only deferred rows; files or snapshots without stats (older
-        manifests, stats-less writers) are never pruned. Iceberg analogue:
-        manifest-entry column bounds driving scan planning."""
-        paths = []
-        for name, entry in man["adds"].items():
-            if not entry["rows"]:
-                continue
-            stats = entry.get("stats")
-            if stats is None:
-                paths.append(os.path.join(self.path, name))
-                continue
-            for fn, rng in stats.items():
-                if rng is None or rng[0] <= due_before:
-                    paths.append(os.path.join(self.path, name, fn))
-        return paths
-
-    def read(self, spark: SparkSession,
-             due_before: Optional[float] = None) -> DataFrame:
-        """Live view = union(adds) ANTI union(dels). With ``due_before``,
-        only rows whose STATS_COL (next_fetch_ts) <= due_before are
-        returned, and add FILES whose manifest min exceeds the horizon are
-        skipped entirely — a frontier dominated by deferred retries is
-        mostly never scanned. Value-equal to
-        read().filter(next_fetch_ts <= due_before) by construction (the
-        residual filter below covers mixed files)."""
+    def read(self, spark: SparkSession) -> DataFrame:
+        """Live view = union(adds) LEFT ANTI union(dels). Manifest entries
+        written with a per-file ``stats`` key (older snapshots) read the
+        same: only ``rows``/``bytes`` are consulted."""
         from pyspark.sql import functions as F
         man = self._manifest()
         add_dirs = self._committed_dirs(man, "adds")
@@ -534,14 +449,7 @@ class DeltaFrontier:
             # no rows anywhere (incl. the drained 0-row snapshot, whose dir
             # may hold no readable parquet footer) — empty by schema
             return spark.createDataFrame([], schema=self.schema_ddl)
-        if due_before is not None:
-            paths = self._prune_paths(man, due_before)
-            if not paths:
-                return spark.createDataFrame([], schema=self.schema_ddl)
-            base = (spark.read.parquet(*paths)
-                    .filter(F.col(self.STATS_COL) <= F.lit(due_before)))
-        else:
-            base = spark.read.parquet(*add_dirs)
+        base = spark.read.parquet(*add_dirs)
         del_dirs = self._committed_dirs(man, "dels")
         if not del_dirs:
             return base
