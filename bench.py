@@ -1,7 +1,8 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+on local[$SPARK_GRAFT_CPUS] (unset: every CPU of the machine) and prints ONE
+JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -78,14 +79,17 @@ HEADLINE_V3 = [
 
 
 def main() -> None:
+    from web_crawler_spark.session import default_cores, get_spark
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir",
                     default=os.environ.get("SPARK_GRAFT_SF_DIR",
                                            "/root/testdata/sf0.1"))
     ap.add_argument("--queries", default=None,
                     help="comma-separated subset of headline queries")
-    ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=default_cores(),
+                    help="local task slots (default: SPARK_GRAFT_CPUS, "
+                         "else the machine's CPU count)")
     ap.add_argument("--repeat", type=int, default=1,
                     help="best-of-N timing per query")
     ap.add_argument("--no-control", action="store_true",
@@ -93,7 +97,6 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entrymod
-    from web_crawler_spark.session import get_spark
 
     # Machine-control calibration (run BEFORE the Spark JVM spins up so the
     # control sees the same idle/steal conditions the suite is about to):

@@ -152,16 +152,19 @@ def test_metrics_and_checkpoints_written(spark, engine):
                for r in pck)
 
 
-def test_hot_host_salting_preserves_results(spark, tmp_path, web, golden):
+def test_hot_host_salting_preserves_results(spark, tmp_path, web, golden,
+                                            monkeypatch):
     """With an aggressive hot threshold every host salts across sub-keys;
     the article set must be identical to the unsalted run (salting changes
     partitioning, never results)."""
     from web_crawler_spark import html_synth
+    from web_crawler_spark.operators import politeness
     from web_crawler_spark.plans.epoch import CrawlConfig, CrawlEngine
+    monkeypatch.setattr(politeness, "HOT_THRESHOLD", 1)
+    monkeypatch.setattr(politeness, "N_SALT", 4)
     pages = html_synth.pages_df(spark, web, n_partitions=4)
     seeds = html_synth.seeds_df(spark, web)
-    eng = CrawlEngine(spark, str(tmp_path / "salted"), pages,
-                      CrawlConfig(hot_threshold=1, n_salt=4))
+    eng = CrawlEngine(spark, str(tmp_path / "salted"), pages, CrawlConfig())
     eng.run(seeds, max_epochs=4)
     got = {(r.url, r.content) for r in
            eng.articles.read(spark).select("url", "content").collect()}

@@ -91,7 +91,7 @@ def test_delta_tombstone_kills_exactly_one_duplicate(spark, tmp_path):
 
 
 def test_delta_compaction_folds_tombstones(spark, tmp_path):
-    t = DeltaFrontier(str(tmp_path / "f"), DDL, compact_ratio=0.3)
+    t = DeltaFrontier(str(tmp_path / "f"), DDL)
     t.overwrite(_rows(spark, 100), epoch=0)
     dels = _rows(spark, 60).select("url", "discovered_seq", "retries", "epoch_added")
     t.commit_delta(1, t.stage_delta(_rows(spark, 0, start=500), dels, 1))
@@ -176,7 +176,7 @@ def test_compaction_skipped_when_drained(spark, tmp_path):
     """live_rows=0 prunes the no-win compaction (full read, nothing out) —
     and the hint can only SKIP, never truncate, so a wrong count cannot
     destroy rows."""
-    t = DeltaFrontier(str(tmp_path / "f"), DDL, compact_ratio=0.3)
+    t = DeltaFrontier(str(tmp_path / "f"), DDL)
     t.overwrite(_rows(spark, 50), epoch=0)
     dels = _rows(spark, 50).select("url", "discovered_seq", "retries", "epoch_added")
     t.commit_delta(1, t.stage_delta(_rows(spark, 0, start=500), dels, 1))

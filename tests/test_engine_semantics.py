@@ -58,14 +58,13 @@ def test_backoff_requeue_retries_then_succeeds(spark, tmp_path, web,
 
 def test_backoff_gives_up_after_max_retries(spark, tmp_path, web,
                                             inject_429):
-    """A url that 429s more than max_retries times is dropped for good
+    """A url that 429s more than MAX_RETRIES times is dropped for good
     (Retry(total=3) semantics, base_crawler.py:43-48) and the frontier
     still drains."""
     golden = refspec.simulate_crawl(web["pages"], web["seeds"])
     victim = golden["articles"][0]["url"]
     eng, seeds = _engine(spark, str(tmp_path / "w"), web,
-                         wrap_fetch=lambda f: inject_429(f, {victim: 99}),
-                         max_retries=3)
+                         wrap_fetch=lambda f: inject_429(f, {victim: 99}))
     eng.run(seeds, max_epochs=10)
     stored = {r["url"] for r in eng.articles.read(spark).collect()}
     assert victim not in stored
@@ -197,14 +196,16 @@ def test_api_refetch_full_content(spark):
 
 
 # ------------------------------------------------------------- merge guard
-def test_merge_is_dim_table_only(spark, tmp_path):
+def test_merge_is_dim_table_only(spark, tmp_path, monkeypatch):
     from web_crawler_spark.sources.tables import LakeTable
     t = LakeTable(str(tmp_path / "dim"), "k string, v bigint")
     df = spark.range(50).select(F.col("id").cast("string").alias("k"),
                                 F.col("id").alias("v"))
-    t.merge(spark, df, "k", 0, max_rows=100)          # fine: under the cap
+    monkeypatch.setattr(LakeTable, "MERGE_MAX_ROWS", 100)
+    t.merge(spark, df, "k", 0)                        # fine: under the cap
+    monkeypatch.setattr(LakeTable, "MERGE_MAX_ROWS", 10)
     with pytest.raises(ValueError, match="dim-table-only"):
-        t.merge(spark, df, "k", 1, max_rows=10)       # fact-sized → refuse
+        t.merge(spark, df, "k", 1)                    # fact-sized → refuse
 
 
 def test_metrics_include_skipped_robots(spark, tmp_path, web):
@@ -351,28 +352,26 @@ def test_schedule_invariants_with_retry_bumps(spark):
 
 
 def test_host_delay_broadcast_join_path_matches_inline(spark):
-    """Above MAX_INLINE_DELAYS distinct crawl delays, schedule_epoch
-    switches from a CASE chain to a broadcast-joined delay dim — both
-    plans must assign identical sched_ts."""
+    """schedule_epoch joins the per-host delay map as a broadcast dim:
+    with no backoff bumps every row's sched_ts is the closed form
+    delay(host) x per-host rank, hosts outside the map (and a null host)
+    pacing at the default delay."""
     from web_crawler_spark.operators import politeness
     rows = [(f"https://h{i % 100}/u{i}", f"h{i % 100}", 0, 0.0, i)
             for i in range(2000)]
+    rows.append(("relative/only", None, 0, 0.0, 5000))
     df = spark.createDataFrame(
         rows, schema="url string, host string, priority int, "
                      "next_fetch_ts double, discovered_seq bigint")
-    few = {f"h{i}": 2.0 + i for i in range(3)}            # inline path
-    many = dict(few, **{f"h{i}": 2.0 + i for i in range(3, 100)})  # join path
-    assert len(many) > politeness.MAX_INLINE_DELAYS
-    a = {(r["url"], r["sched_ts"]) for r in
-         politeness.schedule_epoch(df, 1.0, host_delays=many).collect()}
-    # same delays through the inline path by splitting hosts
-    b = set()
-    for i in range(100):
-        sub = df.filter(F.col("host") == f"h{i}")
-        b |= {(r["url"], r["sched_ts"]) for r in
-              politeness.schedule_epoch(
-                  sub, 1.0, host_delays={f"h{i}": 2.0 + i}).collect()}
-    assert a == b
+    delays = {f"h{i}": 2.0 + i for i in range(90)}   # h90..h99: default
+    got = {r["url"]: r["sched_ts"] for r in
+           politeness.schedule_epoch(df, 1.0, host_delays=delays).collect()}
+    want = {"relative/only": 1.0}
+    for i in range(2000):
+        rank = i // 100 + 1          # host h(i%100)'s rows in seq order
+        want[f"https://h{i % 100}/u{i}"] = \
+            delays.get(f"h{i % 100}", 1.0) * rank
+    assert got == want
 
 
 def test_engine_deterministic_across_shuffle_partitions(spark, tmp_path, web):

@@ -75,20 +75,32 @@ def test_parse_robots_grouped_agents():
 
 
 def test_filter_allowed_join_path_matches_inline(spark):
-    """Above MAX_INLINE_RULES the broadcast anti-join plan must filter
-    identically to the inline-expression plan."""
+    """The broadcast anti-join filters by (host, prefix) PAIRS at any map
+    size: a prefix disallowed on one host leaves the same path on another
+    host allowed, hosts without rules are allow-all, and invert=True
+    returns exactly the complement."""
     rules = {f"h{i}.com": (0.0, [f"/p{i}/", "/z/"]) for i in range(40)}
-    assert sum(len(p) for _, p in rules.values()) > robots.MAX_INLINE_RULES
-    frontier = spark.createDataFrame(
-        [(f"https://h{i}.com{path}", f"h{i}.com")
-         for i in range(40) for path in (f"/p{i}/x", "/z/q", "/ok/a")],
-        schema="url string, host string")
-    joined = {r.url for r in robots.filter_allowed(frontier, rules).collect()}
+    rows = [(f"https://h{i}.com{path}", f"h{i}.com")
+            for i in range(40)
+            for path in (f"/p{i}/x", "/z/q", "/ok/a",
+                         f"/p{(i + 1) % 40}/y")]     # another host's prefix
+    rows += [("https://free.com/p0/x", "free.com"),
+             ("https://free.com/z/q", "free.com")]   # no rules: allow-all
+    frontier = spark.createDataFrame(rows, schema="url string, host string")
+    every = {u for u, _h in rows}
+
+    def urls(rs, invert=False):
+        return {r.url for r in robots.filter_allowed(
+            frontier, rs, invert=invert).collect()}
+
+    dropped = ({f"https://h{i}.com/p{i}/x" for i in range(40)} |
+               {f"https://h{i}.com/z/q" for i in range(40)})
+    assert urls(rules) == every - dropped
+    assert urls(rules, invert=True) == dropped
     small = {"h1.com": rules["h1.com"]}
-    inline = {r.url for r in robots.filter_allowed(
-        frontier.filter(F.col("host") == "h1.com"), small).collect()}
-    assert joined == {f"https://h{i}.com/ok/a" for i in range(40)}
-    assert inline == {"https://h1.com/ok/a"}
+    small_dropped = {"https://h1.com/p1/x", "https://h1.com/z/q"}
+    assert urls(small) == every - small_dropped
+    assert urls(small, invert=True) == small_dropped
 
 
 def test_laketable_merge_dedups_update_batch(spark, tmp_path):
@@ -158,17 +170,21 @@ def test_parse_robots_groupless_directives_ignored():
 
 
 def test_filter_allowed_null_host_consistent(spark):
-    """Null-host rows are allow-all in BOTH plans (inline expression and
-    broadcast anti-join)."""
+    """Null-host rows are allow-all at any map size: a null host equals no
+    rule host, so the row is kept and never lands in the inverted set."""
     frontier = spark.createDataFrame(
-        [("https://h1.com/private/x", "h1.com"), ("relative/only", None)],
+        [("https://h1.com/private/x", "h1.com"), ("relative/only", None),
+         ("/private/y", None)],
         schema="url string, host string")
     small = {"h1.com": (0.0, ["/private/"])}
-    inline = {r.url for r in robots.filter_allowed(frontier, small).collect()}
-    assert inline == {"relative/only"}
     big = dict(small, **{f"x{i}.com": (0.0, [f"/p{i}/"]) for i in range(80)})
-    joined = {r.url for r in robots.filter_allowed(frontier, big).collect()}
-    assert joined == {"relative/only"}
+    for rules in (small, big):
+        kept = {r.url for r in robots.filter_allowed(frontier, rules)
+                .collect()}
+        gone = {r.url for r in robots.filter_allowed(frontier, rules,
+                                                     invert=True).collect()}
+        assert kept == {"relative/only", "/private/y"}
+        assert gone == {"https://h1.com/private/x"}
 
 
 def test_stream_sessionize_single_file_per_trigger(spark):

@@ -23,6 +23,9 @@ TRICKY = [
     "tab\tand\x0bvertical\x0cfeeds\r\nnewline",
     "  MiXeD Case   runs  of   spaces ",
     "a b c d e",
+    "\tHello world",          # JVM trim strips spaces only
+    "\nfoo bar\n",
+    "\xa0x y",
 ]
 
 

@@ -53,7 +53,7 @@ def table_hash(rows, colnames):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("oracle-check", cores=16, shuffle_partitions=16)
+    spark = get_spark("oracle-check", shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -14,7 +14,7 @@ pages from an Iceberg/parquet table and needs no driver headroom —
 measured: 1M docs / 100k articles wants ~24g only for the fixture build).
 
 On a real cluster, swap --master for the cluster manager and point
---pages/--workdir at Iceberg/DFS paths; everything else is identical.
+--workdir at an Iceberg/DFS path; everything else is identical.
 """
 
 from __future__ import annotations
@@ -32,8 +32,6 @@ def main() -> None:
     ap.add_argument("--n-hosts", type=int, default=64)
     ap.add_argument("--epochs", type=int, default=1)
     ap.add_argument("--workdir", required=True)
-    ap.add_argument("--pages", default=None,
-                    help="existing pages parquet; default: synthesize")
     ap.add_argument("--hot-frac", type=float, default=0.30,
                     help="fixture skew: share of URLs on host 0 (0=uniform)")
     ap.add_argument("--fixture-dir", default=None,
@@ -57,9 +55,6 @@ def main() -> None:
                          "host link graph cross-host edges to rank; "
                          "default 0 = the historical self-loop-only web)")
     args = ap.parse_args()
-    if args.pages:
-        ap.error("--pages (external corpus mode) is not wired yet: "
-                 "provide a seeds source for your corpus and remove this guard")
 
     # spark-submit provides the session config (master, memory, py-files);
     # runtime-settable engine defaults applied here (the static ones —

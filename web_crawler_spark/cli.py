@@ -263,7 +263,9 @@ def setup_parser() -> argparse.ArgumentParser:
         description="News crawler lake CLI (reference cli.py/main.py analog)")
     p.add_argument("--workdir", default=os.getenv("WCS_WORKDIR", "data/lake"),
                    help="engine workdir holding the lake tables")
-    p.add_argument("--cores", type=int, default=8)
+    p.add_argument("--cores", type=int, default=None,
+                   help="local task slots (default: SPARK_GRAFT_CPUS, else "
+                        "the machine's CPU count)")
     sub = p.add_subparsers(dest="command", help="Command to run")
     sub.add_parser("sources", help="List all news sources")
     pa = sub.add_parser("articles", help="List recent articles")

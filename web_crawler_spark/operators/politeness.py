@@ -17,10 +17,12 @@ epoch anyway).
 
 Skew: the *schedule* must be per-host-sequential, but the downstream
 fetch-join + parse need not be. After scheduling we repartition by
-(host, salt) where hot hosts (row_count > hot_threshold) fan out over
-``n_salt`` deterministic sub-keys — this breaks hot-domain skew in the
+(host, salt) where hot hosts (row_count > HOT_THRESHOLD) fan out over
+``N_SALT`` deterministic sub-keys — this breaks hot-domain skew in the
 shuffle that feeds the fetch join (north_rule) while politeness ordering
-stays encoded in sched_ts.
+stays encoded in sched_ts. A host contributes at most ``per_host_budget``
+rows to an epoch, so salting can only fire when that budget exceeds
+HOT_THRESHOLD.
 """
 
 from __future__ import annotations
@@ -37,6 +39,16 @@ from pyspark.sql import functions as F
 #: rows) take the final per-host top-budget. Exact distributed top-k: every
 #: global-top-budget row is within the top budget of its own bucket.
 N_PREBUCKETS = 32
+
+#: Retry(total=3) (base_crawler.py:43-48): a row that has failed this many
+#: fetches is dropped instead of requeued
+MAX_RETRIES = 3
+#: backoff on HTTP 429 — the API path's 60 s sleep (base_fetcher.py:123-126)
+RATE_LIMIT_PENALTY = 60.0
+#: a host with more rows than this in one epoch's fetch is salted across
+#: N_SALT sub-keys
+HOT_THRESHOLD = 50_000
+N_SALT = 8
 
 
 def truncate_per_host(frontier: DataFrame, per_host_budget: int,
@@ -74,18 +86,11 @@ def truncate_per_host(frontier: DataFrame, per_host_budget: int,
             .filter(F.col("__rk") <= cap).drop("__rk"))
 
 
-#: above this many distinct per-host crawl delays the inlined CASE chain
-#: would blow up the expression tree — switch to a broadcast-joined delay
-#: dimension (the web-scale shape: millions of robots Crawl-delays)
-MAX_INLINE_DELAYS = 64
-
-
 def schedule_epoch(frontier: DataFrame,
                    default_delay: float = 1.0,
                    per_host_budget: int = 10_000,
                    epoch_start_ts: float = 0.0,
                    host_delays: Optional[Dict[str, float]] = None,
-                   prebucket: bool = True,
                    approx_rows: Optional[int] = None,
                    host_budgets: Optional[DataFrame] = None,
                    ) -> DataFrame:
@@ -111,12 +116,16 @@ def schedule_epoch(frontier: DataFrame,
     to ``per_host_budget``. With budgets present the truncation can never
     be skipped (a budget below the frontier size must bind even when the
     whole frontier fits the default budget).
+
+    ``host_delays`` ({host: seconds}, the robots Crawl-delay map) is joined
+    as a broadcast dimension; hosts not in it, and null hosts, pace at
+    ``default_delay``.
     """
-    host_delays = host_delays or {}
     # ``approx_rows`` (the caller's known frontier count) prunes no-op work:
     # a frontier that fits the budget outright needs no truncation at all,
     # and the prebucket phase only pays off when a single host could exceed
     # the budget — both windows are exact either way, this is plan pruning.
+    prebucket = approx_rows is None or approx_rows > 4 * per_host_budget
     if host_budgets is not None:
         frontier = (frontier
                     .join(F.broadcast(host_budgets.select("host", "__budget")),
@@ -124,23 +133,12 @@ def schedule_epoch(frontier: DataFrame,
                     .withColumn("__budget",
                                 F.coalesce("__budget",
                                            F.lit(int(per_host_budget)))))
-        if approx_rows is not None:
-            prebucket = prebucket and approx_rows > 4 * per_host_budget
         frontier = truncate_per_host(frontier, per_host_budget, prebucket,
                                      budget_col="__budget").drop("__budget")
-    elif approx_rows is not None and approx_rows <= per_host_budget:
-        pass                                    # truncation is a no-op
-    else:
-        if approx_rows is not None:
-            prebucket = prebucket and approx_rows > 4 * per_host_budget
+    elif approx_rows is None or approx_rows > per_host_budget:
         frontier = truncate_per_host(frontier, per_host_budget, prebucket)
 
-    if len(host_delays) <= MAX_INLINE_DELAYS:
-        delay = F.lit(float(default_delay))
-        for h, d in host_delays.items():
-            delay = F.when(F.col("host") == h, F.lit(float(d))).otherwise(delay)
-        frontier = frontier.withColumn("__delay", delay)
-    else:
+    if host_delays:
         ddf = frontier.sparkSession.createDataFrame(
             [(h, float(d)) for h, d in host_delays.items()],
             schema="host string, __hd double")
@@ -149,6 +147,8 @@ def schedule_epoch(frontier: DataFrame,
                                 F.coalesce("__hd",
                                            F.lit(float(default_delay))))
                     .drop("__hd"))
+    else:
+        frontier = frontier.withColumn("__delay", F.lit(float(default_delay)))
 
     from pyspark.sql import Window
     order = [F.col("priority").asc(), F.col("next_fetch_ts").asc(),
@@ -162,18 +162,16 @@ def schedule_epoch(frontier: DataFrame,
             .drop("__delay"))
 
 
-def hot_host_salts(frontier: DataFrame, hot_threshold: int = 50_000,
-                   n_salt: int = 8) -> Dict[str, int]:
-    """Compute {host: n_sub} for hosts whose epoch row-count exceeds the
-    threshold. One tiny aggregation; result is driver-side (broadcast-size:
-    #hot hosts is small by definition)."""
+def hot_host_salts(frontier: DataFrame) -> Dict[str, int]:
+    """Compute {host: N_SALT} for hosts whose epoch row-count exceeds
+    HOT_THRESHOLD. One tiny aggregation; result is driver-side
+    (broadcast-size: #hot hosts is small by definition)."""
     rows = (frontier.groupBy("host").count()
-            .filter(F.col("count") > hot_threshold).collect())
-    return {r["host"]: n_salt for r in rows}
+            .filter(F.col("count") > HOT_THRESHOLD).collect())
+    return {r["host"]: N_SALT for r in rows}
 
 
-def salted_repartition(df: DataFrame, salts: Dict[str, int],
-                       n_partitions: Optional[int] = None) -> DataFrame:
+def salted_repartition(df: DataFrame, salts: Dict[str, int]) -> DataFrame:
     """Repartition by (host, salt): cold hosts keep salt 0 (one partition →
     politeness order trivially preserved); hot hosts spread across n_sub
     deterministic sub-keys keyed by xxhash64(url)."""
@@ -182,24 +180,21 @@ def salted_repartition(df: DataFrame, salts: Dict[str, int],
         salt = F.when(F.col("host") == h,
                       F.pmod(F.xxhash64(F.col("url")), F.lit(int(n)))
                       ).otherwise(salt)
-    out = df.withColumn("host_salt", salt.cast("int"))
-    if n_partitions:
-        return out.repartition(n_partitions, "host", "host_salt")
-    return out.repartition("host", "host_salt")
+    return (df.withColumn("host_salt", salt.cast("int"))
+            .repartition("host", "host_salt"))
 
 
-def backoff_requeue(failed: DataFrame, base_penalty: float = 1.0,
-                    rate_limit_penalty: float = 60.0, max_retries: int = 3
+def backoff_requeue(failed: DataFrame, base_penalty: float = 1.0
                     ) -> DataFrame:
     """Failed fetches → frontier re-entries with exponential-ish backoff:
     next_fetch_ts += penalty * retries (backoff_factor=1 semantics,
-    base_crawler.py:43-48); 429 rows get the 60 s penalty
-    (base_fetcher.py:123-126). Rows exceeding max_retries are dropped (the
-    reference's Retry(total=3) gives up the same way)."""
+    base_crawler.py:43-48); 429 rows get RATE_LIMIT_PENALTY. Rows that
+    already failed MAX_RETRIES times are dropped (the reference's
+    Retry(total=3) gives up the same way)."""
     penalty = F.when(F.col("fetch_status") == "429",
-                     F.lit(rate_limit_penalty)) \
+                     F.lit(RATE_LIMIT_PENALTY)) \
                .otherwise(F.lit(base_penalty) * (F.col("retries") + 1))
-    return (failed.filter(F.col("retries") < max_retries)
+    return (failed.filter(F.col("retries") < MAX_RETRIES)
             .withColumn("retries", F.col("retries") + 1)
             .withColumn("next_fetch_ts", F.col("sched_ts") + penalty)
             .drop("fetch_status", "sched_ts"))

@@ -14,12 +14,14 @@ first-class:
   table is host-cardinality (millions of rows at web scale, a few MB as
   prefix arrays), the classic broadcast-dimension shape.
 * :func:`filter_allowed` — drop frontier rows whose path matches a
-  disallowed prefix for their host (JVM-side when the broadcast map is
-  small: expression built from the map; no per-row Python).
+  disallowed prefix for their host: a broadcast LEFT ANTI join against the
+  exploded (host, prefix) pairs, JVM-side, no per-row Python.
+* :func:`host_delays` — the Crawl-delays that exceed the default, as the
+  {host: seconds} map politeness.schedule_epoch joins.
 
-Integration: CrawlEngine passes {host: crawl_delay} into
-politeness.schedule_epoch (host_delays) and filters the frontier with
-filter_allowed before scheduling.
+Integration: CrawlEngine derives host_delays once at init, passes it to
+every politeness.schedule_epoch call, and filters the frontier with
+filter_allowed before scheduling (tombstoning the inverted, dropped rows).
 """
 
 from __future__ import annotations
@@ -112,12 +114,6 @@ def collect_rules(rules: DataFrame) -> Dict[str, Tuple[float, List[str]]]:
             for r in rules.collect()}
 
 
-#: above this many (host, prefix) pairs the inlined-expression filter would
-#: build an unboundedly deep boolean tree (analysis blowup / codegen
-#: fallback); switch to the broadcast anti-join plan instead
-MAX_INLINE_RULES = 64
-
-
 def filter_allowed(frontier: DataFrame,
                    rules: Dict[str, Tuple[float, List[str]]],
                    url_col: str = "url", host_col: str = "host",
@@ -127,26 +123,16 @@ def filter_allowed(frontier: DataFrame,
     DISALLOWED rows instead (the epoch tombstones them so a blocked row is
     consumed once, not re-dropped every epoch forever).
 
-    Small rule maps inline as a Column expression (whole-stage codegen, no
-    join). Large maps — the web-scale shape, millions of hosts — become a
-    broadcast LEFT ANTI (or LEFT SEMI when inverted) join against the
-    exploded (host, prefix) rules: one broadcast, no expression-tree
-    blowup."""
+    One plan at any map size: a broadcast LEFT ANTI (or LEFT SEMI when
+    inverted) join against the exploded (host, prefix) rules. A null host
+    equals no rule host, so null-host rows are allow-all. An empty map adds
+    no join."""
     pairs = [(h, p) for h, (_d, ps) in rules.items() for p in ps]
     if not pairs:
         return frontier.limit(0) if invert else frontier
     path = F.regexp_replace(F.col(url_col), r"^[a-z]+://[^/]+", "")
-    if len(pairs) <= MAX_INLINE_RULES:
-        # null-safe equality: (host == h) is NULL for null hosts, and NULL
-        # fails a filter — coalescing keeps null-host rows (allow-all),
-        # consistent with the anti-join plan below
-        cond = F.lit(True)
-        for host, p in pairs:
-            cond = cond & ~(F.coalesce(F.col(host_col) == host, F.lit(False))
-                            & path.startswith(p))
-        return frontier.filter(~cond if invert else cond)
-    spark = frontier.sparkSession
-    rules_df = spark.createDataFrame(pairs, schema="__r_host string, __r_prefix string")
+    rules_df = frontier.sparkSession.createDataFrame(
+        pairs, schema="__r_host string, __r_prefix string")
     return (frontier.withColumn("__path", path)
             .join(F.broadcast(rules_df),
                   (F.col(host_col) == F.col("__r_host")) &

@@ -16,8 +16,9 @@ Two classic pipeline stages the heuristic quality filters don't cover:
 Shared feature contract (MUST match tools/gen_dsir_weights.py /
 tools/gen_quality_clf.py and the DuckDB oracles):
 
-  normalize  = trim -> collapse whitespace (explicit LANGID_WS_CLASS — the
-               three regex dialects disagree on \\s) -> lowercase
+  normalize  = trim spaces (U+0020 only, as the JVM trim does) -> collapse
+               whitespace (explicit LANGID_WS_CLASS — the three regex
+               dialects disagree on \\s) -> lowercase
   tokens     = split on single space ('' -> [])
   features   = unigrams (+ adjacent bigrams joined by one space for DSIR)
   bucket     = first 3 hex chars of md5(feature)  -> B = 4096 buckets
@@ -62,7 +63,7 @@ def quality_clf_path() -> str:
 # --- Python twins of the feature contract (training tools + tests) ---------
 
 def py_normalize(text: str) -> str:
-    return re.sub(LANGID_WS_CLASS, " ", (text or "").strip()).lower()
+    return re.sub(LANGID_WS_CLASS, " ", (text or "").strip(" ")).lower()
 
 
 def py_tokens(text: str) -> list:

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from ..functions import canonicalize as canon
 from ..functions import extract as ex
-from ..operators import dedup, politeness
+from ..operators import dedup, politeness, robots
 from ..sources.tables import DeltaFrontier, LakeTable
 
 FRONTIER_DDL = ("url string, host string, kind string, parser_class string, "
@@ -107,13 +107,10 @@ class CrawlConfig:
     end_date: Optional[str] = None
     request_delay: float = 1.0           # REQUEST_DELAY (main.py:149)
     per_host_budget: int = 10_000
-    max_retries: int = 3                 # base_crawler.py:43-48
-    hot_threshold: int = 50_000
-    n_salt: int = 8
-    host_delays: Dict[str, float] = field(default_factory=dict)  # robots map
     #: broadcast robots rules {host: (crawl_delay, [disallow_prefix, ...])}
-    #: built via operators.robots.collect_rules; delays merged into
-    #: host_delays at engine init, prefixes filter the frontier each epoch
+    #: built via operators.robots.collect_rules; the engine derives its
+    #: per-host delay map from them once at init, and the prefixes filter
+    #: the frontier each epoch
     robots_rules: Dict[str, tuple] = field(default_factory=dict)
     #: OPT-IN authority-weighted per-host budgets (the loop the
     #: host_pagerank operator's docstring promises): when True the engine
@@ -158,12 +155,9 @@ class CrawlEngine:
                       "src string, dst string")
             if self.cfg.rank_host_budgets else None)
         self._frontier_rows: Optional[int] = None  # carried across epochs
-        if self.cfg.robots_rules:
-            from ..operators import robots
-            merged = robots.host_delays(self.cfg.robots_rules,
-                                        self.cfg.request_delay)
-            merged.update(self.cfg.host_delays)   # explicit config wins
-            self.cfg.host_delays = merged
+        #: robots Crawl-delays above request_delay, {host: seconds}
+        self.host_delays = robots.host_delays(self.cfg.robots_rules,
+                                              self.cfg.request_delay)
 
     # ------------------------------------------------------------------ seed
     def bootstrap(self, seeds: DataFrame) -> None:
@@ -221,15 +215,13 @@ class CrawlEngine:
         #    dropped rows are tombstoned below so a blocked row is consumed
         #    once, not re-dropped every epoch forever. The drop COUNT is
         #    derived later from the staged tombstone footer (del_rows −
-        #    n_sched), not a dedicated frontier count job — the robots gate
-        #    previously paid a third full frontier scan for it (ADVICE r4).
+        #    n_sched), not a dedicated frontier count job (ADVICE r4).
         #    The predicate is deliberately NOT materialized (cache/
         #    localCheckpoint would be O(frontier) memory at 10^10 rows);
         #    re-evaluating a pushed-down prefix match per consumer is the
         #    cheaper side of that trade.
         robots_dropped = None
         if self.cfg.robots_rules:
-            from ..operators import robots
             robots_dropped = robots.filter_allowed(
                 frontier, self.cfg.robots_rules, invert=True)
             frontier = robots.filter_allowed(frontier, self.cfg.robots_rules)
@@ -278,7 +270,7 @@ class CrawlEngine:
             frontier, default_delay=cfg.request_delay,
             per_host_budget=cfg.per_host_budget,
             epoch_start_ts=epoch_start_ts,
-            host_delays=cfg.host_delays,
+            host_delays=self.host_delays,
             approx_rows=frontier_in,
             host_budgets=host_budgets)
         sched = sched.localCheckpoint(eager=True)  # cut lineage per epoch
@@ -318,10 +310,12 @@ class CrawlEngine:
         # 4) hot-host salting (breaks per-host skew for the downstream
         #    stages; the url-keyed fetch join itself is skew-free since url
         #    is unique), then the fetch join against the pages table
-        #    (the per-host count job is skipped outright when the WHOLE
-        #    frontier is under the hot threshold — no host can exceed it)
-        salts = {} if frontier_in <= cfg.hot_threshold else \
-            politeness.hot_host_salts(fresh, cfg.hot_threshold, cfg.n_salt)
+        #    (the per-host count job is skipped outright when no host can
+        #    exceed the hot threshold: truncation caps every host at
+        #    per_host_budget rows, and no host has more than the frontier)
+        salts = ({} if min(frontier_in, cfg.per_host_budget)
+                 <= politeness.HOT_THRESHOLD
+                 else politeness.hot_host_salts(fresh))
         if salts:
             fresh = politeness.salted_repartition(fresh, salts).drop("host_salt")
         to_fetch = fresh.unionByName(lists.select(*fresh.columns))
@@ -431,7 +425,7 @@ class CrawlEngine:
         requeued = politeness.backoff_requeue(
             failed.select(*[c for c in frontier.columns], "fetch_status",
                           "sched_ts"),
-            base_penalty=cfg.request_delay, max_retries=cfg.max_retries)
+            base_penalty=cfg.request_delay)
 
         # 7) lineage + metrics + checkpoint + commits (atomic per table).
         #    ONE aggregation scan over the checkpointed fetch result feeds
@@ -513,38 +507,35 @@ class CrawlEngine:
         # 10^10-row frontier with a budget-bounded epoch that is the
         # difference between rewriting terabytes and writing megabytes.
         adds = discovered.unionByName(requeued.select(*FRONTIER_COLS))
-        # Drain fast path: when the epoch consumed EVERY live row (budget
+        # Drain fast path: when the epoch SCHEDULED every live row (budget
         # covered the whole frontier — the tail of any crawl), the new live
         # set IS the additions; tombstoning the entire old snapshot (and
         # anti-joining it on every later read) would be pure overhead, so
-        # the commit is a replace-with-adds instead. Without robots rules
-        # the detection is exact count arithmetic (scheduled rows partition
-        # the read frontier); with robots rules the dropped count comes
-        # from the staged tombstone footer (del_rows − n_sched — no
-        # dedicated frontier count job, ADVICE r4), so the dels are staged
-        # first and simply discarded if the epoch turns out to be a drain.
-        n_robots_dropped = 0
-        staged: Dict[str, dict] = {}
-        if robots_dropped is None:
-            full_consume = (n_sched_total == frontier_in)
-            if full_consume:
-                staged = {"add": self.frontier.stage_adds(adds, epoch + 1)}
-            else:
-                staged = self.frontier.stage_delta(
-                    adds, sched.select(*DeltaFrontier.KEY), epoch + 1)
+        # the commit is a replace-with-adds instead. The detection is exact
+        # count arithmetic: scheduled rows come from the read frontier, so
+        # they cover it only when robots dropped nothing. Otherwise the
+        # consumed keys (scheduled ∪ robots-dropped) are staged as
+        # tombstones, and the staged footer count gives the consumed total
+        # (no dedicated frontier count job, ADVICE r4).
+        full_consume = (n_sched_total == frontier_in)
+        if full_consume:
+            staged = {"add": self.frontier.stage_adds(adds, epoch + 1)}
+            n_consumed = n_sched_total
         else:
-            dels = sched.select(*DeltaFrontier.KEY).unionByName(
-                robots_dropped.select(*DeltaFrontier.KEY))
+            dels = sched.select(*DeltaFrontier.KEY)
+            if robots_dropped is not None:
+                dels = dels.unionByName(
+                    robots_dropped.select(*DeltaFrontier.KEY))
             staged = self.frontier.stage_delta(adds, dels, epoch + 1)
-            n_robots_dropped = staged["del"]["rows"] - n_sched_total
-            full_consume = (staged["del"]["rows"] == frontier_in)
+            n_consumed = staged["del"]["rows"]
+        n_robots_dropped = n_consumed - n_sched_total
         n_adds = staged["add"]["rows"]
-        # live-row arithmetic (no frontier-sized count job): every scheduled
-        # and robots-dropped row leaves, every add enters. Exact since the
-        # delete key includes epoch_added (a tombstone kills exactly one
-        # live row); the zero-progress guard below is a belt for exotic
-        # hand-edited frontier states.
-        n_front_out = frontier_in - n_robots_dropped - n_sched_total + n_adds
+        # live-row arithmetic (no frontier-sized count job): every consumed
+        # row leaves, every add enters. Exact since the delete key includes
+        # epoch_added (a tombstone kills exactly one live row); the
+        # zero-progress guard below is a belt for exotic hand-edited
+        # frontier states.
+        n_front_out = frontier_in - n_consumed + n_adds
         if n_front_out > 0 and n_sched_total == 0 and n_adds == 0:
             # the recount runs pre-commit, so it still sees the rows this
             # epoch's STAGED tombstones will remove — in this branch exactly
@@ -592,12 +583,9 @@ class CrawlEngine:
                 schema=CHECKPOINT_DDL), epoch)
         if full_consume:
             self.frontier.commit_replace(staged["add"])
-            if "del" in staged:                 # robots path: dels staged
-                import shutil as _sh            # but the drain discards them
-                _sh.rmtree(staged["del"]["staging"], ignore_errors=True)
         else:
             self.frontier.commit_delta(epoch + 1, staged)
-            # maintenance: once tombstones outgrow compact_ratio of the add
+            # maintenance: once tombstones outgrow COMPACT_RATIO of the add
             # rows, fold the delta state into one clean snapshot (bounds
             # the read-side anti-join). Crash-safe — old snapshot stays
             # committed until the rewrite's manifest swap. The live-count

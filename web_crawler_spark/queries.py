@@ -59,11 +59,6 @@ def count_by_source(articles: DataFrame) -> DataFrame:
     return articles.groupBy("source_id").agg(F.count("*").alias("n_articles"))
 
 
-def count_total(articles: DataFrame) -> DataFrame:
-    """A2 — SELECT COUNT(*) (database.py:301-306)."""
-    return articles.agg(F.count("*").alias("n_articles"))
-
-
 def count_by_source_name(articles: DataFrame, sources: DataFrame) -> DataFrame:
     """A5 — join + GROUP BY s.name (README.md:114-117) — ONE shuffle: the
     broadcast join keeps articles un-shuffled; only the group-by aggregates."""
@@ -71,13 +66,3 @@ def count_by_source_name(articles: DataFrame, sources: DataFrame) -> DataFrame:
                 F.col("id").alias("source_id"),
                 F.col("name").alias("source_name"))), "source_id")
             .groupBy("source_name").agg(F.count("*").alias("n_articles")))
-
-
-def stats(articles: DataFrame) -> DataFrame:
-    """cli.py:110-136 cmd_stats — one pass, no N+1 loop: single aggregation
-    replaces the reference's per-source query loop (cli.py:58-76)."""
-    return articles.agg(
-        F.count("*").alias("total_articles"),
-        F.countDistinct("source_id").alias("n_sources"),
-        F.min("published_date").alias("min_published"),
-        F.max("published_date").alias("max_published"))

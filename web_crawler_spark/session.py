@@ -13,11 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """Local task slots: SPARK_GRAFT_CPUS when set, else every CPU of the
+    machine."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+
+
 def get_spark(app_name: str = "web-crawler-spark",
               cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(2 * cores, 32)
     b = (SparkSession.builder.appName(app_name)
          .master(f"local[{cores}]")
@@ -31,8 +37,7 @@ def get_spark(app_name: str = "web-crawler-spark",
          # otherwise collapse to 1 split and serialize the parse stage. On a
          # real cluster with TB-scale inputs raise maxPartitionBytes back to
          # 128 MB (the default) — splits are plentiful there.
-         .config("spark.sql.files.maxPartitionBytes",
-                 os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"))
+         .config("spark.sql.files.maxPartitionBytes", "4m")
          .config("spark.sql.files.openCostInBytes", "262144")
          .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
          # local[32] runs every task in the driver JVM: size the heap for 32

@@ -144,25 +144,15 @@ class LakeTable:
         self._commit(epoch)
 
     def overwrite(self, df: DataFrame, epoch: int) -> None:
-        """Replace table contents with df as the single epoch `epoch`
-        (frontier compaction between epochs)."""
-        self.stage_overwrite(df, epoch)
-        self.commit_staged_overwrite(epoch)
-
-    # two-phase overwrite: stage (write data, old contents still committed)
-    # then commit (atomic manifest swap). Lets the epoch pipeline order its
-    # commits so a crash at ANY point leaves a consistent resume state —
-    # the frontier must not advance before the pipeline checkpoint commits.
-    def stage_overwrite(self, df: DataFrame, epoch: int) -> str:
-        staging = self._epoch_dir(epoch) + ".staging"
+        """Replace table contents with df as the single epoch `epoch`.
+        Two-phase: df is written to a staging dir while the old contents
+        stay committed (df may read them), then an atomic manifest swap
+        publishes it and the old dirs are removed."""
+        d = self._epoch_dir(epoch)
+        staging = d + ".staging"
         if os.path.exists(staging):
             shutil.rmtree(staging)
         df.write.mode("overwrite").parquet(staging)
-        return staging
-
-    def commit_staged_overwrite(self, epoch: int) -> None:
-        d = self._epoch_dir(epoch)
-        staging = d + ".staging"
         old = [self._epoch_dir(e) for e in self.committed_epochs() if e != epoch]
         if os.path.exists(d):
             shutil.rmtree(d)
@@ -178,15 +168,15 @@ class LakeTable:
     MERGE_MAX_ROWS = 1_000_000
 
     def merge(self, spark: SparkSession, updates: DataFrame, key: str,
-              epoch: int, max_rows: Optional[int] = None) -> None:
+              epoch: int) -> None:
         """Idempotent upsert (Iceberg `MERGE INTO ... ON key` equivalent):
         existing rows win on key collision, new keys are appended — the
         reference's add-source semantics (get_by_url-else-create,
         /root/reference/app/models/database.py:96-125). Single-writer, like
         every LakeTable op; on Iceberg this is one MERGE statement.
 
-        DIM-ONLY: raises when the current table exceeds ``max_rows``
-        (default MERGE_MAX_ROWS) — see the class attribute comment."""
+        DIM-ONLY: raises when the current table exceeds MERGE_MAX_ROWS —
+        see the class attribute comment."""
         from pyspark.sql import Window
         from pyspark.sql import functions as F
         # de-dup the updates batch itself (deterministic first-by-sort-order
@@ -199,14 +189,13 @@ class LakeTable:
         if cur is None or self.is_empty():
             self.overwrite(updates, epoch)
             return
-        limit = max_rows if max_rows is not None else self.MERGE_MAX_ROWS
         n_cur = cur.count()
-        if n_cur > limit:
+        if n_cur > self.MERGE_MAX_ROWS:
             raise ValueError(
                 f"LakeTable.merge is dim-table-only: {self.path} has "
-                f"{n_cur} rows > {limit}; the O(table) rewrite would make "
-                f"every batch rewrite the whole table. Use append() for "
-                f"fact tables (articles/frontier) instead.")
+                f"{n_cur} rows > {self.MERGE_MAX_ROWS}; the O(table) rewrite "
+                f"would make every batch rewrite the whole table. Use "
+                f"append() for fact tables (articles/frontier) instead.")
         fresh = updates.join(cur.select(key), key, "left_anti")
         self.overwrite(cur.unionByName(fresh), epoch)
 
@@ -280,7 +269,7 @@ class DeltaFrontier:
       manifest stays committed, then ONE atomic manifest replace publishes
       adds and deletes together — a crash at any point leaves either the
       complete old snapshot or the complete new one, never half.
-    * compact(): when the delete set outgrows `compact_ratio` of the add
+    * compact(): when the delete set outgrows COMPACT_RATIO of the add
       rows, materialize the live view and rewrite it as a single add —
       Iceberg's rewrite_data_files maintenance action. Bounds the read-side
       anti-join permanently.
@@ -289,12 +278,12 @@ class DeltaFrontier:
     KEY = ["url", "discovered_seq", "retries", "epoch_added"]
     #: broadcast the delete side under this many rows (~48 B/key row)
     BROADCAST_DELS_MAX = 4_000_000
+    #: compact once tombstone rows exceed this share of the add rows
+    COMPACT_RATIO = 0.3
 
-    def __init__(self, path: str, schema_ddl: Optional[str] = None,
-                 compact_ratio: float = 0.3):
+    def __init__(self, path: str, schema_ddl: Optional[str] = None):
         self.path = path
         self.schema_ddl = schema_ddl
-        self.compact_ratio = compact_ratio
         os.makedirs(path, exist_ok=True)
 
     # -- manifest ------------------------------------------------------------
@@ -378,9 +367,9 @@ class DeltaFrontier:
         an epoch that consumed every live row (the drain case): the new
         live set IS the epoch's additions, so writing tombstones for the
         whole old snapshot (and anti-joining them on every future read)
-        would be pure overhead. Same two-phase discipline as overwrite:
-        swap the manifest to the staged dir, then best-effort GC of the
-        old dirs; a crash leaves either complete snapshot."""
+        would be pure overhead. Two-phase: swap the manifest to the staged
+        dir, then best-effort GC of the old dirs; a crash leaves either
+        complete snapshot."""
         man = self._manifest()
         old = list(man["adds"]) + list(man["dels"])
         final = os.path.join(self.path, staged_add["name"])
@@ -416,15 +405,7 @@ class DeltaFrontier:
         FRESH directory: a crash at any point leaves either the complete
         old snapshot (manifest untouched) or the complete new one; at worst
         an orphan dir leaks, never committed data."""
-        staged = self._stage(df, self._alloc_dir("add", epoch))
-        man = self._manifest()
-        old = list(man["adds"]) + list(man["dels"])
-        final = os.path.join(self.path, staged["name"])
-        os.replace(staged["staging"], final)
-        self._write_manifest({"adds": {staged["name"]: self._entry(staged)},
-                              "dels": {}})
-        for o in old:                           # best-effort post-swap GC
-            shutil.rmtree(os.path.join(self.path, o), ignore_errors=True)
+        self.commit_replace(self._stage(df, self._alloc_dir("add", epoch)))
 
     def _committed_dirs(self, man: dict, kind: str) -> list:
         dirs = [os.path.join(self.path, n) for n in man[kind]]
@@ -503,7 +484,7 @@ class DeltaFrontier:
     def maybe_compact(self, spark: SparkSession, epoch: int,
                       live_rows: Optional[int] = None) -> bool:
         """Rewrite to a clean single-add snapshot when the delete set
-        exceeds compact_ratio of the add rows. Crash-safe: a crash mid-
+        exceeds COMPACT_RATIO of the add rows. Crash-safe: a crash mid-
         compaction leaves the old snapshot committed.
 
         ``live_rows`` (the caller's known live count) prunes the no-win
@@ -513,7 +494,7 @@ class DeltaFrontier:
         taken on that hint (never a truncate), so an overcounting caller
         can only delay compaction, not destroy rows."""
         s = self.stats()
-        if s["add_rows"] == 0 or s["del_rows"] <= self.compact_ratio * s["add_rows"]:
+        if s["add_rows"] == 0 or s["del_rows"] <= self.COMPACT_RATIO * s["add_rows"]:
             return False
         if live_rows == 0:
             return False
