@@ -129,6 +129,88 @@ def test_last_crawled_survives_crash_after_checkpoint(spark, tmp_path, web,
     assert not lost, lost
 
 
+def test_engine_reused_after_crash_redoes_the_epoch(spark, tmp_path, web,
+                                                    monkeypatch):
+    """run() on the same engine object after run_epoch(N) raised before its
+    checkpoint must redo epoch N. The frontier count carried from the
+    crashed attempt (N's output) is not trusted: taken as N's input it made
+    the retry see an empty frontier and stop, with N never checkpointed
+    and the frontier never swapped."""
+    golden = refspec.simulate_crawl(web["pages"], web["seeds"])
+    eng, seeds = _engine(spark, str(tmp_path / "w"), web)
+    eng.bootstrap(seeds)
+    eng.run_epoch(0)
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before the checkpoint")
+    with monkeypatch.context() as m:
+        m.setattr(eng.checkpoints, "append", crash)
+        with pytest.raises(RuntimeError, match="before the checkpoint"):
+            eng.run_epoch(1)
+    eng.run(max_epochs=6)
+    assert 1 in eng.checkpoints.committed_epochs()
+    assert eng.frontier.read(spark).count() == 0
+    assert {r["url"] for r in eng.articles.read(spark).collect()} == \
+        {a["url"] for a in golden["articles"]}
+
+
+def test_sources_survive_crash_inside_replayed_overwrite(spark, tmp_path, web,
+                                                         monkeypatch):
+    """The replay of a crashed epoch N rewrites the sources snapshot N's
+    first run already committed. A crash inside that overwrite (its first
+    os.replace raises) must leave the committed registry readable, and the
+    resume must finish with every source registered and stamped. Removing
+    the committed dir before the rename instead left a listed-but-missing
+    dir: the read dropped it and the resume rewrote the registry empty."""
+    import os
+    wd = str(tmp_path / "w")
+    eng, seeds = _engine(spark, wd, web)
+    eng.bootstrap(seeds)
+    eng.run_epoch(0)
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before the checkpoint")
+    with monkeypatch.context() as m:
+        m.setattr(eng.checkpoints, "append", crash)
+        with pytest.raises(RuntimeError, match="before the checkpoint"):
+            eng.run_epoch(1)
+    assert 2 in eng.sources.committed_epochs()
+    assert 1 not in eng.checkpoints.committed_epochs()
+    before = sorted(tuple(r) for r in eng.sources.read(spark).collect())
+    assert any(r[5] and r[5].endswith("#epoch=000001") for r in before)
+
+    real_replace, raised = os.replace, []
+
+    def replace_once(*a, **k):
+        if not raised:
+            raised.append(a)
+            raise OSError("crash inside the sources overwrite")
+        return real_replace(*a, **k)
+    replay, _ = _engine(spark, wd, web)           # a restarted process
+    overwrite = replay.sources.overwrite
+
+    def crashing_overwrite(*a, **k):
+        with monkeypatch.context() as m:
+            m.setattr(os, "replace", replace_once)
+            return overwrite(*a, **k)
+    with monkeypatch.context() as m:
+        m.setattr(replay.sources, "overwrite", crashing_overwrite)
+        with pytest.raises(OSError, match="inside the sources overwrite"):
+            replay.run_epoch(1)
+    assert raised
+    assert sorted(tuple(r) for r in replay.sources.read(spark).collect()) \
+        == before
+
+    eng2, _ = _engine(spark, wd, web)
+    eng2.run(max_epochs=6)
+    after = {r["id"]: r["last_crawled"]
+             for r in eng2.sources.read(spark).collect()}
+    assert set(after) == {s for (_, s, _) in web["seeds"]}
+    stored = {r["source_id"] for r in
+              eng2.articles.read(spark).select("source_id").collect()}
+    assert all(after[s] and "#epoch=" in after[s] for s in stored), after
+
+
 # ------------------------------------------------------------------- S7/S8
 def _page_body(n_arts, total, page, status="ok"):
     arts = [{"source": {"name": "s"}, "author": "a",

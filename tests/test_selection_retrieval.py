@@ -11,6 +11,7 @@ import importlib
 import io
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from web_crawler_spark.operators import retrieval, selection as sel
@@ -91,6 +92,18 @@ def test_quality_classifier_on_held_out_sentences(spark):
     empty = rows[len(pos) + len(neg)]
     assert (empty["n_tokens"], empty["clf_score"], empty["keep"]) == \
         (0, 0, False)
+
+
+def test_quality_classifier_needs_exactly_one_bias_row(spark):
+    """Weights with no bias row (bucket='') or with two must fail the
+    query, not return no rows or every doc twice."""
+    w = spark.read.parquet(sel.quality_clf_path())
+    docs = _docs(spark, ["the court published its findings", "buy now"])
+    no_bias = w.filter(F.col("bucket") != "")
+    two_bias = w.unionByName(w.filter(F.col("bucket") == ""))
+    for bad, n in ((no_bias, 0), (two_bias, 2)):
+        with pytest.raises(Exception, match=f"exactly one bias row.*got {n}"):
+            sel.quality_clf_df(docs, bad).collect()
 
 
 def test_committed_dsir_weights_reproducible():

@@ -162,10 +162,18 @@ def quality_clf_df(df: DataFrame, weights: DataFrame, text_col: str = "text",
              <=> bias + mean(w) >= 0  <=>  sigmoid(bias + mean(w)) >= 1/2
 
     Returns (id_col, n_tokens bigint, clf_score bigint, keep boolean);
-    empty docs report 0/0/false (no evidence -> drop).
+    empty docs report 0/0/false (no evidence -> drop). A weights table
+    without exactly one bias row fails the query (raise_error) instead of
+    returning no rows (no bias) or every doc once per bias row.
     """
-    bias = weights.filter(F.col("bucket") == "").select(
-        F.col("w").alias("_bias"))
+    # coalesce(1): the count needs no shuffle, so no job of its own
+    bias = (weights.filter(F.col("bucket") == "").coalesce(1)
+            .agg(F.count("*").alias("_nb"), F.max("w").alias("_w"))
+            .select(F.when(F.col("_nb") == 1, F.col("_w")).otherwise(
+                F.raise_error(F.concat(
+                    F.lit("quality_clf_df: weights need exactly one bias "
+                          "row (bucket=''), got "),
+                    F.col("_nb").cast("string")))).alias("_bias")))
     m = weights.filter(F.col("bucket") != "")
     toks = df.select(id_col,
                      F.explode(hashed_features_col(F.col(text_col),

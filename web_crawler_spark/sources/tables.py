@@ -8,6 +8,8 @@ Iceberg snapshots:
   table/
     _manifest.json          # {"epochs": [0, 1, ...]}  — committed snapshots
     epoch=N/part-*.parquet  # one atomic append per epoch
+    epoch=N.k/              # an overwrite that replaced a committed
+                            # epoch=N, listed as {"dirs": {"N": "epoch=N.k"}}
 
 * Writers write epoch=N fully, then commit by atomically rewriting the
   manifest (os.replace — atomic on POSIX). A crash between data write and
@@ -24,12 +26,15 @@ the call sites are isolated here on purpose.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import tempfile
-from typing import List, Optional
+from typing import List, Optional, Union
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -113,23 +118,51 @@ class LakeTable:
         return sorted(self._read_manifest()["epochs"])
 
     def _commit(self, epoch: int) -> None:
-        epochs = set(self.committed_epochs())
-        epochs.add(epoch)
-        _atomic_write_json(self.path, self._manifest_path,
-                           {"epochs": sorted(epochs)})
+        man = self._read_manifest()
+        man["epochs"] = sorted(set(man["epochs"]) | {epoch})
+        _atomic_write_json(self.path, self._manifest_path, man)
 
     # -- io ------------------------------------------------------------------
-    def _epoch_dir(self, epoch: int) -> str:
-        return os.path.join(self.path, f"epoch={epoch}")
+    def _epoch_dir(self, epoch: int, man: Optional[dict] = None) -> str:
+        """The directory of ``epoch`` — ``epoch=N`` unless an overwrite
+        published it under a fresh name (manifest ``dirs``)."""
+        man = self._read_manifest() if man is None else man
+        name = man.get("dirs", {}).get(str(epoch), f"epoch={epoch}")
+        return os.path.join(self.path, name)
 
-    def append(self, df: DataFrame, epoch: int, replace: bool = False) -> None:
+    @functools.cached_property
+    def arrow_schema(self) -> pa.Schema:
+        """The DDL as an Arrow schema, so a driver-written file reads back
+        in Spark with exactly the DDL types (int → int32, bigint → int64)."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType
+        return to_arrow_schema(StructType.fromDDL(self.schema_ddl))
+
+    def _write(self, data: Union[DataFrame, pa.Table], d: str) -> None:
+        """Write one snapshot dir: a DataFrame through Spark, a
+        ``pyarrow.Table`` (the few-hundred-row bookkeeping tables) from the
+        driver as one file, without a Spark job. The Arrow schema blob is
+        left out of the footer; readers take types from the parquet schema."""
+        if isinstance(data, pa.Table):
+            os.makedirs(d)
+            pq.write_table(data.cast(self.arrow_schema),
+                           os.path.join(d, "part-00000.parquet"),
+                           store_schema=False)
+        else:
+            data.write.mode("overwrite").parquet(d)
+
+    def append(self, data: Union[DataFrame, pa.Table], epoch: int,
+               replace: bool = False) -> None:
         """Atomic append: write epoch dir (overwriting any uncommitted orphan
         from a crashed run), then commit the manifest.
 
         replace=True makes the append replay-safe: a crashed epoch whose
         append committed but whose *pipeline* checkpoint (the last table
         committed in run_epoch) did not is rewritten on replay instead of
-        raising — exactly-once output per epoch either way.
+        raising — exactly-once output per epoch either way. A crash inside
+        that rewrite leaves epoch N listed but missing or partial; only the
+        replay reads past it (its readers use ``before_epoch``), and the
+        replay rewrites it.
 
         NOTE for replayed epochs: a plan that READS this table's epoch N
         while replace-appending epoch N would scan files this call deletes —
@@ -140,26 +173,34 @@ class LakeTable:
             raise ValueError(f"epoch {epoch} already committed to {self.path}")
         if os.path.exists(d):
             shutil.rmtree(d)                    # orphan from a crash — redo
-        df.write.mode("overwrite").parquet(d)
+        self._write(data, d)
         self._commit(epoch)
 
-    def overwrite(self, df: DataFrame, epoch: int) -> None:
-        """Replace table contents with df as the single epoch `epoch`.
-        Two-phase: df is written to a staging dir while the old contents
-        stay committed (df may read them), then an atomic manifest swap
-        publishes it and the old dirs are removed."""
-        d = self._epoch_dir(epoch)
-        staging = d + ".staging"
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
-        df.write.mode("overwrite").parquet(staging)
-        old = [self._epoch_dir(e) for e in self.committed_epochs() if e != epoch]
+    def overwrite(self, data: Union[DataFrame, pa.Table], epoch: int) -> None:
+        """Replace table contents with data as the single epoch `epoch`.
+        Two-phase: data is written to a directory the manifest does not
+        list (``epoch=N``, or ``epoch=N.k`` when a committed snapshot holds
+        that name — a replayed overwrite), while the old contents stay
+        committed (data may read them); then ONE atomic manifest swap
+        publishes it and the old dirs are removed. A crash at any step
+        leaves the old or the new snapshot readable, never a listed dir
+        that is gone."""
+        man = self._read_manifest()
+        used = {os.path.basename(self._epoch_dir(e, man))
+                for e in man["epochs"]}
+        name, i = f"epoch={epoch}", 0
+        while name in used:
+            name, i = f"epoch={epoch}.{i}", i + 1
+        d = os.path.join(self.path, name)
         if os.path.exists(d):
-            shutil.rmtree(d)
-        os.replace(staging, d)
-        _atomic_write_json(self.path, self._manifest_path, {"epochs": [epoch]})
-        for o in old:
-            shutil.rmtree(o, ignore_errors=True)
+            shutil.rmtree(d)          # unlisted: orphan of a crashed write
+        self._write(data, d)
+        new = {"epochs": [epoch]}
+        if name != f"epoch={epoch}":
+            new["dirs"] = {str(epoch): name}
+        _atomic_write_json(self.path, self._manifest_path, new)
+        for o in used:
+            shutil.rmtree(os.path.join(self.path, o), ignore_errors=True)
 
     #: merge() rewrites the WHOLE table per call (the sandbox stand-in for
     #: Iceberg MERGE has no partition-pruned rewrite) — it is DIM-TABLE-ONLY
@@ -208,19 +249,46 @@ class LakeTable:
         seen filter would drop the replayed articles and the replace-append
         would then rewrite epoch N empty — measured data loss, pinned by
         test_replay_after_articles_commit_crash)."""
-        epochs = self.committed_epochs()
-        if before_epoch is not None:
-            epochs = [e for e in epochs if e < before_epoch]
-        dirs = [self._epoch_dir(e) for e in epochs]
-        dirs = [d for d in dirs if os.path.exists(d)]
+        dirs = self._committed_dirs(before_epoch)
         if not dirs:
             if self.schema_ddl:
                 return spark.createDataFrame([], schema=self.schema_ddl)
             return None
-        return spark.read.parquet(*dirs)
+        return _reader(spark, self.schema_ddl).parquet(*dirs)
+
+    def read_arrow(self) -> Optional[pa.Table]:
+        """The committed snapshot as one ``pyarrow.Table`` in the DDL's
+        types, read on the driver (dim tables only), or None when nothing
+        is committed."""
+        dirs = self._committed_dirs()
+        if not dirs:
+            return None
+        return pa.concat_tables([pq.read_table(d, schema=self.arrow_schema)
+                                 for d in dirs])
+
+    def _committed_dirs(self, before_epoch: Optional[int] = None) -> list:
+        man = self._read_manifest()
+        epochs = sorted(man["epochs"])
+        if before_epoch is not None:
+            epochs = [e for e in epochs if e < before_epoch]
+        dirs = [self._epoch_dir(e, man) for e in epochs]
+        missing = [d for d in dirs if not os.path.exists(d)]
+        if missing:
+            # fail LOUD, like DeltaFrontier: silently reading fewer epochs
+            # would let a caller rewrite the table from lost rows
+            raise FileNotFoundError(
+                f"{self.path}: manifest lists missing epoch dirs "
+                f"{missing} — the table is corrupt")
+        return dirs
 
     def is_empty(self) -> bool:
         return not self.committed_epochs()
+
+
+def _reader(spark: SparkSession, schema_ddl: Optional[str]):
+    """A parquet reader that takes the table's schema from its DDL: without
+    one, every read runs a Spark job to merge the files' footer schemas."""
+    return spark.read.schema(schema_ddl) if schema_ddl else spark.read
 
 
 def _dir_bytes(d: str) -> int:
@@ -341,8 +409,9 @@ class DeltaFrontier:
         if os.path.exists(staging):
             shutil.rmtree(staging)
         df.write.mode("overwrite").parquet(staging)
-        # parquet footer count — metadata read, no data scan
-        rows = df.sparkSession.read.parquet(staging).count()
+        # row count from the parquet footers, read on the driver: no job
+        rows = sum(pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
+                   for f in os.listdir(staging) if f.endswith(".parquet"))
         return {"name": name, "staging": staging, "rows": rows,
                 "bytes": _dir_bytes(staging)}
 
@@ -399,13 +468,16 @@ class DeltaFrontier:
                 shutil.rmtree(staged[kind]["staging"], ignore_errors=True)
         self._write_manifest(man)               # ONE atomic commit for both
 
-    def overwrite(self, df: DataFrame, epoch: int) -> None:
+    def overwrite(self, df: DataFrame, epoch: int) -> int:
         """Full rewrite as a single add snapshot (bootstrap / compaction /
-        explicit state restore). Two-phase like LakeTable.overwrite, into a
-        FRESH directory: a crash at any point leaves either the complete
-        old snapshot (manifest untouched) or the complete new one; at worst
-        an orphan dir leaks, never committed data."""
-        self.commit_replace(self._stage(df, self._alloc_dir("add", epoch)))
+        explicit state restore); returns its row count. Two-phase like
+        LakeTable.overwrite, into a FRESH directory: a crash at any point
+        leaves either the complete old snapshot (manifest untouched) or the
+        complete new one; at worst an orphan dir leaks, never committed
+        data."""
+        staged = self._stage(df, self._alloc_dir("add", epoch))
+        self.commit_replace(staged)
+        return staged["rows"]
 
     def _committed_dirs(self, man: dict, kind: str) -> list:
         dirs = [os.path.join(self.path, n) for n in man[kind]]
@@ -430,7 +502,7 @@ class DeltaFrontier:
             # no rows anywhere (incl. the drained 0-row snapshot, whose dir
             # may hold no readable parquet footer) — empty by schema
             return spark.createDataFrame([], schema=self.schema_ddl)
-        base = spark.read.parquet(*add_dirs)
+        base = _reader(spark, self.schema_ddl).parquet(*add_dirs)
         del_dirs = self._committed_dirs(man, "dels")
         if not del_dirs:
             return base
@@ -473,7 +545,6 @@ class DeltaFrontier:
         if cache is None:
             cache = self._del_schema_cache = {}
         if d not in cache:
-            import pyarrow.parquet as pq
             fn = next((f for f in sorted(os.listdir(d))
                        if f.endswith(".parquet")), None)
             cache[d] = (fn is None or "epoch_added" in
