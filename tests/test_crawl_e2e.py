@@ -93,6 +93,67 @@ def test_politeness_schedule_respects_delay(spark, workdir, web):
         assert all(g >= 2.0 - 1e-9 for g in gaps), (host, gaps[:5])
 
 
+HA, HB, HC = ("www.ha.rbc.ua", "www.hb.rbc.ua", "www.hc.rbc.ua")
+
+
+def _hub_web():
+    """Three rbc-shaped hosts; archives on HB and HC also cite HA's
+    articles (absolute links), so HA's articles are discovered on three
+    hosts' list pages."""
+    pages = {}
+
+    def art(host, name, aid):
+        url = f"https://{host}/news/{name}{aid}"
+        pages[url] = (
+            f'<html><body><h1 class="article__title">T {name}{aid}</h1>'
+            f'<div class="article__text"><p>body {name}{aid}</p></div>'
+            f"</body></html>").encode()
+        return url
+
+    a_urls = [art(HA, "a", i) for i in range(6)]
+    b_urls = [art(HB, "b", i) for i in range(6)]
+    c_urls = [art(HC, "c", i) for i in range(6)]
+
+    def item(href):
+        return (f'<div><a href="{href}">'
+                f'<span class="time">09:00</span> item</a></div>')
+
+    def archive(host, own, cite=()):
+        url = f"https://{host}/rus/archive/2024/01/01"
+        items = [item(u.replace(f"https://{host}", "")) for u in own]
+        items += [item(u) for u in cite]          # absolute cross-host links
+        pages[url] = (f'<html><body><div class="newsline">'
+                      f'{"".join(items)}</div></body></html>').encode()
+        return url
+
+    seeds = [(archive(HA, a_urls), 0, "rbc"),
+             (archive(HB, b_urls, cite=a_urls), 1, "rbc"),
+             (archive(HC, c_urls, cite=a_urls), 2, "rbc")]
+    return {"pages": pages, "seeds": seeds}
+
+
+def test_cross_host_links_are_budgeted_under_their_host(spark, tmp_path):
+    """A list page's absolute link to another host becomes a frontier row
+    of THAT host: HA's articles, also cited from HB and HC, are one
+    6-row backlog under HA, and epoch 1 serves every host the same
+    per_host_budget."""
+    from pyspark.sql import functions as F
+    web = _hub_web()
+    pages = html_synth.pages_df(spark, web)
+    seeds = html_synth.seeds_df(spark, web)
+    eng = CrawlEngine(spark, str(tmp_path / "w"), pages,
+                      CrawlConfig(request_delay=0.0, per_host_budget=3))
+    eng.bootstrap(seeds)
+    eng.run_epoch(0)
+    eng.run_epoch(1)
+    m = {r["host"]: r["fetched"] for r in
+         eng.metrics.read(spark).filter(F.col("epoch") == 1).collect()}
+    assert m == {HA: 3, HB: 3, HC: 3}
+    left = {r["host"]: r["count"] for r in
+            eng.frontier.read(spark).groupBy("host").count().collect()}
+    assert left == {HA: 3, HB: 3, HC: 3}
+
+
 def test_resume_from_checkpoint(spark, tmp_path, web, golden):
     """Run 1 epoch, 'crash', construct a fresh engine over the same workdir,
     finish — final state identical to an uninterrupted run."""
@@ -150,26 +211,6 @@ def test_metrics_and_checkpoints_written(spark, engine):
     assert set(by_epoch) == set(range(len(cp)))
     assert all(r["watermark_ts"] >= 0 and r["rows_in"] >= r["rows_out"] >= 0
                for r in pck)
-
-
-def test_hot_host_salting_preserves_results(spark, tmp_path, web, golden,
-                                            monkeypatch):
-    """With an aggressive hot threshold every host salts across sub-keys;
-    the article set must be identical to the unsalted run (salting changes
-    partitioning, never results)."""
-    from web_crawler_spark import html_synth
-    from web_crawler_spark.operators import politeness
-    from web_crawler_spark.plans.epoch import CrawlConfig, CrawlEngine
-    monkeypatch.setattr(politeness, "HOT_THRESHOLD", 1)
-    monkeypatch.setattr(politeness, "N_SALT", 4)
-    pages = html_synth.pages_df(spark, web, n_partitions=4)
-    seeds = html_synth.seeds_df(spark, web)
-    eng = CrawlEngine(spark, str(tmp_path / "salted"), pages, CrawlConfig())
-    eng.run(seeds, max_epochs=4)
-    got = {(r.url, r.content) for r in
-           eng.articles.read(spark).select("url", "content").collect()}
-    want = {(a["url"], a["content"]) for a in golden["articles"]}
-    assert got == want
 
 
 def test_replay_after_articles_commit_crash(spark, tmp_path, web):

@@ -433,6 +433,30 @@ def test_schedule_invariants_with_retry_bumps(spark):
             prev = sched
 
 
+def test_schedule_epoch_keeps_first_k_per_host(spark):
+    """Every host gets the same per_host_budget, filled by its first rows
+    in (priority, next_fetch_ts, discovered_seq) order; the rest stay
+    enqueued for a later epoch."""
+    from web_crawler_spark.operators import politeness
+    rows = [(f"u{h}{i}", h, "article", "rbc", 0, 0, i, 0.0, 0, None, None,
+             None, 0)
+            for h in ("a", "b") for i in range(10)]
+    frontier = spark.createDataFrame(
+        rows, schema=("url string, host string, kind string, "
+                      "parser_class string, source_id bigint, priority int, "
+                      "discovered_seq bigint, next_fetch_ts double, "
+                      "retries int, date_str string, list_title string, "
+                      "list_summary string, epoch_added int"))
+    sched = politeness.schedule_epoch(frontier, per_host_budget=3,
+                                      approx_rows=20)
+    got = {}
+    for r in sched.collect():
+        got.setdefault(r["host"], []).append(r["discovered_seq"])
+    assert {h: sorted(s) for h, s in got.items()} == \
+        {"a": [0, 1, 2], "b": [0, 1, 2]}
+    assert sched.columns == frontier.columns + ["sched_ts"]
+
+
 def test_host_delay_broadcast_join_path_matches_inline(spark):
     """schedule_epoch joins the per-host delay map as a broadcast dim:
     with no backoff bumps every row's sched_ts is the closed form

@@ -126,12 +126,12 @@ def test_live_fetch_429_feeds_backoff(spark, tmp_path, web):
 
 def test_respect_sched_waits_out_the_token_bucket(spark):
     """respect_sched=True: wall-clock spacing >= the sched_ts deltas. The
-    5-row schedule spans 1.2 virtual seconds, so the single-partition
-    fetch cannot complete faster than that."""
+    5-row schedule spans 1.2 virtual seconds, so the single-host fetch
+    cannot complete faster than that."""
     pages = {f"https://h.com/{i}": b"x" for i in range(5)}
     df = spark.createDataFrame(
-        [(f"https://h.com/{i}", 0.3 * i) for i in range(5)],
-        schema="url string, sched_ts double").coalesce(1)
+        [(f"https://h.com/{i}", "h.com", 0.3 * i) for i in range(5)],
+        schema="url string, host string, sched_ts double").coalesce(1)
     out = live_fetch.fetch_batched(df, live_fetch.table_transport(pages),
                                    respect_sched=True)
     t0 = time.monotonic()
@@ -139,8 +139,47 @@ def test_respect_sched_waits_out_the_token_bucket(spark):
     elapsed = time.monotonic() - t0
     assert len(rows) == 5 and all(r.fetch_status == "ok" for r in rows)
     assert elapsed >= 1.1, elapsed
-    # and respect_sched demands the schedule column
-    with pytest.raises(ValueError, match="sched_ts"):
-        live_fetch.fetch_batched(df.drop("sched_ts"),
-                                 live_fetch.table_transport(pages),
-                                 respect_sched=True)
+    # and respect_sched demands the schedule and host columns
+    for col in ("sched_ts", "host"):
+        with pytest.raises(ValueError, match=col):
+            live_fetch.fetch_batched(df.drop(col),
+                                     live_fetch.table_transport(pages),
+                                     respect_sched=True)
+
+
+def test_respect_sched_paces_a_host_spread_over_partitions(spark, tmp_path):
+    """The engine hands the fetcher url-hashed rows, so one host spans
+    several partitions. Each host's consecutive fetches must still be at
+    least their sched_ts delta apart: one partition clock per host, not
+    one per partition (which fetched the first row of every partition at
+    once)."""
+    log = str(tmp_path / "fetch-times")
+
+    def timed(urls):
+        import time as _time
+        with open(log, "a") as f:
+            for u in urls:
+                f.write(f"{u} {_time.time()!r}\n")
+        return [("ok", b"x") for _ in urls]
+
+    rows = [(f"https://{h}/{i}", h, 0.25 * i)
+            for h in ("h.com", "g.com") for i in range(4)]
+    df = spark.createDataFrame(
+        rows, schema="url string, host string, sched_ts double"
+    ).repartition(3, "url")
+    spans = (df.select("host", F.spark_partition_id().alias("p"))
+             .distinct().groupBy("host").count().collect())
+    assert all(r["count"] >= 2 for r in spans), spans
+    out = live_fetch.fetch_batched(df, timed, respect_sched=True).collect()
+    assert len(out) == len(rows)
+    sched = {u: s for u, _, s in rows}
+    fetched_at = {}
+    for line in open(log).read().splitlines():
+        u, t = line.split()
+        fetched_at[u] = float(t)
+    assert set(fetched_at) == set(sched)
+    for h in ("h.com", "g.com"):
+        order = sorted((u for u in sched if f"//{h}/" in u), key=sched.get)
+        for prev, cur in zip(order, order[1:]):
+            gap = fetched_at[cur] - fetched_at[prev]
+            assert gap >= sched[cur] - sched[prev] - 0.05, (h, prev, cur, gap)

@@ -38,22 +38,9 @@ def main() -> None:
                     help="shared fixture cache (pages+seeds parquet); "
                          "reused across runs/parallelism levels so the "
                          "python fixture build happens once")
-    ap.add_argument("--rank-budgets", action="store_true",
-                    help="opt-in authority-weighted per-host budgets: log "
-                         "the discovered host link graph and scale each "
-                         "ranked host's epoch budget by its integer-exact "
-                         "PageRank share (default: off, uniform budgets)")
-    ap.add_argument("--rank-budget-floor", type=int, default=100,
-                    help="minimum per-host budget for ranked hosts when "
-                         "--rank-budgets is on")
     ap.add_argument("--per-host-budget", type=int, default=10_000,
                     help="max frontier rows a host may consume per epoch "
                          "(CrawlConfig.per_host_budget)")
-    ap.add_argument("--cross-cite-frac", type=float, default=0.0,
-                    help="fixture knob: fraction of articles also listed "
-                         "on a random other host's archive (gives the "
-                         "host link graph cross-host edges to rank; "
-                         "default 0 = the historical self-loop-only web)")
     args = ap.parse_args()
 
     # spark-submit provides the session config (master, memory, py-files);
@@ -82,15 +69,12 @@ def main() -> None:
     # with different --n-docs/--n-hosts/--hot-frac can never silently reuse
     # a stale fixture built for other parameters (round-2 advice)
     tag = f"n{args.n_docs}_h{args.n_hosts}_hot{args.hot_frac:.2f}"
-    if args.cross_cite_frac:
-        tag += f"_x{args.cross_cite_frac:.2f}"
     pages_path = os.path.join(fdir, f"_pages_fixture_{tag}")
     seeds_path = os.path.join(fdir, f"_seeds_fixture_{tag}")
     if not (os.path.exists(pages_path) and os.path.exists(seeds_path)):
         web = html_synth.synth_web(n_articles=args.n_docs // 10 or 10,
                                    n_hosts=args.n_hosts, seed=42,
-                                   hot_frac=args.hot_frac,
-                                   cross_cite_frac=args.cross_cite_frac)
+                                   hot_frac=args.hot_frac)
         html_synth.pages_df(spark, web, n_partitions=16) \
             .write.mode("overwrite").parquet(pages_path)
         html_synth.seeds_df(spark, web) \
@@ -99,9 +83,7 @@ def main() -> None:
     seeds = spark.read.parquet(seeds_path)
 
     eng = CrawlEngine(spark, args.workdir, pages,
-                      CrawlConfig(per_host_budget=args.per_host_budget,
-                                  rank_host_budgets=args.rank_budgets,
-                                  rank_budget_floor=args.rank_budget_floor))
+                      CrawlConfig(per_host_budget=args.per_host_budget))
     t0 = time.time()
     totals = eng.run(seeds, max_epochs=args.epochs)
     dt = time.time() - t0

@@ -52,22 +52,13 @@ def _zipf_host(rng: random.Random, n_hosts: int, hot_frac: float = 0.30) -> int:
 def synth_web(n_articles: int = 200, n_hosts: int = 8, seed: int = 42,
               days: int = 5, dup_frac: float = 0.15,
               broken_frac: float = 0.05,
-              hot_frac: float = 0.30,
-              cross_cite_frac: float = 0.0) -> Dict[str, object]:
+              hot_frac: float = 0.30) -> Dict[str, object]:
     """Build {url: html_bytes} plus seed list and metadata.
 
     Every host gets one archive page per day listing its article links
     (relative hrefs, duplicates, uppercase/query/fragment noise for the
     canonicalizer), and one page per article. ~broken_frac articles have no
     title (parser must drop them, rbc_ukraine_parser.py:163-165).
-
-    ``cross_cite_frac`` > 0 additionally lists that fraction of articles
-    (absolute URLs) on a random OTHER host's archive of the same day —
-    the cross-host citation structure the authority-weighted budget
-    machinery (CrawlConfig.rank_host_budgets) ranks. Drawn from a
-    SEPARATE rng stream so 0.0 (the default) reproduces the historical
-    fixture byte-for-byte (the 950,155-article stress determinism record
-    depends on the main stream never moving).
     """
     rng = random.Random(seed)
     pages: Dict[str, bytes] = {}
@@ -108,16 +99,6 @@ def synth_web(n_articles: int = 200, n_hosts: int = 8, seed: int = 42,
         per_day_links.setdefault((h, date), []).append((f"/news/a{aid}", hhmm))
         articles_meta.append({"url": url, "host": hosts[h],
                               "date": date.replace("/", "-"), "aid": aid})
-
-    if cross_cite_frac > 0:
-        crng = random.Random(seed + 99)
-        for meta in articles_meta:
-            if crng.random() < cross_cite_frac:
-                h2 = crng.randrange(n_hosts)
-                if hosts[h2] != meta["host"]:
-                    date = meta["date"].replace("-", "/")
-                    per_day_links.setdefault((h2, date), []).append(
-                        (meta["url"], "00:01"))
 
     seeds: List[Tuple[str, int, str]] = []
     sid = 0

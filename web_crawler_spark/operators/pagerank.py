@@ -1,14 +1,14 @@
-"""Link-graph PageRank for frontier priority scoring.
+"""Link-graph PageRank over a host citation graph (the ``host_pagerank``
+query).
 
-A crawl pipeline wants host/page authority to order its frontier (the
-reference crawls a fixed site list, so its priority is static; at
-web scale the priority column this engine's scheduler already consumes —
-plans/epoch.py — would come from exactly this kind of rank). Implemented
-as fixed-iteration power method with ALL arithmetic in scaled integers
-(rank mass = 10^12 micro-units, truncating division), so the result is
-bit-identical regardless of partition count, summation order, or engine —
-which is what lets a DuckDB oracle restate the unrolled iterations
-value-for-value, the same discipline as the k-means quantizer oracle.
+The engine does not consume it: the reference crawls a fixed site list, so
+its crawl order is the static (priority, discovered_seq) order and no
+authority rank feeds the schedule. Implemented as fixed-iteration power
+method with ALL arithmetic in scaled integers (rank mass = 10^12
+micro-units, truncating division), so the result is bit-identical
+regardless of partition count, summation order, or engine — which is what
+lets a DuckDB oracle restate the unrolled iterations value-for-value, the
+same discipline as the k-means quantizer oracle.
 """
 
 from __future__ import annotations
@@ -20,8 +20,7 @@ from pyspark.sql import functions as F
 def pagerank_ranks(edges: DataFrame, n_iters: int = 3,
                    src: str = "src", dst: str = "dst",
                    scale: int = 10 ** 12,
-                   damping_pct: int = 85,
-                   node_type: str = "bigint") -> DataFrame:
+                   damping_pct: int = 85) -> DataFrame:
     """Integer-exact PageRank over a directed edge list.
 
     Semantics (deterministic, engine-portable):
@@ -35,10 +34,8 @@ def pagerank_ranks(edges: DataFrame, n_iters: int = 3,
       - dangling-node mass is dropped (not redistributed) — the standard
         simplification, stated so the oracle matches by construction.
 
-    Returns (node <node_type>, rank_micro bigint) — node_type defaults to
-    bigint (the oracle-gated host_pagerank shape); the engine's
-    authority-weighted budgets pass node_type="string" to rank host names
-    directly (the arithmetic is identical — only the key cast changes).
+    Returns (node bigint, rank_micro bigint), the oracle-gated
+    host_pagerank shape.
 
     100-TB story: the edge list is materialized once (localCheckpoint) and
     re-joined each iteration — at cluster scale it would be bucketed by
@@ -49,8 +46,8 @@ def pagerank_ranks(edges: DataFrame, n_iters: int = 3,
     Lineage is truncated every iteration, so plans stay O(1) deep no
     matter how many power steps run.
     """
-    e = (edges.select(F.col(src).cast(node_type).alias("src"),
-                      F.col(dst).cast(node_type).alias("dst"))
+    e = (edges.select(F.col(src).cast("bigint").alias("src"),
+                      F.col(dst).cast("bigint").alias("dst"))
          .distinct().localCheckpoint(eager=True))
     nodes = (e.select(F.col("src").alias("v"))
              .union(e.select(F.col("dst").alias("v")))

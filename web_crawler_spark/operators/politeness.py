@@ -1,4 +1,4 @@
-"""Per-host politeness scheduling (T2/T3) + hot-host skew handling.
+"""Per-host politeness scheduling (T2/T3).
 
 Reference semantics: one crawler instance per source enforces
 ``request_delay`` seconds between consecutive fetches
@@ -15,14 +15,12 @@ anywhere in the schedule; per-host group size is bounded by
 ``per_host_budget`` (a host can only absorb epoch_seconds/delay URLs per
 epoch anyway).
 
-Skew: the *schedule* must be per-host-sequential, but the downstream
-fetch-join + parse need not be. After scheduling we repartition by
-(host, salt) where hot hosts (row_count > HOT_THRESHOLD) fan out over
-``N_SALT`` deterministic sub-keys — this breaks hot-domain skew in the
-shuffle that feeds the fetch join (north_rule) while politeness ordering
-stays encoded in sched_ts. A host contributes at most ``per_host_budget``
-rows to an epoch, so salting can only fire when that budget exceeds
-HOT_THRESHOLD.
+Skew: the schedule is the only per-host-sequential step, and its hot-host
+skew is handled there, by the ``xxhash64(url) % N_PREBUCKETS`` phase of
+``truncate_per_host``. Downstream, the article rows reach the fetch join
+hash-partitioned by url (the in-epoch dedup window keys on it), so a hot
+host is already spread over every partition; politeness order stays
+encoded in sched_ts.
 """
 
 from __future__ import annotations
@@ -45,23 +43,12 @@ N_PREBUCKETS = 32
 MAX_RETRIES = 3
 #: backoff on HTTP 429 — the API path's 60 s sleep (base_fetcher.py:123-126)
 RATE_LIMIT_PENALTY = 60.0
-#: a host with more rows than this in one epoch's fetch is salted across
-#: N_SALT sub-keys
-HOT_THRESHOLD = 50_000
-N_SALT = 8
 
 
 def truncate_per_host(frontier: DataFrame, per_host_budget: int,
-                      prebucket: bool = True,
-                      budget_col: Optional[str] = None) -> DataFrame:
+                      prebucket: bool = True) -> DataFrame:
     """Keep the first ``per_host_budget`` rows per host in
     (priority, next_fetch_ts, discovered_seq) order.
-
-    With ``budget_col`` set, that column gives each ROW its host's budget
-    (authority-weighted budgets: the engine joins a per-host budget dim
-    before truncation; every row of a host carries the same value, and
-    ``per_host_budget`` stays the upper bound the prebucket phase cuts to —
-    a per-host budget can only be <= it by construction).
 
     With ``prebucket`` the hot host never sorts its full backlog in one
     task: phase 1 windows over (host, xxhash64(url)%N) partitions — the
@@ -71,7 +58,6 @@ def truncate_per_host(frontier: DataFrame, per_host_budget: int,
     from pyspark.sql import Window
     order = [F.col("priority").asc(), F.col("next_fetch_ts").asc(),
              F.col("discovered_seq").asc()]
-    cap = F.col(budget_col) if budget_col else F.lit(per_host_budget)
     if prebucket:
         w1 = Window.partitionBy("host", "__bkt").orderBy(*order)
         frontier = (frontier
@@ -79,11 +65,11 @@ def truncate_per_host(frontier: DataFrame, per_host_budget: int,
                                 F.pmod(F.xxhash64(F.col("url")),
                                        F.lit(N_PREBUCKETS)))
                     .withColumn("__rk", F.row_number().over(w1))
-                    .filter(F.col("__rk") <= cap)
+                    .filter(F.col("__rk") <= per_host_budget)
                     .drop("__rk", "__bkt"))
     w2 = Window.partitionBy("host").orderBy(*order)
     return (frontier.withColumn("__rk", F.row_number().over(w2))
-            .filter(F.col("__rk") <= cap).drop("__rk"))
+            .filter(F.col("__rk") <= per_host_budget).drop("__rk"))
 
 
 def schedule_epoch(frontier: DataFrame,
@@ -91,9 +77,7 @@ def schedule_epoch(frontier: DataFrame,
                    per_host_budget: int = 10_000,
                    epoch_start_ts: float = 0.0,
                    host_delays: Optional[Dict[str, float]] = None,
-                   approx_rows: Optional[int] = None,
-                   host_budgets: Optional[DataFrame] = None,
-                   ) -> DataFrame:
+                   approx_rows: Optional[int] = None) -> DataFrame:
     """Assign sched_ts per row, per-host token bucket.
 
     Input frontier columns: host, priority, next_fetch_ts, discovered_seq
@@ -109,14 +93,6 @@ def schedule_epoch(frontier: DataFrame,
     applyInPandas token bucket; the window form is value-identical and takes
     Python (and the hot host's serial pandas group) out of the schedule.
 
-    ``host_budgets`` (optional, columns host + __budget int) scales the
-    budget PER HOST — the engine's authority-weighted allocation (PageRank
-    over the discovered host link graph; plans/epoch.py). It is a tiny dim
-    (one row per RANKED host) and is broadcast; hosts not in it fall back
-    to ``per_host_budget``. With budgets present the truncation can never
-    be skipped (a budget below the frontier size must bind even when the
-    whole frontier fits the default budget).
-
     ``host_delays`` ({host: seconds}, the robots Crawl-delay map) is joined
     as a broadcast dimension; hosts not in it, and null hosts, pace at
     ``default_delay``.
@@ -126,16 +102,7 @@ def schedule_epoch(frontier: DataFrame,
     # and the prebucket phase only pays off when a single host could exceed
     # the budget — both windows are exact either way, this is plan pruning.
     prebucket = approx_rows is None or approx_rows > 4 * per_host_budget
-    if host_budgets is not None:
-        frontier = (frontier
-                    .join(F.broadcast(host_budgets.select("host", "__budget")),
-                          "host", "left")
-                    .withColumn("__budget",
-                                F.coalesce("__budget",
-                                           F.lit(int(per_host_budget)))))
-        frontier = truncate_per_host(frontier, per_host_budget, prebucket,
-                                     budget_col="__budget").drop("__budget")
-    elif approx_rows is None or approx_rows > per_host_budget:
+    if approx_rows is None or approx_rows > per_host_budget:
         frontier = truncate_per_host(frontier, per_host_budget, prebucket)
 
     if host_delays:
@@ -160,28 +127,6 @@ def schedule_epoch(frontier: DataFrame,
     sched = F.max(F.greatest(base, F.col("next_fetch_ts"))).over(run)
     return (frontier.withColumn("sched_ts", sched.cast("double"))
             .drop("__delay"))
-
-
-def hot_host_salts(frontier: DataFrame) -> Dict[str, int]:
-    """Compute {host: N_SALT} for hosts whose epoch row-count exceeds
-    HOT_THRESHOLD. One tiny aggregation; result is driver-side
-    (broadcast-size: #hot hosts is small by definition)."""
-    rows = (frontier.groupBy("host").count()
-            .filter(F.col("count") > HOT_THRESHOLD).collect())
-    return {r["host"]: N_SALT for r in rows}
-
-
-def salted_repartition(df: DataFrame, salts: Dict[str, int]) -> DataFrame:
-    """Repartition by (host, salt): cold hosts keep salt 0 (one partition →
-    politeness order trivially preserved); hot hosts spread across n_sub
-    deterministic sub-keys keyed by xxhash64(url)."""
-    salt = F.lit(0)
-    for h, n in salts.items():
-        salt = F.when(F.col("host") == h,
-                      F.pmod(F.xxhash64(F.col("url")), F.lit(int(n)))
-                      ).otherwise(salt)
-    return (df.withColumn("host_salt", salt.cast("int"))
-            .repartition("host", "host_salt"))
 
 
 def backoff_requeue(failed: DataFrame, base_penalty: float = 1.0

@@ -28,9 +28,11 @@ sort order (priority, discovered_seq); politeness sched_ts realizes the
 
 Scale notes (the 100 TB story):
   * "fetch" is a join of the frontier against the pages table on url — an
-    equi shuffle join, salted on hot hosts before the shuffle (AQE skew-join
-    is also on as a backstop). At 10^10 pages both sides are
-    bucket-partitionable by url in Iceberg, making the join co-located.
+    equi shuffle join keyed by the unique url, so a hot host is spread over
+    every partition (its schedule-side skew is cut by the prebucketed
+    per-host truncation; AQE skew-join is on as a backstop). At 10^10 pages
+    both sides are bucket-partitionable by url in Iceberg, making the join
+    co-located.
   * the seen filter is one exact anti-join against `articles`, the only
     full-table touch of it, column-pruned to `url`.
   * parse (Arrow UDF) runs only on rows that survived seen+date gates.
@@ -93,9 +95,6 @@ SCRAPED_TS = "2024-01-01T00:00:00"
 # sequential source-then-page-order total order in one sortable bigint
 SEQ_STRIDE = 1_000_000
 
-#: PageRank iterations behind authority-weighted budgets
-RANK_N_ITERS = 3
-
 
 def _fold(rows, key: str, sums=(), maxes=()) -> list:
     """Fold collected cube rows by ``key``: per key, the sum of each
@@ -139,17 +138,6 @@ class CrawlConfig:
     #: per-host delay map from them once at init, and the prefixes filter
     #: the frontier each epoch
     robots_rules: Dict[str, tuple] = field(default_factory=dict)
-    #: OPT-IN authority-weighted per-host budgets (the loop the
-    #: host_pagerank operator's docstring promises): when True the engine
-    #: logs the discovered host→host link graph to a `link_edges` table and
-    #: scales each RANKED host's epoch budget by its integer-exact PageRank:
-    #:     budget(h) = floor + (per_host_budget - floor) * rank_h DIV max_rank
-    #: Hosts never seen in the graph keep the default per_host_budget.
-    #: Default False preserves reference crawl-order semantics exactly
-    #: (the flag changes WHICH rows a budget-bound epoch serves, never the
-    #: per-host politeness order).
-    rank_host_budgets: bool = False
-    rank_budget_floor: int = 100
     #: fetch hook: a callable DataFrame -> DataFrame that appends (html
     #: binary, fetch_status string) to the scheduled rows — e.g.
     #: sources.live_fetch.make_live_fetcher (S4-live). None (default) keeps
@@ -173,14 +161,6 @@ class CrawlEngine:
         self.partition_checkpoints = LakeTable(
             os.path.join(workdir, "partition_checkpoints"), PARTITION_CK_DDL)
         self.sources = LakeTable(os.path.join(workdir, "sources"), SOURCES_DDL)
-        # host→host link graph (only when authority budgets are on — the
-        # LakeTable ctor mkdirs, and a default run must leave the workdir
-        # layout untouched). Edge rows are distinct (src, dst) per epoch —
-        # digest-thin, append-only, replayed idempotently (replace=True).
-        self.link_edges = (
-            LakeTable(os.path.join(workdir, "link_edges"),
-                      "src string, dst string")
-            if self.cfg.rank_host_budgets else None)
         self._frontier_rows: Optional[int] = None  # carried across epochs
         #: robots Crawl-delays above request_delay, {host: seconds}
         self.host_delays = robots.host_delays(self.cfg.robots_rules,
@@ -260,49 +240,12 @@ class CrawlEngine:
         #    approx_rows is only a plan-pruning hint; passing the pre-robots
         #    count is conservative (may truncate when it could skip), never
         #    wrong.
-        #    Authority-weighted budgets (opt-in): rank the committed host
-        #    link graph (strictly BEFORE this epoch — a replay sees the
-        #    same graph) and scale each ranked host's budget by its
-        #    integer-exact PageRank share. The rank join is a broadcast of
-        #    a per-host dim; max_rank rides the same tiny plan as a
-        #    broadcast scalar — no driver collect, no frontier rewrite:
-        #    authority is a SCHEDULE-TIME view, the frontier table itself
-        #    stays untouched (the merge-on-read invariant).
-        host_budgets = None
-        if cfg.rank_host_budgets and self.link_edges is not None:
-            graph_key = tuple(e for e in self.link_edges.committed_epochs()
-                              if e < epoch)
-            cached = getattr(self, "_rank_budget_cache", None)
-            if cached is not None and cached[0] == graph_key:
-                host_budgets = cached[1]
-            elif graph_key:
-                from ..operators.pagerank import pagerank_ranks
-                ranks = pagerank_ranks(
-                    self.link_edges.read(self.spark, before_epoch=epoch),
-                    n_iters=RANK_N_ITERS, node_type="string")
-                floor = min(cfg.rank_budget_floor, cfg.per_host_budget)
-                span = cfg.per_host_budget - floor
-                mx = ranks.agg(F.max("rank_micro").alias("__mx"))
-                # materialized once and CACHED until the committed graph
-                # changes (epochs without list pages append no edges, so a
-                # long article-drain run ranks exactly once) — a replayed
-                # epoch recomputes from the same before_epoch graph, so the
-                # cache can never change the budgets, only skip jobs.
-                host_budgets = (
-                    ranks.crossJoin(F.broadcast(mx))
-                    .select(F.col("node").alias("host"),
-                            (F.lit(floor) +
-                             F.expr(f"({span} * rank_micro) DIV __mx"))
-                            .cast("int").alias("__budget"))
-                    .localCheckpoint(eager=True))
-                self._rank_budget_cache = (graph_key, host_budgets)
         sched = politeness.schedule_epoch(
             frontier, default_delay=cfg.request_delay,
             per_host_budget=cfg.per_host_budget,
             epoch_start_ts=epoch_start_ts,
             host_delays=self.host_delays,
-            approx_rows=frontier_in,
-            host_budgets=host_budgets)
+            approx_rows=frontier_in)
         # Rows the budget did NOT schedule simply STAY in the frontier —
         # the merge-on-read delta commit below never touches them (round-3
         # verdict Next #3: the old design materialized `leftover` via a
@@ -340,17 +283,9 @@ class CrawlEngine:
         fresh = dedup.first_occurrence(fresh, key="url",
                                        order_col="discovered_seq")
 
-        # 4) hot-host salting (breaks per-host skew for the downstream
-        #    stages; the url-keyed fetch join itself is skew-free since url
-        #    is unique), then the fetch join against the pages table
-        #    (the per-host count job is skipped outright when no host can
-        #    exceed the hot threshold: truncation caps every host at
-        #    per_host_budget rows, and no host has more than the frontier)
-        salts = ({} if min(frontier_in, cfg.per_host_budget)
-                 <= politeness.HOT_THRESHOLD
-                 else politeness.hot_host_salts(fresh))
-        if salts:
-            fresh = politeness.salted_repartition(fresh, salts).drop("host_salt")
+        # 4) the fetch join against the pages table, keyed by the unique url:
+        #    the dedup window above leaves the article rows hash-partitioned
+        #    by url, so no host concentrates in one partition downstream
         to_fetch = fresh.unionByName(lists.select(*fresh.columns))
         # the fetcher appends html + fetch_status; a 429 (live transport or
         # a test fake) feeds the backoff requeue in step 6
@@ -382,16 +317,13 @@ class CrawlEngine:
         ok = fetched.filter(F.col("fetch_status") == "ok")
 
         # 5a) list pages → extracted links (U1) → new frontier article rows
-        link_cols = ["url", "parser_class", "source_id", "priority",
-                     "discovered_seq"]
-        if cfg.rank_host_budgets:
-            link_cols.append("host")       # src side of the host link graph
         links = (ok.filter(F.col("kind") == "list")
-                 .select(*link_cols,
+                 .select("url", "parser_class", "source_id", "priority",
+                         "discovered_seq",
                          F.posexplode_outer(F.col("ext.links"))
                          .alias("pos", "link"))
                  .filter(F.col("link").isNotNull()))
-        disc_cols = [
+        discovered = links.select(
             F.col("link.url").alias("url"),
             F.lit("article").alias("kind"),
             F.col("parser_class"), F.col("source_id"), F.col("priority"),
@@ -402,28 +334,9 @@ class CrawlEngine:
             F.col("link.date_str").alias("date_str"),
             F.col("link.title").alias("list_title"),
             F.col("link.summary").alias("list_summary"),
-            F.lit(epoch + 1).alias("epoch_added")]
-        if cfg.rank_host_budgets:
-            disc_cols.append(F.col("host").alias("__src_host"))
-        discovered = links.select(*disc_cols)
+            F.lit(epoch + 1).alias("epoch_added"))
         discovered = (canon.with_canonical(discovered)
                       .drop("url").withColumnRenamed("url_canon", "url"))
-        if cfg.rank_host_budgets and self.link_edges is not None and \
-                n_sched_total - n_sched_arts > 0:
-            # distinct host→host citations discovered this epoch (self-loops
-            # carry no authority signal). A replay overwrites its own epoch
-            # key (replace=True) — the graph a later epoch ranks is
-            # identical either way. Cost: one extra evaluation of the
-            # link-canonicalize pass, only when the feature is on AND the
-            # epoch actually scheduled list pages (links can only come from
-            # lists, so an article-only epoch provably discovers no edges —
-            # skipping keeps the committed graph key stable and the budget
-            # cache above warm through a long drain).
-            self.link_edges.append(
-                discovered.select(F.col("__src_host").alias("src"),
-                                  F.col("host").alias("dst"))
-                .filter(F.col("src") != F.col("dst")).distinct(),
-                epoch, replace=True)
         discovered = discovered.select(*FRONTIER_COLS)
         # in-page + cross-page dedup of discoveries, order preserved (D1)
         discovered = dedup.first_occurrence(discovered, "url", "discovered_seq")
@@ -462,11 +375,12 @@ class CrawlEngine:
         # 7) lineage + metrics + checkpoint + commits (atomic per table).
         #    ONE aggregation over the checkpointed fetch result, collected
         #    once, feeds every count this epoch needs. The cube keys on
-        #    (physical partition, host, source): rows are host-clustered by
-        #    the politeness repartition, so it holds ~n_hosts × partitions
-        #    rows, and the partition lineage, the epoch totals, the per-host
-        #    metrics and S13's touched sources are folded from those rows on
-        #    the driver — no re-aggregation job, no rescan of `fetched`.
+        #    (physical partition, host, source): `fetched` is url-hashed by
+        #    the dedup window, so a host spreads over the partitions and the
+        #    cube holds at most partitions × hosts × sources rows. The
+        #    partition lineage, the epoch totals, the per-host metrics and
+        #    S13's touched sources are folded from those rows on the
+        #    driver — no re-aggregation job, no rescan of `fetched`.
         ok_i = F.when(F.col("fetch_status") == "ok", 1).otherwise(0)
         art_i = F.when(F.col("kind") == "article", 1).otherwise(0)
         # parsed flag == finish_articles' keep-predicate, restated on `ext`

@@ -20,13 +20,14 @@ from there into the same extract-before-checkpoint pipeline the join path
 feeds (html never touches block storage).
 
 Politeness rides IN the rows: the engine's ``sched_ts`` is already a
-per-host token-bucket schedule, so ``respect_sched=True`` sorts each
-partition by sched_ts and sleeps each row's remaining delay relative to
-the partition clock — the reference's serial per-host cadence without
-serializing across hosts (hosts live in different partitions after
-salted_repartition). With respect_sched the transport is called serially;
-without it (API-style bulk pulls) URLs fan out over a thread pool —
-network IO releases the GIL.
+per-host token-bucket schedule, so ``respect_sched=True`` repartitions the
+rows by host (the engine's to-fetch rows arrive url-hashed, one host over
+every partition), sorts each partition by sched_ts and sleeps each row's
+remaining delay relative to the partition clock — the reference's serial
+per-host cadence, with every row of a host on one partition clock and
+distinct hosts spread over partitions. With respect_sched the transport
+is called serially; without it (API-style bulk pulls) URLs fan out over a
+thread pool — network IO releases the GIL.
 
 Capability gate: the DEFAULT transport does real urllib GETs and REFUSES
 to run unless ``WCS_LIVE_FETCH=1`` — this sandbox has no network, and a
@@ -114,22 +115,25 @@ def fetch_batched(to_fetch: DataFrame,
     """Append (html binary, fetch_status string) to ``to_fetch`` by
     resolving its ``url`` column through ``transport`` in Arrow batches.
 
-    respect_sched=True (requires a ``sched_ts`` column): partitions are
-    sorted by sched_ts and each row waits out its remaining politeness
-    delay relative to the partition's first row before its (serial)
-    fetch — wall-clock cadence == the token-bucket schedule. Without it,
-    each batch's URLs are fetched concurrently on ``concurrency`` threads
-    in ``chunk``-sized transport calls.
+    respect_sched=True (requires ``host`` and ``sched_ts`` columns): the
+    rows are repartitioned by host, so each host sits on one partition
+    clock, partitions are sorted by sched_ts and each row waits out its
+    remaining politeness delay relative to the partition's first row
+    before its (serial) fetch — wall-clock cadence == the token-bucket
+    schedule. Without it, each batch's URLs are fetched concurrently on
+    ``concurrency`` threads in ``chunk``-sized transport calls.
     """
     tr = transport or default_transport()
     out_schema = StructType(list(to_fetch.schema.fields) + FETCH_COLS)
     url_idx = to_fetch.columns.index("url")
     sched_idx = None
     if respect_sched:
-        if "sched_ts" not in to_fetch.columns:
-            raise ValueError("respect_sched requires a sched_ts column")
+        for c in ("host", "sched_ts"):
+            if c not in to_fetch.columns:
+                raise ValueError(f"respect_sched requires a {c} column")
         sched_idx = to_fetch.columns.index("sched_ts")
-        to_fetch = to_fetch.sortWithinPartitions("sched_ts")
+        to_fetch = (to_fetch.repartition("host")
+                    .sortWithinPartitions("sched_ts"))
 
     def gen(batches) -> Iterator:
         import time
