@@ -197,9 +197,10 @@ def test_metrics_and_checkpoints_written(spark, engine):
     m = engine.metrics.read(spark)
     assert m.count() > 0
     assert set(m.columns) == {"epoch", "host", "fetched", "parsed",
-                              "discovered", "skipped_dup", "skipped_date",
-                              "skipped_robots", "errors"}
+                              "discovered", "errors"}
     cp = engine.checkpoints.read(spark).orderBy("epoch").collect()
+    assert {"skipped_dup", "skipped_date", "skipped_robots"} <= \
+        set(cp[0].asDict())
     assert [r["epoch"] for r in cp] == list(range(len(cp)))
     assert cp[-1]["frontier_out"] == 0     # drained
     # per-partition watermarked lineage (north_rule): every epoch has >=1
@@ -211,45 +212,3 @@ def test_metrics_and_checkpoints_written(spark, engine):
     assert set(by_epoch) == set(range(len(cp)))
     assert all(r["watermark_ts"] >= 0 and r["rows_in"] >= r["rows_out"] >= 0
                for r in pck)
-
-
-def test_replay_after_articles_commit_crash(spark, tmp_path, web):
-    """THE OTHER crash window (found round 5): articles.append(N) committed,
-    pipeline checkpoint for N not yet. The replay of N must re-produce
-    epoch N's output — before the as-of (before_epoch) seen reads, the
-    replay saw its own orphan articles as already-seen, filtered them all
-    out, and replace-appended epoch N EMPTY: measured loss of every
-    article the epoch had stored."""
-    import json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-    wd = str(tmp_path / "lake-replay")
-    pages = html_synth.pages_df(spark, web)
-    seeds = html_synth.seeds_df(spark, web)
-    eng = CrawlEngine(spark, wd, pages, CrawlConfig())
-    eng.bootstrap(seeds)
-    eng.run_epoch(0)
-    stale = [r.asDict() for r in eng.frontier.read(spark).collect()]
-    stale_df = spark.createDataFrame(
-        stale, schema=eng.frontier.read(spark).schema)
-    eng.run_epoch(1)
-    n_after_1 = eng.articles.read(spark).count()
-    assert n_after_1 > 0
-    # craft the crash state: frontier stale at epoch-1 input, epoch-1
-    # checkpoint missing, epoch-1 articles/metrics committed
-    eng.frontier.overwrite(stale_df, 1)
-    ck = os.path.join(wd, "checkpoints", "_manifest.json")
-    man = json.load(open(ck))
-    man["epochs"] = [e for e in man["epochs"] if e != 1]
-    json.dump(man, open(ck, "w"))
-    shutil.rmtree(os.path.join(wd, "checkpoints", "epoch=1"),
-                  ignore_errors=True)
-    eng2 = CrawlEngine(spark, wd, pages, CrawlConfig())
-    eng2.run(max_epochs=3)                     # resumes AT epoch 1 (replay)
-    arts = eng2.articles.read(spark)
-    assert arts.count() == n_after_1           # nothing lost
-    assert arts.groupBy("url").count().filter(
-        F.col("count") > 1).count() == 0       # nothing duplicated
-

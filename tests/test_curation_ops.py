@@ -30,6 +30,15 @@ def test_connected_components_min_label_multi_hop(spark):
     assert set(got.values()) == {1} and len(got) == 9
 
 
+def test_connected_components_raises_when_rounds_run_out(spark):
+    # a 12-node chain needs 11 label-moving rounds: with 5 allowed, the
+    # labels are still split, and returning them would be a wrong answer
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 12)], "id_a bigint, id_b bigint")
+    with pytest.raises(RuntimeError, match="did not converge in 5 rounds"):
+        dedup.connected_components(edges, max_iters=5)
+
+
 def test_duplicate_clusters_transitive_merge(spark):
     # A~B and B~C above the 0.8 jaccard bar, A~C below it: pairwise dedup
     # sees two pairs, cluster dedup must emit ONE 3-doc cluster.

@@ -173,19 +173,55 @@ def test_read_fails_loud_on_missing_committed_dir(spark, tmp_path):
 
 
 def test_compaction_skipped_when_drained(spark, tmp_path):
-    """live_rows=0 prunes the no-win compaction (full read, nothing out) —
-    and the hint can only SKIP, never truncate, so a wrong count cannot
-    destroy rows."""
+    """A delta that kills every live row records 0 live rows, and the
+    no-win compaction (full read, nothing out) is skipped."""
     t = DeltaFrontier(str(tmp_path / "f"), DDL)
     t.overwrite(_rows(spark, 50), epoch=0)
     dels = _rows(spark, 50).select("url", "discovered_seq", "retries", "epoch_added")
     t.commit_delta(1, t.stage_delta(_rows(spark, 0, start=500), dels, 1))
-    assert not t.maybe_compact(spark, 2, live_rows=0)
+    assert t.stats()["live_rows"] == 0
+    assert not t.maybe_compact(spark, 2)
     assert t.stats()["del_rows"] == 50          # tombstones kept, no read
     assert t.read(spark).count() == 0
-    # without the hint the same state compacts as before
-    assert t.maybe_compact(spark, 2)
-    assert t.stats()["del_rows"] == 0
+
+
+def test_manifest_records_epoch_and_live_rows(spark, tmp_path):
+    """Every swap records the epoch the snapshot feeds and its live row
+    count; the engine runs only that epoch and resumes there; a manifest
+    from before the fields existed is refused, naming the workdir."""
+    import json
+    import re
+
+    import pytest
+    t = DeltaFrontier(str(tmp_path / "f"), DDL)
+    assert (t.stats()["epoch"], t.stats()["live_rows"]) == (0, 0)
+    t.overwrite(_rows(spark, 10), epoch=0)
+    assert (t.stats()["epoch"], t.stats()["live_rows"]) == (0, 10)
+    t.commit_delta(1, t.stage_delta(
+        _rows(spark, 3, epoch_added=1, start=100),
+        _rows(spark, 4).select(*DeltaFrontier.KEY), 1))
+    assert (t.stats()["epoch"], t.stats()["live_rows"]) == (1, 9)
+    assert t.read(spark).count() == 9
+    t.commit_replace(t.stage_adds(_rows(spark, 2, start=200), 2))
+    assert (t.stats()["epoch"], t.stats()["live_rows"]) == (2, 2)
+
+    pages = spark.createDataFrame(
+        [], schema="url string, warc_ts timestamp, html binary, "
+                   "text string, lang string")
+    wd = tmp_path / "lake"
+    eng = CrawlEngine(spark, str(wd), pages, CrawlConfig())
+    eng.frontier.overwrite(_rows(spark, 5), epoch=3)
+    with pytest.raises(ValueError, match="feeds epoch 3"):
+        eng.run_epoch(0)
+    assert CrawlEngine(spark, str(wd), pages).run()["epochs"] == 1
+    assert eng.frontier.stats()["epoch"] == 4
+
+    with open(eng.frontier._manifest_path) as f:
+        man = json.load(f)
+    del man["epoch"], man["rows"]
+    eng.frontier._write_manifest(man)
+    with pytest.raises(ValueError, match=f"workdir {re.escape(str(wd))} .*older"):
+        CrawlEngine(spark, str(wd), pages).run()
 
 
 def test_commit_replace_drain_fast_path(spark, tmp_path):
@@ -243,37 +279,3 @@ def test_backoff_converges_with_frozen_clock(spark, tmp_path, inject_429):
     assert victim in stored, "429'd url starved behind the frozen clock"
     assert stored == {a["url"] for a in golden["articles"]}
     assert eng.frontier.read(spark).count() == 0
-
-
-def test_read_applies_legacy_3key_deletes(spark, tmp_path):
-    """Round-5 upgrade compat: delete files written by the pre-round-5
-    format carry only (url, discovered_seq, retries, __del_epoch). A
-    resumed legacy workdir must stay readable — legacy dels join on the
-    3-key + sequence rule, new dels on the full equality key, in the same
-    table."""
-    import json as _json
-    t = DeltaFrontier(str(tmp_path / "f"), DDL)
-    t.overwrite(_rows(spark, 10), epoch=0)
-    # hand-write a LEGACY del dir killing rows 0-3 (sequence rule: only
-    # epoch_added <= 0) and register it in the manifest like old code did
-    legacy = _rows(spark, 4).select("url", "discovered_seq", "retries") \
-        .withColumn("__del_epoch", F.lit(0).cast("int"))
-    ldir = os.path.join(t.path, "del=1")
-    legacy.coalesce(1).write.parquet(ldir)
-    man = t._manifest()
-    man["dels"]["del=1"] = {"rows": 4, "bytes": _dir_bytes(ldir)}
-    t._write_manifest(man)
-    assert t.read(spark).count() == 6
-    # re-add one killed url with a NEWER epoch_added: the sequence rule
-    # must keep it alive (legacy semantics preserved)
-    t.commit_delta(2, t.stage_delta(
-        _rows(spark, 1, epoch_added=2),
-        _rows(spark, 0).select(*DeltaFrontier.KEY), 2))
-    assert t.read(spark).count() == 7
-    # and a NEW-format delete on the re-added row kills exactly it
-    t.commit_delta(3, t.stage_delta(
-        _rows(spark, 0, start=900),
-        _rows(spark, 1, epoch_added=2).select(*DeltaFrontier.KEY), 3))
-    live = t.read(spark).collect()
-    assert len(live) == 6
-    assert all(r.epoch_added == 0 for r in live)

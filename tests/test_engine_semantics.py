@@ -99,10 +99,10 @@ def test_sources_registry_and_last_crawled(spark, tmp_path, web):
 
 def test_last_crawled_survives_crash_after_checkpoint(spark, tmp_path, web,
                                                       monkeypatch):
-    """A crash between epoch N's pipeline checkpoint and its frontier swap
-    must not lose N's S13 stamp: run() resumes at N+1, so no replay of N
-    will ever stamp it again. Every source that stored articles in N reads
-    a stamp of epoch >= N after the resume."""
+    """A crash between epoch N's checkpoint row and its frontier swap must
+    not lose N's S13 stamp: the frontier still feeds N, so run() redoes N
+    and stamps it again. Every source that stored articles in N reads a
+    stamp of epoch >= N after the resume."""
     from web_crawler_spark.sources.tables import DeltaFrontier
     wd = str(tmp_path / "w")
     eng, seeds = _engine(spark, wd, web)
@@ -132,10 +132,9 @@ def test_last_crawled_survives_crash_after_checkpoint(spark, tmp_path, web,
 def test_engine_reused_after_crash_redoes_the_epoch(spark, tmp_path, web,
                                                     monkeypatch):
     """run() on the same engine object after run_epoch(N) raised before its
-    checkpoint must redo epoch N. The frontier count carried from the
-    crashed attempt (N's output) is not trusted: taken as N's input it made
-    the retry see an empty frontier and stop, with N never checkpointed
-    and the frontier never swapped."""
+    checkpoint must redo epoch N: the engine carries no state across
+    epochs, so the retry takes N's input from the frontier manifest, which
+    the crashed attempt never swapped."""
     golden = refspec.simulate_crawl(web["pages"], web["seeds"])
     eng, seeds = _engine(spark, str(tmp_path / "w"), web)
     eng.bootstrap(seeds)
@@ -300,9 +299,8 @@ def test_metrics_include_skipped_robots(spark, tmp_path, web):
         spark, str(tmp_path / "w"), pages,
         CrawlConfig(robots_rules={host: (0.0, ["/news/"])}))
     eng.run(seeds, max_epochs=4)
-    m = eng.metrics.read(spark)
-    assert "skipped_robots" in m.columns
-    total = m.select(F.max("skipped_robots")).first()[0]
+    total = eng.checkpoints.read(spark).select(
+        F.sum("skipped_robots")).first()[0]
     assert total and total > 0
     # and the blocked host stored no articles
     blocked = (eng.articles.read(spark)

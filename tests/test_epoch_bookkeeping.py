@@ -1,7 +1,8 @@
 """Epoch bookkeeping: the Spark job budget of each epoch kind, the committed
 rows and Spark-read schemas of the four small tables (partition_checkpoints,
-metrics, checkpoints, sources), staged row counts from parquet footers, and
-the LakeTable overwrite/read contract those tables rely on."""
+metrics, checkpoints, sources) and of the frontier's tombstones, staged row
+counts from parquet footers, and the LakeTable overwrite/read/rollback
+contract those tables rely on."""
 
 import json
 import os
@@ -69,13 +70,15 @@ def test_bookkeeping_rows(spark, crawl, web):
     assert [(s["frontier_in"], s["articles_out"], s["frontier_out"])
             for s in stats] == [(34, 0, 178), (178, 67, 106), (106, 67, 34),
                                 (34, 31, 2), (2, 2, 0)]
-    # checkpoints: one row per epoch, exactly run_epoch's returned stats
+    # checkpoints: one row per epoch, exactly run_epoch's returned stats,
+    # plus the epoch's (skipped_dup, skipped_date, skipped_robots)
+    skipped = [(0, 0, 0), (0, 5, 0), (0, 5, 0), (0, 1, 0), (0, 0, 0)]
     ck = sorted(tuple(r) for r in eng.checkpoints.read(spark).collect())
     assert ck == [(e, float(e), s["frontier_in"], s["frontier_out"],
-                   s["articles_out"]) for e, s in enumerate(stats)]
+                   s["articles_out"], *skipped[e])
+                  for e, s in enumerate(stats)]
 
-    # metrics: per epoch Σfetched, Σparsed, Σerrors, host rows and the
-    # epoch-wide (skipped_dup, skipped_date, skipped_robots) on every row
+    # metrics: per epoch Σfetched, Σparsed, Σerrors, host rows, discovered
     m = eng.metrics.read(spark).collect()
     per = {}
     for r in m:
@@ -84,13 +87,12 @@ def test_bookkeeping_rows(spark, crawl, web):
         a[1] += r["parsed"]
         a[2] += r["errors"]
         a[3] += 1
-        a[4].add((r["discovered"], r["skipped_dup"], r["skipped_date"],
-                  r["skipped_robots"]))
-    assert per == {0: [34, 0, 0, 9, {(0, 0, 0, 0)}],
-                   1: [72, 67, 0, 9, {(0, 0, 5, 0)}],
-                   2: [72, 67, 0, 9, {(0, 0, 5, 0)}],
-                   3: [32, 31, 0, 8, {(0, 0, 1, 0)}],
-                   4: [2, 2, 0, 1, {(0, 0, 0, 0)}]}
+        a[4].add(r["discovered"])
+    assert per == {0: [34, 0, 0, 9, {0}],
+                   1: [72, 67, 0, 9, {0}],
+                   2: [72, 67, 0, 9, {0}],
+                   3: [32, 31, 0, 8, {0}],
+                   4: [2, 2, 0, 1, {0}]}
     assert len({(r["epoch"], r["host"]) for r in m}) == len(m)
     # Σfetched = every fetched url: the seeds' list pages plus each
     # article the reference fetched (stored or title-less)
@@ -139,6 +141,30 @@ def test_bookkeeping_tables_read_with_ddl_schema(spark, crawl):
             StructType.fromDDL(ddl).simpleString(), table.path
 
 
+def test_frontier_tombstones_read_with_ddl_schema(spark, tmp_path):
+    """A frontier read with tombstones runs no Spark job before an action:
+    the delete dirs are read with their fixed schema, not by merging the
+    files' footers."""
+    ddl = "url string, discovered_seq bigint, retries int, epoch_added int"
+    t = DeltaFrontier(str(tmp_path / "f"), ddl)
+    rows = spark.createDataFrame(
+        [(f"https://h.com/{i}", i, 0, 0) for i in range(10)], ddl)
+    t.overwrite(rows, 0)
+    for epoch in (1, 2):                   # two tombstone dirs
+        dels = rows.filter(rows.discovered_seq == epoch)
+        t.commit_delta(epoch, t.stage_delta(rows.limit(0), dels, epoch))
+    assert t.stats()["del_rows"] == 2
+    sc = spark.sparkContext
+    group = "tombstone-schema"
+    sc.setJobGroup(group, "frontier read plan")
+    try:
+        live = t.read(spark)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert live.count() == 8
+
+
 def test_staged_footer_count_matches_spark_count(spark, tmp_path):
     ddl = "url string, discovered_seq bigint, retries int, epoch_added int"
     t = DeltaFrontier(str(tmp_path / "f"), ddl)
@@ -176,4 +202,6 @@ def test_lake_table_overwrite_replay_and_missing_dir(spark, tmp_path):
     shutil.rmtree(t._epoch_dir(4))
     with pytest.raises(FileNotFoundError, match="corrupt"):
         t.read(spark)
-    assert t.read(spark, before_epoch=4).count() == 1
+    t.rollback_to(4)                           # unlists epoch 4 and later
+    assert t.committed_epochs() == [3]
+    assert t.read(spark).count() == 1

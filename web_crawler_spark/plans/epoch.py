@@ -17,7 +17,7 @@ schedule checkpoint as an Observation, one (partition, host, source) cube
 of the fetch result is collected once, and partition_checkpoints, metrics,
 the sources stamp (S13) and the checkpoint row are folded from it and
 written by the driver with pyarrow; staged frontier row counts come from
-parquet footers.
+parquet footers, and the epoch's input count from the frontier manifest.
 
 Reference lifecycle being reproduced (SURVEY.md §3.1): get_article_urls →
 per-URL parse_article → date filter → batched sink, one source at a time
@@ -36,9 +36,11 @@ Scale notes (the 100 TB story):
   * the seen filter is one exact anti-join against `articles`, the only
     full-table touch of it, column-pruned to `url`.
   * parse (Arrow UDF) runs only on rows that survived seen+date gates.
-  * every epoch appends to articles/partition_checkpoints/metrics/
-    checkpoints atomically; a crash resumes from the last committed epoch
-    (tables.LakeTable contract).
+  * an epoch is committed by ONE atomic write: the frontier manifest swap,
+    which records the epoch the new frontier feeds. Everything an epoch
+    writes before it (articles, partition_checkpoints, metrics, sources,
+    checkpoints) is uncommitted until then; a crashed attempt's rows are
+    dropped when the epoch is redone (tables.DeltaFrontier contract).
 """
 
 from __future__ import annotations
@@ -70,14 +72,15 @@ ARTICLES_DDL = ("source_id bigint, url string, title string, content string, "
                 "published_date string, scraped_date string, epoch int, "
                 "priority int, discovered_seq bigint")
 METRICS_DDL = ("epoch int, host string, fetched bigint, parsed bigint, "
-               "discovered bigint, skipped_dup bigint, skipped_date bigint, "
-               "skipped_robots bigint, errors bigint")
+               "discovered bigint, errors bigint")
 SOURCES_DDL = ("id bigint, name string, url string, parser_class string, "
                "is_active int, last_crawled string, created_at string")
 # mirrors the reference sources DDL (models/database.py:40-50); last_crawled
 # per-epoch update = S13 (database.py:134-146, applied crawler_manager.py:134)
 CHECKPOINT_DDL = ("epoch int, watermark_ts double, frontier_in bigint, "
-                  "frontier_out bigint, articles_out bigint")
+                  "frontier_out bigint, articles_out bigint, "
+                  "skipped_dup bigint, skipped_date bigint, "
+                  "skipped_robots bigint")
 # per-partition lineage rows (north_rule: per-partition watermarked
 # checkpoints): one row per physical fetch partition per epoch; watermark is
 # the partition's max politeness-clock sched_ts
@@ -161,7 +164,6 @@ class CrawlEngine:
         self.partition_checkpoints = LakeTable(
             os.path.join(workdir, "partition_checkpoints"), PARTITION_CK_DDL)
         self.sources = LakeTable(os.path.join(workdir, "sources"), SOURCES_DDL)
-        self._frontier_rows: Optional[int] = None  # carried across epochs
         #: robots Crawl-delays above request_delay, {host: seconds}
         self.host_delays = robots.host_delays(self.cfg.robots_rules,
                                               self.cfg.request_delay)
@@ -204,21 +206,26 @@ class CrawlEngine:
                  F.lit(None).cast("string").alias("list_title"),
                  F.lit(None).cast("string").alias("list_summary"),
                  F.lit(0).alias("epoch_added")))
-        # the staged footer count seeds epoch 0's frontier_in (no count job)
-        self._frontier_rows = self.frontier.overwrite(f, epoch=0)
+        self.frontier.overwrite(f, epoch=0)
 
     # ----------------------------------------------------------------- epoch
     def run_epoch(self, epoch: int) -> Dict[str, int]:
         cfg = self.cfg
-        epoch_start_ts = float(epoch) * cfg.per_host_budget * cfg.request_delay
-        # carried from the previous epoch's frontier write (one count saved);
-        # cleared until this epoch commits, so a retry after a crash counts
-        frontier_in, self._frontier_rows = self._frontier_rows, None
-        if frontier_in is None:
-            frontier_in = self.frontier.read(self.spark).count()
+        head = self.frontier.stats()
+        if epoch != head["epoch"]:
+            raise ValueError(f"run_epoch({epoch}): the frontier at "
+                             f"{self.frontier.path} feeds epoch "
+                             f"{head['epoch']}")
+        # Nothing is committed before the frontier swap below: rows of this
+        # epoch (or later) in the append tables are a crashed attempt's
+        # output, dropped so the epoch is redone whole.
+        for t in (self.articles, self.metrics, self.partition_checkpoints,
+                  self.checkpoints):
+            t.rollback_to(epoch)
+        frontier_in = head["live_rows"]
         if frontier_in == 0:
-            self._frontier_rows = 0
             return {"frontier_in": 0, "articles_out": 0, "frontier_out": 0}
+        epoch_start_ts = float(epoch) * cfg.per_host_budget * cfg.request_delay
         frontier = self.frontier.read(self.spark)
 
         # 0) robots gate: disallowed paths never reach the scheduler. The
@@ -265,19 +272,14 @@ class CrawlEngine:
 
         # 2) global seen-filter for article rows: one exact anti-join
         #    against the stored urls (column-pruned to the parquet scan).
-        #    The seen side is read AS-OF this epoch (before_epoch): after a
-        #    crash between epoch N's articles append and the pipeline
-        #    checkpoint, the replay of N must not treat its own orphan
-        #    output as already-seen (that filtered the replayed articles
-        #    out and rewrote the epoch EMPTY — the data-loss window
-        #    test_replay_after_articles_commit_crash pins).
+        #    The rollback above leaves only earlier epochs' articles, so a
+        #    redone epoch never sees its own crashed output as seen.
         arts = sched.filter(F.col("kind") == "article")
         lists = sched.filter(F.col("kind") == "list")
         fresh = arts
-        if any(e < epoch for e in self.articles.committed_epochs()):
-            fresh = arts.join(
-                self.articles.read(self.spark, before_epoch=epoch)
-                .select("url"), "url", "left_anti")
+        if not self.articles.is_empty():
+            fresh = arts.join(self.articles.read(self.spark).select("url"),
+                              "url", "left_anti")
 
         # 3) in-epoch order-preserving dedup (D1): first discovery wins
         fresh = dedup.first_occurrence(fresh, key="url",
@@ -372,9 +374,10 @@ class CrawlEngine:
                           "sched_ts"),
             base_penalty=cfg.request_delay)
 
-        # 7) lineage + metrics + checkpoint + commits (atomic per table).
-        #    ONE aggregation over the checkpointed fetch result, collected
-        #    once, feeds every count this epoch needs. The cube keys on
+        # 7) lineage + metrics + checkpoint, then the epoch's ONE commit:
+        #    the frontier manifest swap. ONE aggregation over the
+        #    checkpointed fetch result, collected once, feeds every count
+        #    this epoch needs. The cube keys on
         #    (physical partition, host, source): `fetched` is url-hashed by
         #    the dedup window, so a host spreads over the partitions and the
         #    cube holds at most partitions × hosts × sources rows. The
@@ -415,30 +418,18 @@ class CrawlEngine:
             [{"epoch": epoch, "partition_id": p,
               "watermark_ts": a["watermark_ts"], "rows_in": a["rows_in"],
               "rows_out": a["fetched_ok"]} for p, a in part_ck],
-            schema=self.partition_checkpoints.arrow_schema),
-            epoch, replace=True)
+            schema=self.partition_checkpoints.arrow_schema), epoch)
 
         self.articles.append(
             out_articles.select("source_id", "url", "title", "content",
                                 "published_date", "scraped_date", "epoch",
-                                "priority", "discovered_seq"),
-            epoch, replace=True)
+                                "priority", "discovered_seq"), epoch)
         n_attempted_arts = sum(r["arts_total"] for r in cube)
         n_ok_arts = sum(r["arts_ok"] for r in cube)
         n_parsed = sum(r["parsed"] for r in cube)
-        # Commit order is the crash-safety contract:
-        #   stage the frontier delta (old snapshot still committed)
-        #   -> metrics + sources (S13) rewrites, replay-idempotent
-        #   -> pipeline checkpoint commit (epoch is now "done")
-        #   -> ONE atomic frontier manifest swap publishing adds+deletes.
-        # Crash before the checkpoint: replay of epoch N reads seen state
-        # AS-OF N (before_epoch) over the ORIGINAL frontier — replace=True
-        # appends rewrite identical output.
-        # Crash between checkpoint and frontier swap: restart begins at N+1
-        # over the stale epoch-N frontier — already-stored articles are
-        # seen-filtered, so the result is wasted work, never loss or dups.
-        # (The previous order — frontier first — let a replay run epoch N
-        # against the ADVANCED frontier and destroy epoch N's articles.)
+        # The crash-safety rule: nothing before the frontier swap is
+        # committed. A crash anywhere before it leaves the frontier feeding
+        # epoch N, and the redo drops what the attempt appended.
         #
         # Incremental maintenance (merge-on-read, Iceberg-v2 shape): the
         # epoch writes ONLY its delta — discovered+requeued rows as an add
@@ -471,37 +462,25 @@ class CrawlEngine:
             n_consumed = staged["del"]["rows"]
         n_robots_dropped = n_consumed - n_sched_total
         n_adds = staged["add"]["rows"]
-        # live-row arithmetic (no frontier-sized count job): every consumed
-        # row leaves, every add enters. Exact since the delete key includes
-        # epoch_added (a tombstone kills exactly one live row); the
-        # zero-progress guard below is a belt for exotic hand-edited
-        # frontier states.
+        # live-row arithmetic (no frontier-sized count job), the same the
+        # swap records: every consumed row leaves, every add enters. Exact
+        # since the delete key includes epoch_added (a tombstone kills
+        # exactly one live row).
         n_front_out = frontier_in - n_consumed + n_adds
-        if n_front_out > 0 and n_sched_total == 0 and n_adds == 0:
-            # the recount runs pre-commit, so it still sees the rows this
-            # epoch's STAGED tombstones will remove — in this branch exactly
-            # the robots-dropped ones (nothing was scheduled)
-            n_front_out = (self.frontier.read(self.spark).count()
-                           - n_robots_dropped)
-        # per-host metrics; the skipped_* columns carry epoch totals
         per_host = _fold(cube, "host",
                          sums=("fetched_ok", "errors", "parsed"))
         self.metrics.append(pa.Table.from_pylist(
             [{"epoch": epoch, "host": h, "fetched": a["fetched_ok"],
-              "parsed": a["parsed"], "discovered": 0,
-              "skipped_dup": n_sched_arts - n_attempted_arts,
-              "skipped_date": n_ok_arts - n_parsed,
-              "skipped_robots": n_robots_dropped, "errors": a["errors"]}
+              "parsed": a["parsed"], "discovered": 0, "errors": a["errors"]}
              for h, a in per_host],
-            schema=self.metrics.arrow_schema), epoch, replace=True)
+            schema=self.metrics.arrow_schema), epoch)
         # S13 — last_crawled per source (database.py:134-146, applied after
         # each source crawl at crawler_manager.py:134). Runs BEFORE the
-        # pipeline checkpoint: run() resumes after the last checkpointed
-        # epoch, so a stamp written after it would be lost for good by a
-        # crash in between. A replay of a crashed epoch re-stamps the same
-        # sources with the same deterministic stamp (it encodes the epoch),
-        # so the rewrite is idempotent. The registry is a dim table: it is
-        # read, stamped and rewritten on the driver.
+        # frontier swap, like every write of the epoch. A redo of a crashed
+        # epoch re-stamps the same sources with the same deterministic
+        # stamp (it encodes the epoch), so the rewrite is idempotent. The
+        # registry is a dim table: it is read, stamped and rewritten on the
+        # driver.
         if not self.sources.is_empty():
             touched = pa.array({r["source_id"] for r in cube
                                 if r["fetched_ok"] > 0
@@ -513,24 +492,26 @@ class CrawlEngine:
             self.sources.overwrite(src.set_column(
                 src.schema.get_field_index("last_crawled"), "last_crawled",
                 pc.if_else(hit, stamp, src["last_crawled"])), epoch + 1)
+        # the skipped_* counts are epoch totals: they belong to the epoch's
+        # row, not to every host row of metrics
         self.checkpoints.append(pa.Table.from_pylist(
             [{"epoch": epoch, "watermark_ts": float(epoch),
               "frontier_in": frontier_in, "frontier_out": n_front_out,
-              "articles_out": n_parsed}],
+              "articles_out": n_parsed,
+              "skipped_dup": n_sched_arts - n_attempted_arts,
+              "skipped_date": n_ok_arts - n_parsed,
+              "skipped_robots": n_robots_dropped}],
             schema=self.checkpoints.arrow_schema), epoch)
         if full_consume:
             self.frontier.commit_replace(staged["add"])
         else:
             self.frontier.commit_delta(epoch + 1, staged)
-            # maintenance: once tombstones outgrow COMPACT_RATIO of the add
-            # rows, fold the delta state into one clean snapshot (bounds
-            # the read-side anti-join). Crash-safe — old snapshot stays
-            # committed until the rewrite's manifest swap. The live-count
-            # hint skips the no-win compaction of a just-drained frontier
-            # (full read, ~0 rows out).
-            self.frontier.maybe_compact(self.spark, epoch + 1,
-                                        live_rows=n_front_out)
-        self._frontier_rows = n_front_out
+            # maintenance after the commit: once tombstones outgrow
+            # COMPACT_RATIO of the add rows, fold the delta state into one
+            # clean snapshot (bounds the read-side anti-join). Crash-safe —
+            # old snapshot stays committed until the rewrite's manifest
+            # swap, and either one feeds epoch + 1.
+            self.frontier.maybe_compact(self.spark, epoch + 1)
         return {"frontier_in": frontier_in, "articles_out": n_parsed,
                 "frontier_out": n_front_out}
 
@@ -539,8 +520,7 @@ class CrawlEngine:
             ) -> Dict[str, int]:
         if seeds is not None:
             self.bootstrap(seeds)
-        done = self.checkpoints.committed_epochs()
-        start = (max(done) + 1) if done else 0
+        start = self.frontier.stats()["epoch"]     # the one resume point
         totals = {"epochs": 0, "articles_out": 0}
         for epoch in range(start, start + max_epochs):
             stats = self.run_epoch(epoch)

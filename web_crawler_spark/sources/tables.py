@@ -6,19 +6,22 @@ contract is provided by a minimal manifest protocol that maps 1:1 onto
 Iceberg snapshots:
 
   table/
-    _manifest.json          # {"epochs": [0, 1, ...]}  — committed snapshots
+    _manifest.json          # {"epochs": [0, 1, ...]}  — listed snapshots
     epoch=N/part-*.parquet  # one atomic append per epoch
-    epoch=N.k/              # an overwrite that replaced a committed
+    epoch=N.k/              # an overwrite that replaced a listed
                             # epoch=N, listed as {"dirs": {"N": "epoch=N.k"}}
 
-* Writers write epoch=N fully, then commit by atomically rewriting the
+* Writers write epoch=N fully, then list it by atomically rewriting the
   manifest (os.replace — atomic on POSIX). A crash between data write and
   manifest commit leaves an orphan directory that the next run overwrites:
   exactly Iceberg's snapshot-commit semantics (single writer per table, as
   decided in SURVEY.md §7 "frontier claim semantics").
-* Readers list ONLY manifest-committed epochs — uncommitted data is
-  invisible, so every epoch is all-or-nothing and the pipeline is resumable
-  from the last committed epoch (north_rule checkpoint requirement).
+* Readers list ONLY manifest-listed epochs — unlisted data is invisible.
+* Which epochs are DONE is not decided here: the crawl's one commit per
+  epoch is the DeltaFrontier manifest swap, whose ``epoch`` field names the
+  epoch the frontier feeds next. Append-table epochs at or past it are a
+  crashed attempt's output, and the engine drops them (rollback_to) before
+  redoing the epoch (north_rule checkpoint requirement).
 
 On a real cluster, replace LakeTable with `spark.table(...)` over Iceberg;
 the call sites are isolated here on purpose.
@@ -151,30 +154,36 @@ class LakeTable:
         else:
             data.write.mode("overwrite").parquet(d)
 
-    def append(self, data: Union[DataFrame, pa.Table], epoch: int,
-               replace: bool = False) -> None:
-        """Atomic append: write epoch dir (overwriting any uncommitted orphan
-        from a crashed run), then commit the manifest.
-
-        replace=True makes the append replay-safe: a crashed epoch whose
-        append committed but whose *pipeline* checkpoint (the last table
-        committed in run_epoch) did not is rewritten on replay instead of
-        raising — exactly-once output per epoch either way. A crash inside
-        that rewrite leaves epoch N listed but missing or partial; only the
-        replay reads past it (its readers use ``before_epoch``), and the
-        replay rewrites it.
-
-        NOTE for replayed epochs: a plan that READS this table's epoch N
-        while replace-appending epoch N would scan files this call deletes —
-        replaying readers must read with ``before_epoch`` (run_epoch's
-        seen filter does)."""
-        d = self._epoch_dir(epoch)
-        if epoch in self.committed_epochs() and not replace:
+    def append(self, data: Union[DataFrame, pa.Table], epoch: int) -> None:
+        """Atomic append: write epoch dir (overwriting any unlisted orphan
+        from a crashed run), then list it in the manifest. A listed epoch
+        is never rewritten — a replay first drops it with rollback_to."""
+        if epoch in self.committed_epochs():
             raise ValueError(f"epoch {epoch} already committed to {self.path}")
+        d = self._epoch_dir(epoch)
         if os.path.exists(d):
             shutil.rmtree(d)                    # orphan from a crash — redo
         self._write(data, d)
         self._commit(epoch)
+
+    def rollback_to(self, epoch: int) -> None:
+        """Drop every listed epoch >= ``epoch`` (Iceberg
+        rollback_to_snapshot): one manifest swap unlists them, then their
+        dirs are removed. A crash in between leaves unlisted orphans that
+        the next append of that epoch overwrites."""
+        man = self._read_manifest()
+        gone = [e for e in man["epochs"] if e >= epoch]
+        if not gone:
+            return
+        dirs = [self._epoch_dir(e, man) for e in gone]
+        new = {"epochs": sorted(e for e in man["epochs"] if e < epoch)}
+        kept = {k: v for k, v in man.get("dirs", {}).items()
+                if int(k) < epoch}
+        if kept:
+            new["dirs"] = kept
+        _atomic_write_json(self.path, self._manifest_path, new)
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
 
     def overwrite(self, data: Union[DataFrame, pa.Table], epoch: int) -> None:
         """Replace table contents with data as the single epoch `epoch`.
@@ -240,16 +249,9 @@ class LakeTable:
         fresh = updates.join(cur.select(key), key, "left_anti")
         self.overwrite(cur.unionByName(fresh), epoch)
 
-    def read(self, spark: SparkSession,
-             before_epoch: Optional[int] = None) -> Optional[DataFrame]:
-        """Committed snapshot union. ``before_epoch`` restricts to epochs
-        strictly below it — the as-of read a REPLAYED epoch needs: after a
-        crash between epoch N's table appends and the pipeline checkpoint,
-        the replay of N must not see N's own orphan output as input (the
-        seen filter would drop the replayed articles and the replace-append
-        would then rewrite epoch N empty — measured data loss, pinned by
-        test_replay_after_articles_commit_crash)."""
-        dirs = self._committed_dirs(before_epoch)
+    def read(self, spark: SparkSession) -> Optional[DataFrame]:
+        """Union of the listed snapshots."""
+        dirs = self._committed_dirs()
         if not dirs:
             if self.schema_ddl:
                 return spark.createDataFrame([], schema=self.schema_ddl)
@@ -266,12 +268,9 @@ class LakeTable:
         return pa.concat_tables([pq.read_table(d, schema=self.arrow_schema)
                                  for d in dirs])
 
-    def _committed_dirs(self, before_epoch: Optional[int] = None) -> list:
+    def _committed_dirs(self) -> list:
         man = self._read_manifest()
-        epochs = sorted(man["epochs"])
-        if before_epoch is not None:
-            epochs = [e for e in epochs if e < before_epoch]
-        dirs = [self._epoch_dir(e, man) for e in epochs]
+        dirs = [self._epoch_dir(e, man) for e in sorted(man["epochs"])]
         missing = [d for d in dirs if not os.path.exists(d)]
         if missing:
             # fail LOUD, like DeltaFrontier: silently reading fewer epochs
@@ -312,23 +311,29 @@ class DeltaFrontier:
     write cost proportional to the rows the epoch actually touched:
 
       frontier/
-        _manifest.json     {"adds": {"1": {"rows": r, "bytes": b}}, "dels": {...}}
+        _manifest.json     {"epoch": E, "rows": r,
+                            "adds": {"add=1": {"rows": r, "bytes": b}},
+                            "dels": {...}}
         add=E/part-*.parquet   rows added by snapshot E (discovered+requeued)
         del=E/part-*.parquet   equality-delete keys written by snapshot E
 
+    * The manifest swap is the crawl's ONE commit per epoch. ``epoch`` is
+      the epoch this snapshot feeds (the crawl resumes there) and ``rows``
+      its live row count, kept by exact arithmetic on every swap (old live
+      − tombstones + adds) or taken from the footers of a full rewrite, so
+      no epoch needs a count job. Every swap — commit_delta,
+      commit_replace, and bootstrap and compaction through overwrite —
+      writes both. A manifest without ``epoch`` (a workdir written before
+      the fields existed) is refused: it cannot say where to resume.
     * A delete row carries the FULL equality key (url, discovered_seq,
-      retries, epoch_added) + __del_epoch lineage. epoch_added joined the
-      key in round 5 (ADVICE r4): the 4-tuple is genuinely unique among
-      live rows (in-epoch discoveries are url-deduped, cross-epoch
+      retries, epoch_added) + __del_epoch lineage. The 4-tuple is unique
+      among live rows (in-epoch discoveries are url-deduped, cross-epoch
       re-discoveries differ in epoch_added, requeues differ in retries),
-      so a tombstone kills EXACTLY the row that was consumed — the old
-      3-key + sequence-rule form silently killed an unscheduled duplicate
-      when the same url was rediscovered across epochs with the same
-      derived seq, and the engine's live-row arithmetic drifted. Equality
-      on epoch_added also subsumes the Iceberg sequence-number rule
-      (epoch_added <= __del_epoch holds by construction for every del
-      derived from a consumed row), so an epoch's own adds are still never
-      shadowed by its deletes.
+      so a tombstone kills EXACTLY the row that was consumed and the live
+      count stays exact. Equality on epoch_added also subsumes the Iceberg
+      sequence-number rule (epoch_added <= __del_epoch holds by
+      construction for every del derived from a consumed row), so an
+      epoch's own adds are never shadowed by its deletes.
     * read() = union(adds) LEFT ANTI join union(dels); the delete side is
       broadcast while small (manifest row counts make the decision without
       a job). On Iceberg this whole class is `MERGE INTO` + v2 position/
@@ -344,6 +349,10 @@ class DeltaFrontier:
     """
 
     KEY = ["url", "discovered_seq", "retries", "epoch_added"]
+    #: a tombstone row: KEY + the epoch that wrote it, read by this schema
+    #: (a schema-less read runs a footer-merge job)
+    DEL_DDL = ("url string, discovered_seq bigint, retries int, "
+               "epoch_added int, __del_epoch int")
     #: broadcast the delete side under this many rows (~48 B/key row)
     BROADCAST_DELS_MAX = 4_000_000
     #: compact once tombstone rows exceed this share of the add rows
@@ -362,9 +371,15 @@ class DeltaFrontier:
     def _manifest(self) -> dict:
         try:
             with open(self._manifest_path) as f:
-                return json.load(f)
+                man = json.load(f)
         except FileNotFoundError:
-            return {"adds": {}, "dels": {}}
+            return {"epoch": 0, "rows": 0, "adds": {}, "dels": {}}
+        if "epoch" not in man:
+            raise ValueError(
+                f"{self._manifest_path} records no epoch: the workdir "
+                f"{os.path.dirname(self.path)} was written by an older lake "
+                f"format and cannot be resumed — start a new workdir")
+        return man
 
     def _write_manifest(self, man: dict) -> None:
         # durable atomic commit: fsync file + dir (ADVICE r4 — without the
@@ -375,9 +390,12 @@ class DeltaFrontier:
         return not self._manifest()["adds"]
 
     def stats(self) -> dict:
-        """Committed row/byte totals from the manifest — no Spark job."""
+        """Committed row/byte totals from the manifest — no Spark job —
+        with the epoch the snapshot feeds and its live row count."""
         man = self._manifest()
         return {
+            "epoch": man["epoch"],
+            "live_rows": man["rows"],
             "add_rows": sum(m["rows"] for m in man["adds"].values()),
             "add_bytes": sum(m["bytes"] for m in man["adds"].values()),
             "del_rows": sum(m["rows"] for m in man["dels"].values()),
@@ -427,9 +445,10 @@ class DeltaFrontier:
                 "del": self._stage(d, self._alloc_dir("del", epoch))}
 
     def stage_adds(self, adds: DataFrame, epoch: int) -> dict:
-        """Stage an adds-only snapshot for commit_replace (old snapshot
-        stays committed until then)."""
-        return self._stage(adds, self._alloc_dir("add", epoch))
+        """Stage an adds-only snapshot for commit_replace, as the snapshot
+        feeding ``epoch`` (old snapshot stays committed until then)."""
+        return dict(self._stage(adds, self._alloc_dir("add", epoch)),
+                    epoch=epoch)
 
     def commit_replace(self, staged_add: dict) -> None:
         """Publish the staged adds as the ENTIRE table — the fast path for
@@ -437,27 +456,34 @@ class DeltaFrontier:
         live set IS the epoch's additions, so writing tombstones for the
         whole old snapshot (and anti-joining them on every future read)
         would be pure overhead. Two-phase: swap the manifest to the staged
-        dir, then best-effort GC of the old dirs; a crash leaves either
-        complete snapshot."""
-        man = self._manifest()
-        old = list(man["adds"]) + list(man["dels"])
+        dir, then best-effort GC of every other dir — the old snapshot and
+        any orphan a crashed attempt staged (single writer: nothing else
+        is in flight); a crash leaves either complete snapshot."""
         final = os.path.join(self.path, staged_add["name"])
         os.replace(staged_add["staging"], final)
         # a 0-row snapshot is kept in the manifest ON PURPOSE: a DRAINED
         # frontier must stay distinguishable from a never-bootstrapped one
         # (is_empty() gates bootstrap on resume)
-        self._write_manifest({"adds": {staged_add["name"]:
+        self._write_manifest({"epoch": staged_add["epoch"],
+                              "rows": staged_add["rows"],
+                              "adds": {staged_add["name"]:
                                        self._entry(staged_add)},
                               "dels": {}})
-        for o in old:                           # best-effort post-swap GC
-            shutil.rmtree(os.path.join(self.path, o), ignore_errors=True)
+        for o in os.listdir(self.path):         # best-effort post-swap GC
+            if o != staged_add["name"] and not o.startswith("_"):
+                shutil.rmtree(os.path.join(self.path, o), ignore_errors=True)
 
     @staticmethod
     def _entry(staged_one: dict) -> dict:
         return {"rows": staged_one["rows"], "bytes": staged_one["bytes"]}
 
     def commit_delta(self, epoch: int, staged: dict) -> None:
+        """Publish a staged delta as the snapshot feeding ``epoch``. Every
+        staged delete must key one live row (the engine's consumed rows
+        do), so the live count moves by adds − deletes."""
         man = self._manifest()
+        man["epoch"] = epoch
+        man["rows"] += staged["add"]["rows"] - staged["del"]["rows"]
         for kind in ("add", "del"):
             if staged[kind]["rows"]:
                 final = os.path.join(self.path, staged[kind]["name"])
@@ -468,16 +494,15 @@ class DeltaFrontier:
                 shutil.rmtree(staged[kind]["staging"], ignore_errors=True)
         self._write_manifest(man)               # ONE atomic commit for both
 
-    def overwrite(self, df: DataFrame, epoch: int) -> int:
-        """Full rewrite as a single add snapshot (bootstrap / compaction /
-        explicit state restore); returns its row count. Two-phase like
+    def overwrite(self, df: DataFrame, epoch: int) -> None:
+        """Full rewrite as a single add snapshot feeding ``epoch``
+        (bootstrap / compaction / explicit state restore). Two-phase like
         LakeTable.overwrite, into a FRESH directory: a crash at any point
         leaves either the complete old snapshot (manifest untouched) or the
-        complete new one; at worst an orphan dir leaks, never committed
-        data."""
+        complete new one; at worst an orphan dir stays until the next
+        replace commit, never committed data."""
         staged = self._stage(df, self._alloc_dir("add", epoch))
-        self.commit_replace(staged)
-        return staged["rows"]
+        self.commit_replace(dict(staged, epoch=epoch))
 
     def _committed_dirs(self, man: dict, kind: str) -> list:
         dirs = [os.path.join(self.path, n) for n in man[kind]]
@@ -492,9 +517,8 @@ class DeltaFrontier:
         return dirs
 
     def read(self, spark: SparkSession) -> DataFrame:
-        """Live view = union(adds) LEFT ANTI union(dels). Manifest entries
-        written with a per-file ``stats`` key (older snapshots) read the
-        same: only ``rows``/``bytes`` are consulted."""
+        """Live view = union(adds) LEFT ANTI union(dels), on the full
+        equality key."""
         from pyspark.sql import functions as F
         man = self._manifest()
         add_dirs = self._committed_dirs(man, "adds")
@@ -506,68 +530,23 @@ class DeltaFrontier:
         del_dirs = self._committed_dirs(man, "dels")
         if not del_dirs:
             return base
-        # Delete files written before round 5 carry only the 3-key +
-        # __del_epoch (the sequence-rule form) — a resumed legacy workdir
-        # must stay readable, so dels are split by footer schema (cached
-        # per dir) and each vintage gets its own anti-join semantics.
-        legacy_dirs, new_dirs = [], []
-        for d in del_dirs:
-            (new_dirs if self._del_dir_has_epoch_added(d)
-             else legacy_dirs).append(d)
-        rows_of = {os.path.join(self.path, n): m["rows"]
-                   for n, m in man["dels"].items()}
+        dels = _reader(spark, self.DEL_DDL).parquet(*del_dirs)
+        if sum(m["rows"] for m in man["dels"].values()) <= \
+                self.BROADCAST_DELS_MAX:
+            dels = F.broadcast(dels)
+        return base.join(dels, [base[k] == dels[k] for k in self.KEY],
+                         "left_anti")
 
-        def _maybe_broadcast(df, dirs):
-            n = sum(rows_of.get(d, 0) for d in dirs)
-            return F.broadcast(df) if n <= self.BROADCAST_DELS_MAX else df
-
-        if new_dirs:
-            dels = _maybe_broadcast(spark.read.parquet(*new_dirs), new_dirs)
-            # pure equality on the full key — exact kills; see class
-            # docstring for why __del_epoch no longer needs to join
-            # (equality on epoch_added subsumes the sequence rule)
-            cond = [base[k] == dels[k] for k in self.KEY]
-            base = base.join(dels, cond, "left_anti")
-        if legacy_dirs:
-            ldels = _maybe_broadcast(spark.read.parquet(*legacy_dirs),
-                                     legacy_dirs)
-            cond = [base[k] == ldels[k]
-                    for k in ("url", "discovered_seq", "retries")]
-            cond.append(base["epoch_added"] <= ldels["__del_epoch"])
-            base = base.join(ldels, cond, "left_anti")
-        return base
-
-    def _del_dir_has_epoch_added(self, d: str) -> bool:
-        """Schema vintage of a committed delete dir, from ONE parquet
-        footer (local metadata read, memoized per dir — committed dirs are
-        immutable)."""
-        cache = getattr(self, "_del_schema_cache", None)
-        if cache is None:
-            cache = self._del_schema_cache = {}
-        if d not in cache:
-            fn = next((f for f in sorted(os.listdir(d))
-                       if f.endswith(".parquet")), None)
-            cache[d] = (fn is None or "epoch_added" in
-                        pq.ParquetFile(os.path.join(d, fn))
-                        .schema_arrow.names)
-        return cache[d]
-
-    def maybe_compact(self, spark: SparkSession, epoch: int,
-                      live_rows: Optional[int] = None) -> bool:
+    def maybe_compact(self, spark: SparkSession, epoch: int) -> bool:
         """Rewrite to a clean single-add snapshot when the delete set
         exceeds COMPACT_RATIO of the add rows. Crash-safe: a crash mid-
-        compaction leaves the old snapshot committed.
-
-        ``live_rows`` (the caller's known live count) prunes the no-win
-        case: a just-drained frontier (live == 0) would pay a full
-        base-minus-tombstones read to write nothing — the dominant cost of
-        the final epoch of a drain-to-empty crawl. Skip is the only action
-        taken on that hint (never a truncate), so an overcounting caller
-        can only delay compaction, not destroy rows."""
+        compaction leaves the old snapshot committed. A drained frontier
+        (live rows 0) is not compacted: the full base-minus-tombstones read
+        would write nothing, the dominant cost of the final epoch of a
+        drain-to-empty crawl."""
         s = self.stats()
-        if s["add_rows"] == 0 or s["del_rows"] <= self.COMPACT_RATIO * s["add_rows"]:
-            return False
-        if live_rows == 0:
+        if s["live_rows"] == 0 or \
+                s["del_rows"] <= self.COMPACT_RATIO * s["add_rows"]:
             return False
         self.overwrite(self.read(spark), epoch)
         return True
