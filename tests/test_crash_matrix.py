@@ -1,11 +1,14 @@
-"""Crash matrix: a crash at any write of ``run_epoch``, then a resume with a
-fresh engine, ends in the same lake as an uncrashed crawl.
+"""Crash matrix: a crash at any write of ``bootstrap`` or ``run_epoch``,
+then a resume with a fresh engine, ends in the same lake as an uncrashed
+crawl.
 
 The crawl is the 120-article test web at ``per_host_budget=4`` (8 epochs).
 Epoch 5 commits a frontier delta and then compacts; epoch 7 drains the
-frontier through the replace commit. Each case copies the lake as it stood
-before the epoch, crashes a fresh engine at one write of that epoch, resumes
-with another fresh engine and compares every table with the uncrashed run.
+frontier through the replace commit. Each epoch case copies the lake as it
+stood before the epoch, crashes a fresh engine at one write of that epoch,
+resumes with another fresh engine and compares every table with the
+uncrashed run. The bootstrap case crashes between the sources registry
+merge and the frontier write, then crawls from an empty workdir.
 The module also pins the on-disk layout the benchmark reads
 (``perfbench.run.read_table_dir``).
 """
@@ -26,18 +29,21 @@ DELTA_EPOCH, DRAIN_EPOCH = 5, 7
 #: fault point -> the methods that raise when called, as (table, method);
 #: table None patches the DeltaFrontier class. "compaction" raises at the
 #: compaction's own swap, after the epoch's delta swap went through.
+#: "bootstrap" raises at bootstrap's frontier write, after its sources merge.
 FAULTS = {
+    "bootstrap": [(None, "overwrite")],
     "partition_checkpoints": [("partition_checkpoints", "append")],
     "articles": [("articles", "append")],
     "staging": [(None, "stage_delta"), (None, "stage_adds")],
     "metrics": [("metrics", "append")],
-    "sources": [("sources", "overwrite")],
     "checkpoints": [("checkpoints", "append")],
     "swap": [(None, "commit_delta"), (None, "commit_replace")],
     "compaction": [(None, "commit_replace")],
 }
-CASES = ([(DELTA_EPOCH, f) for f in FAULTS] +
-         [(DRAIN_EPOCH, f) for f in FAULTS if f != "compaction"])
+EPOCH_FAULTS = [f for f in FAULTS if f != "bootstrap"]
+CASES = ([(None, "bootstrap")] +
+         [(DELTA_EPOCH, f) for f in EPOCH_FAULTS] +
+         [(DRAIN_EPOCH, f) for f in EPOCH_FAULTS if f != "compaction"])
 
 
 class Crash(RuntimeError):
@@ -106,16 +112,22 @@ def reference(spark, tmp_path_factory, web):
                                     ("commit_replace", None),
                                     ("maybe_compact", True)]
     assert commits[DRAIN_EPOCH] == [("commit_replace", None)]
+    assert eng.sources.committed_epochs() == [0], "only bootstrap writes it"
     return eng, _lake(spark, eng), before
 
 
 @pytest.mark.parametrize("epoch,fault", CASES,
-                         ids=[f"{e}-{f}" for e, f in CASES])
+                         ids=[f if e is None else f"{e}-{f}"
+                              for e, f in CASES])
 def test_crash_then_resume_matches_uncrashed(spark, tmp_path, web, reference,
                                              epoch, fault):
     _, want, before = reference
     wd = str(tmp_path / "lake")
-    shutil.copytree(before[epoch], wd)
+    seeds = None
+    if epoch is None:                  # bootstrap: crawl from an empty lake
+        seeds = html_synth.seeds_df(spark, web)
+    else:
+        shutil.copytree(before[epoch], wd)
     crashing = _engine(spark, wd, web)
 
     def crash(*_a, **_k):
@@ -125,9 +137,12 @@ def test_crash_then_resume_matches_uncrashed(spark, tmp_path, web, reference,
             m.setattr(DeltaFrontier if table is None
                       else getattr(crashing, table), method, crash)
         with pytest.raises(Crash):
-            crashing.run(max_epochs=1)
+            crashing.run(seeds, max_epochs=1)
+    if epoch is None:                  # the registry merge went through
+        assert crashing.sources.committed_epochs() == [0]
+        assert crashing.frontier.is_empty()
     resumed = _engine(spark, wd, web)
-    resumed.run(max_epochs=10)
+    resumed.run(seeds, max_epochs=10)
     got = _lake(spark, resumed)
     assert got.keys() == want.keys()
     for table in want:

@@ -196,8 +196,8 @@ def test_date_filter_window(spark, tmp_path, web):
 def test_metrics_and_checkpoints_written(spark, engine):
     m = engine.metrics.read(spark)
     assert m.count() > 0
-    assert set(m.columns) == {"epoch", "host", "fetched", "parsed",
-                              "discovered", "errors"}
+    assert set(m.columns) == {"epoch", "host", "source_id", "fetched",
+                              "parsed", "discovered", "errors"}
     cp = engine.checkpoints.read(spark).orderBy("epoch").collect()
     assert {"skipped_dup", "skipped_date", "skipped_robots"} <= \
         set(cp[0].asDict())

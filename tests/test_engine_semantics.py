@@ -8,7 +8,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from web_crawler_spark import html_synth, refspec
+from web_crawler_spark import html_synth, queries, refspec
 from web_crawler_spark.plans.epoch import (CrawlConfig, CrawlEngine,
                                            pages_fetcher)
 
@@ -78,15 +78,17 @@ def test_backoff_gives_up_after_max_retries(spark, tmp_path, web,
 # ---------------------------------------------------------------- S1 + S13
 def test_sources_registry_and_last_crawled(spark, tmp_path, web):
     """bootstrap registers the sources dim; inactive sources are never
-    crawled (S1); last_crawled is stamped per epoch for sources that
-    fetched (S13, database.py:134-146)."""
+    crawled (S1); a source that fetched reads a last_crawled stamp from
+    the metrics rows (S13, database.py:134-146)."""
     pages = html_synth.pages_df(spark, web)
     seeds = html_synth.seeds_df(spark, web).withColumn(
         "is_active",
         F.when(F.col("source_id") == 0, F.lit(0)).otherwise(F.lit(1)))
     eng = CrawlEngine(spark, str(tmp_path / "w"), pages, CrawlConfig())
     eng.run(seeds, max_epochs=6)
-    src = {r["id"]: r for r in eng.sources.read(spark).collect()}
+    assert eng.sources.committed_epochs() == [0]
+    src = {r["id"]: r for r in queries.with_last_crawled(
+        eng.sources.read(spark), eng.metrics.read(spark)).collect()}
     assert set(src) == {s for (_, s, _) in web["seeds"]}
     assert src[0]["is_active"] == 0 and src[0]["last_crawled"] is None
     crawled_ids = {r["source_id"] for r in
@@ -101,8 +103,8 @@ def test_last_crawled_survives_crash_after_checkpoint(spark, tmp_path, web,
                                                       monkeypatch):
     """A crash between epoch N's checkpoint row and its frontier swap must
     not lose N's S13 stamp: the frontier still feeds N, so run() redoes N
-    and stamps it again. Every source that stored articles in N reads a
-    stamp of epoch >= N after the resume."""
+    and writes its metrics rows again. Every source that stored articles
+    in N reads a stamp of epoch >= N after the resume."""
     from web_crawler_spark.sources.tables import DeltaFrontier
     wd = str(tmp_path / "w")
     eng, seeds = _engine(spark, wd, web)
@@ -123,7 +125,9 @@ def test_last_crawled_survives_crash_after_checkpoint(spark, tmp_path, web,
                 .filter(F.col("epoch") == 1).select("source_id").collect()}
     assert stored_1, "fixture must store articles in epoch 1"
     stamps = {r["id"]: r["last_crawled"]
-              for r in eng2.sources.read(spark).collect()}
+              for r in queries.with_last_crawled(
+                  eng2.sources.read(spark),
+                  eng2.metrics.read(spark)).collect()}
     lost = {sid: stamps[sid] for sid in stored_1
             if int(stamps[sid].rsplit("#epoch=", 1)[1]) < 1}
     assert not lost, lost
@@ -151,63 +155,6 @@ def test_engine_reused_after_crash_redoes_the_epoch(spark, tmp_path, web,
     assert eng.frontier.read(spark).count() == 0
     assert {r["url"] for r in eng.articles.read(spark).collect()} == \
         {a["url"] for a in golden["articles"]}
-
-
-def test_sources_survive_crash_inside_replayed_overwrite(spark, tmp_path, web,
-                                                         monkeypatch):
-    """The replay of a crashed epoch N rewrites the sources snapshot N's
-    first run already committed. A crash inside that overwrite (its first
-    os.replace raises) must leave the committed registry readable, and the
-    resume must finish with every source registered and stamped. Removing
-    the committed dir before the rename instead left a listed-but-missing
-    dir: the read dropped it and the resume rewrote the registry empty."""
-    import os
-    wd = str(tmp_path / "w")
-    eng, seeds = _engine(spark, wd, web)
-    eng.bootstrap(seeds)
-    eng.run_epoch(0)
-
-    def crash(*_a, **_k):
-        raise RuntimeError("crash before the checkpoint")
-    with monkeypatch.context() as m:
-        m.setattr(eng.checkpoints, "append", crash)
-        with pytest.raises(RuntimeError, match="before the checkpoint"):
-            eng.run_epoch(1)
-    assert 2 in eng.sources.committed_epochs()
-    assert 1 not in eng.checkpoints.committed_epochs()
-    before = sorted(tuple(r) for r in eng.sources.read(spark).collect())
-    assert any(r[5] and r[5].endswith("#epoch=000001") for r in before)
-
-    real_replace, raised = os.replace, []
-
-    def replace_once(*a, **k):
-        if not raised:
-            raised.append(a)
-            raise OSError("crash inside the sources overwrite")
-        return real_replace(*a, **k)
-    replay, _ = _engine(spark, wd, web)           # a restarted process
-    overwrite = replay.sources.overwrite
-
-    def crashing_overwrite(*a, **k):
-        with monkeypatch.context() as m:
-            m.setattr(os, "replace", replace_once)
-            return overwrite(*a, **k)
-    with monkeypatch.context() as m:
-        m.setattr(replay.sources, "overwrite", crashing_overwrite)
-        with pytest.raises(OSError, match="inside the sources overwrite"):
-            replay.run_epoch(1)
-    assert raised
-    assert sorted(tuple(r) for r in replay.sources.read(spark).collect()) \
-        == before
-
-    eng2, _ = _engine(spark, wd, web)
-    eng2.run(max_epochs=6)
-    after = {r["id"]: r["last_crawled"]
-             for r in eng2.sources.read(spark).collect()}
-    assert set(after) == {s for (_, s, _) in web["seeds"]}
-    stored = {r["source_id"] for r in
-              eng2.articles.read(spark).select("source_id").collect()}
-    assert all(after[s] and "#epoch=" in after[s] for s in stored), after
 
 
 # ------------------------------------------------------------------- S7/S8

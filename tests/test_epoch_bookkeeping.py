@@ -1,8 +1,9 @@
 """Epoch bookkeeping: the Spark job budget of each epoch kind, the committed
-rows and Spark-read schemas of the four small tables (partition_checkpoints,
-metrics, checkpoints, sources) and of the frontier's tombstones, staged row
-counts from parquet footers, and the LakeTable overwrite/read/rollback
-contract those tables rely on."""
+rows and Spark-read schemas of the small tables (partition_checkpoints,
+metrics, checkpoints, and the sources registry with the last_crawled read
+from metrics) and of the frontier's tombstones, staged row counts from
+parquet footers, and the LakeTable overwrite/read/rollback contract those
+tables rely on."""
 
 import json
 import os
@@ -13,7 +14,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql.types import StructType
 
-from web_crawler_spark import html_synth, refspec
+from web_crawler_spark import html_synth, queries, refspec
 from web_crawler_spark.plans import epoch as ep
 from web_crawler_spark.plans.epoch import CrawlConfig, CrawlEngine
 from web_crawler_spark.sources.tables import DeltaFrontier, LakeTable
@@ -78,22 +79,26 @@ def test_bookkeeping_rows(spark, crawl, web):
                    s["articles_out"], *skipped[e])
                   for e, s in enumerate(stats)]
 
-    # metrics: per epoch Σfetched, Σparsed, Σerrors, host rows, discovered
+    # metrics: per epoch Σfetched, Σparsed, Σerrors, hosts, discovered
     m = eng.metrics.read(spark).collect()
     per = {}
     for r in m:
-        a = per.setdefault(r["epoch"], [0, 0, 0, 0, set()])
+        a = per.setdefault(r["epoch"], [0, 0, 0, set(), set()])
         a[0] += r["fetched"]
         a[1] += r["parsed"]
         a[2] += r["errors"]
-        a[3] += 1
+        a[3].add(r["host"])
         a[4].add(r["discovered"])
-    assert per == {0: [34, 0, 0, 9, {0}],
-                   1: [72, 67, 0, 9, {0}],
-                   2: [72, 67, 0, 9, {0}],
-                   3: [32, 31, 0, 8, {0}],
-                   4: [2, 2, 0, 1, {0}]}
-    assert len({(r["epoch"], r["host"]) for r in m}) == len(m)
+    assert {e: [*a[:3], len(a[3]), a[4]] for e, a in per.items()} == \
+        {0: [34, 0, 0, 9, {0}],
+         1: [72, 67, 0, 9, {0}],
+         2: [72, 67, 0, 9, {0}],
+         3: [32, 31, 0, 8, {0}],
+         4: [2, 2, 0, 1, {0}]}
+    # one row per (epoch, host, source), each with a source
+    assert len({(r["epoch"], r["host"], r["source_id"]) for r in m}) == \
+        len(m)
+    assert all(r["source_id"] is not None for r in m)
     # Σfetched = every fetched url: the seeds' list pages plus each
     # article the reference fetched (stored or title-less)
     assert sum(r["fetched"] for r in m) == \
@@ -113,10 +118,13 @@ def test_bookkeeping_rows(spark, crawl, web):
                    3: [32, 32, 32.0], 4: [2, 2, 34.0]}
     assert len({(r["epoch"], r["partition_id"]) for r in pck}) == len(pck)
 
-    # sources: every source fetched in the crawl carries the stamp of the
-    # last epoch it fetched in, never earlier than its last stored article
-    # (one registry row per seed url; three seed urls share source 31)
-    src = eng.sources.read(spark).collect()
+    # sources: written once, at bootstrap. Read with its metrics, every
+    # source fetched in the crawl carries the stamp of the last epoch it
+    # fetched in, never earlier than its last stored article (one registry
+    # row per seed url; three seed urls share source 31)
+    assert eng.sources.committed_epochs() == [0]
+    src = queries.with_last_crawled(eng.sources.read(spark),
+                                    eng.metrics.read(spark)).collect()
     assert sorted(r["url"] for r in src) == sorted(u for (u, _, _) in
                                                    web["seeds"])
     assert all(r["last_crawled"].startswith(ep.SCRAPED_TS + "#epoch=")
@@ -177,28 +185,27 @@ def test_staged_footer_count_matches_spark_count(spark, tmp_path):
 
 
 def test_lake_table_overwrite_replay_and_missing_dir(spark, tmp_path):
-    """Overwriting a committed epoch publishes a fresh dir through the
-    manifest (the committed one is never removed first); a dir the
-    manifest lists but that is gone fails the read."""
+    """An overwrite publishes ``epoch=N`` and removes the old snapshots
+    after the manifest swap; replaying it onto the listed epoch raises,
+    like an append does, so committed data is never rewritten in place;
+    a dir the manifest lists but that is gone fails the read."""
     t = LakeTable(str(tmp_path / "t"), "k string, v int")
 
     def row(v):
         return pa.table({"k": ["a"], "v": [v]})
-    t.overwrite(row(1), 3)
+    t.overwrite(row(1), 2)
     t.overwrite(row(2), 3)
     assert [tuple(r) for r in t.read(spark).collect()] == [("a", 2)]
-    assert t.read_arrow().to_pylist() == [{"k": "a", "v": 2}]
-    committed = os.path.basename(t._epoch_dir(3))
-    assert committed == "epoch=3.0"
     assert sorted(d for d in os.listdir(t.path) if d.startswith("epoch=")) \
-        == [committed]
-    t.overwrite(row(3), 3)                     # the name alternates back
-    assert os.path.basename(t._epoch_dir(3)) == "epoch=3"
+        == ["epoch=3"]
+    with pytest.raises(ValueError, match="already committed"):
+        t.overwrite(row(3), 3)
     with open(t._manifest_path) as f:
         assert json.load(f) == {"epochs": [3]}
+    assert [tuple(r) for r in t.read(spark).collect()] == [("a", 2)]
     t.append(spark.createDataFrame([("b", 4)], "k string, v int"), 4)
     assert sorted(tuple(r) for r in t.read(spark).collect()) == \
-        [("a", 3), ("b", 4)]
+        [("a", 2), ("b", 4)]
     shutil.rmtree(t._epoch_dir(4))
     with pytest.raises(FileNotFoundError, match="corrupt"):
         t.read(spark)

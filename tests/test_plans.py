@@ -133,3 +133,27 @@ def test_curation_ops_stay_jvm_side(spark):
             assert marker not in plan, (name, marker)
     plan = _plan(QUERIES["gopher_repetition"](spark, SF_DIR))
     assert "partial_count" in plan
+
+
+def test_fixture_reads_take_the_inferred_schema_without_a_job(spark):
+    """Each fixture table is read by a fixed DDL that equals the schema
+    Spark infers from its parquet footers, so the read plans no
+    footer-merge job before an action."""
+    import os
+
+    from web_crawler_spark.driver_queries import _t
+    from web_crawler_spark.util import FIXTURE_DDL
+    assert sorted(FIXTURE_DDL) == sorted(
+        f[:-len(".parquet")] for f in os.listdir(SF_DIR)
+        if f.endswith(".parquet"))
+    sc = spark.sparkContext
+    for table in FIXTURE_DDL:
+        group = f"fixture-read-{table}"
+        sc.setJobGroup(group, f"read {table}")
+        try:
+            df = _t(spark, SF_DIR, table)
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], table
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        inferred = spark.read.parquet(f"{SF_DIR}/{table}.parquet").schema
+        assert df.schema == inferred, table

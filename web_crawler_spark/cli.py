@@ -41,42 +41,27 @@ def _tables(spark: SparkSession, workdir: str):
 
     The registry holds one row per seed URL (merge key — a source like
     investing owns several list pages), while the reference's CLI prints
-    one row per SOURCE; collapse to one row per id here (first row by url,
-    latest last_crawled) so dim joins never fan article rows out."""
+    one row per SOURCE; collapse to one row per id here (first row by url)
+    so dim joins never fan article rows out. The registry carries no
+    last_crawled: ``cmd_sources`` derives it from the metrics table."""
     from .plans.epoch import ARTICLES_DDL, SOURCES_DDL
     from .sources.tables import LakeTable
     articles = LakeTable(os.path.join(workdir, "articles"),
                          ARTICLES_DDL).read(spark)
     sources_t = LakeTable(os.path.join(workdir, "sources"), SOURCES_DDL)
-    sources = None if sources_t.is_empty() else sources_t.read(spark)
-    if sources is not None:
+    if not sources_t.is_empty():
         w = Window.partitionBy("id").orderBy("url")
-        # "latest" is decided by the NUMERIC epoch parsed out of the stamp,
-        # not by string order: a workdir resumed from a pre-zero-padding run
-        # holds mixed '#epoch=9' / '#epoch=000012' stamps where string MAX
-        # misorders ('...=9' > '...=000012')
-        lc_epoch = F.regexp_extract("last_crawled", r"#epoch=(\d+)", 1) \
-            .cast("int")
-        lc_rank = F.when(
-            F.col("last_crawled").isNotNull(),
-            F.struct(F.coalesce(lc_epoch, F.lit(-1)).alias("e"),
-                     F.col("last_crawled").alias("s")))
-        sources = (sources
-                   .withColumn("last_crawled",
-                               F.max(lc_rank)
-                               .over(Window.partitionBy("id"))
-                               .getField("s"))
+        sources = (sources_t.read(spark)
                    .withColumn("__rn", F.row_number().over(w))
                    .filter(F.col("__rn") == 1).drop("__rn"))
-    if sources is None:
+    else:
         # engines bootstrapped without a registry: derive a minimal dim so
         # the join-shaped commands still run (id = source_id, name = src-N)
         sources = (articles.select("source_id").distinct()
                    .select(F.col("source_id").alias("id"),
                            F.concat(F.lit("src-"), F.col("source_id")
                                     .cast("string")).alias("name"),
-                           F.lit(1).alias("is_active"),
-                           F.lit(None).cast("string").alias("last_crawled")))
+                           F.lit(1).alias("is_active")))
     return articles, sources
 
 
@@ -98,9 +83,13 @@ def cmd_sources(spark, args, out=sys.stdout) -> None:
     """cli.py cmd_sources — but ONE broadcast join + groupBy instead of the
     reference's per-source count query loop (N+1)."""
     from . import queries as Q
+    from .plans.epoch import METRICS_DDL
+    from .sources.tables import LakeTable
     articles, sources = _tables(spark, args.workdir)
+    metrics = LakeTable(os.path.join(args.workdir, "metrics"),
+                        METRICS_DDL).read(spark)
     counts = Q.count_by_source(articles)
-    rows = (Q.active_sources(sources)
+    rows = (Q.with_last_crawled(Q.active_sources(sources), metrics)
             .join(counts.withColumnRenamed("source_id", "id"), "id", "left")
             .withColumn("n_articles", F.coalesce("n_articles", F.lit(0)))
             .orderBy("id").collect())
@@ -111,8 +100,7 @@ def cmd_sources(spark, args, out=sys.stdout) -> None:
           file=out)
     print("=" * 70, file=out)
     for s in rows:
-        lc = (s["last_crawled"] if "last_crawled" in s.__fields__ and
-              s["last_crawled"] else "Never")
+        lc = s["last_crawled"] or "Never"
         print(f"{s['id']:<5} {s['name']:<30} {s['n_articles']:<10} {lc:<20}",
               file=out)
     print(file=out)

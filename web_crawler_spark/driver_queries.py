@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from . import html_synth
-from .util import scratch_dir
+from .util import read_fixture, scratch_dir
 from .functions import bpe
 from .functions import canonicalize as canon
 from .functions import extract as ex
@@ -42,7 +42,7 @@ def _q(name: str, oracle: str | None = None):
 
 
 def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    return read_fixture(spark, sf_dir, table)
 
 
 def _dsum(col, scale: int = 2):
@@ -690,7 +690,8 @@ def langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (web_crawler_spark/data/langid_trigrams_v2.parquet, trained by
     tools/gen_langid_trigrams.py) — the production langid; the stopword
     heuristic above stays as the cheap pre-filter."""
-    model = spark.read.parquet(T.langid_model_path())
+    model = spark.read.schema("lang string, tri string, w bigint").parquet(
+        T.langid_model_path())
     return T.langid_ngram_df(_t(spark, sf_dir, "documents"), model)
 
 
@@ -889,7 +890,8 @@ def _committed_centroids(spark: SparkSession) -> DataFrame:
     (tools/gen_ivf_centroids.py) — production trains once per corpus and
     serves every query from the stored table; the benched query is the
     PROBE path only. Training stays value-gated via embedding_clusters."""
-    return spark.read.parquet(_IVF_CENTROIDS_PARQUET).select(
+    return spark.read.schema("cid bigint, cv array<double>").parquet(
+        _IVF_CENTROIDS_PARQUET).select(
         F.col("cid").alias("__cid"), F.col("cv").alias("__cv"))
 
 
@@ -1936,7 +1938,8 @@ def dsir_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-log-ratio table (data/dsir_weights_v1.parquet,
     tools/gen_dsir_weights.py); selected <=> more target-like than
     raw-web-like. Exact BIGINT sums; the 4096-row model is broadcast."""
-    weights = spark.read.parquet(selection.dsir_weights_path())
+    weights = spark.read.schema("bucket string, w bigint").parquet(
+        selection.dsir_weights_path())
     return selection.dsir_score_df(_sel_aug_docs(spark, sf_dir), weights)
 
 
@@ -1976,7 +1979,8 @@ def quality_classifier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed weight table (data/quality_clf_v1.parquet,
     tools/gen_quality_clf.py); keep decided in exact integers as
     sum_w + bias * n_tokens >= 0."""
-    weights = spark.read.parquet(selection.quality_clf_path())
+    weights = spark.read.schema("bucket string, w bigint").parquet(
+        selection.quality_clf_path())
     return selection.quality_clf_df(_sel_aug_docs(spark, sf_dir), weights)
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import refspec
+from .util import read_fixture
 
 EPOCH_TS = _dt.datetime(2024, 1, 1)
 
@@ -352,7 +353,7 @@ def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-normalization content is SQL-expressible:
         trim(text) || chr(10) || 'End of document ' || doc_id || '.'
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_fixture(spark, sf_dir, "documents")
     u = doc_urls(docs)
     title = F.concat(F.lit("Doc "), F.col("doc_id").cast("string"))
     html = F.concat(
@@ -416,7 +417,7 @@ def archive_pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One archive/list page per (host, pub_date) listing that day's article
     links in doc_id order — exercises link extraction + explode (U1) with a
     SQL-stateable expected output. Built with groupBy + concat_ws (JVM-side)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_fixture(spark, sf_dir, "documents")
     u = doc_urls(docs)
     item = F.concat(F.lit('<div><a href="/news/d'), F.col("doc_id").cast("string"),
                     F.lit('?a=1&b=2"><span class="time">09:00</span> item</a></div>'))

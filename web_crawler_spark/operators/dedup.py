@@ -17,7 +17,7 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -222,51 +222,53 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     where cluster_id is the component's min node id.
 
     Min-label propagation: every round each node takes the min label among
-    itself and its neighbors — one shuffle keyed on node id per round —
-    and converges in O(component diameter) rounds. Near-dup clusters are
-    near-cliques (diameter ≲ 3 regardless of corpus size), so the round
-    count is constant at 100 TB while each round stays a plain partial-agg
-    shuffle; the O(log n) large-star/small-star alternation (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC '14) is the
-    published fallback if adversarial chain graphs ever matter. Each round
+    itself and its neighbors and converges in O(component diameter)
+    rounds. Every node is its own neighbor (a self-loop edge), so a round
+    is one join of the edges to the labels and one min per node — two
+    id-keyed shuffles. Near-dup clusters are near-cliques (diameter ≲ 3
+    regardless of corpus size), so the round count is constant at 100 TB
+    while each round stays a plain partial-agg shuffle; the O(log n)
+    large-star/small-star alternation (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC '14) is the published
+    fallback if adversarial chain graphs ever matter. Each round
     localCheckpoint()s the label table (iterative lineage otherwise grows
-    without bound) and detects convergence from the SAME materialization
-    (a count on the checkpointed frame — no extra scan of the join).
+    without bound), and the count of labels that moved rides that
+    checkpoint as an Observation — no extra job.
 
     `nodes` (optional, one `src`-named id column) adds isolated nodes that
     appear in no edge; they come back as their own singleton cluster.
     Raises RuntimeError when labels still change after `max_iters` rounds
     — partial labels would be a silently wrong clustering.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = e.unionByName(e.select(F.col("v").alias("u"),
-                                 F.col("u").alias("v")))
-    # materialize the edge list ONCE: it is re-joined every round, and the
-    # upstream plan may be expensive (duplicate_clusters feeds the whole
-    # minhash+LSH+verify pipeline in here — recomputing it per round turned
-    # a 2-round convergence into 2 extra full LSH passes)
-    sym = sym.localCheckpoint(eager=True)
-    ids = sym.select(F.col("u").alias("id")).distinct()
+    def arc(a, b):
+        return F.struct(F.col(a).alias("u"), F.col(b).alias("v"))
+    # both directions of each edge plus a self-loop at each end, from ONE
+    # pass over `edges`: the upstream plan may be expensive
+    # (duplicate_clusters feeds the whole minhash+LSH+verify pipeline in
+    # here), and a union of projections would run it once per branch
+    sym = edges.select(F.explode(F.array(
+        arc(src, dst), arc(dst, src), arc(src, src), arc(dst, dst)))
+        .alias("e")).select("e.*")
     if nodes is not None:
-        ids = ids.unionByName(nodes.select(F.col(src).alias("id"))).distinct()
-    labels = ids.select("id", F.col("id").alias("cluster_id"))
-    labels = labels.localCheckpoint(eager=True)
+        sym = sym.unionByName(nodes.select(F.col(src).alias("u"),
+                                           F.col(src).alias("v")))
+    # materialize the edge list ONCE: it is re-joined every round
+    sym = sym.distinct().localCheckpoint(eager=True)
+    # round 1 needs no join: every label is still the node's own id
+    nbr = sym.select("u", "v", F.col("v").alias("cluster_id"))
     for _ in range(max_iters):
-        nbr = (sym.join(labels, sym["v"] == labels["id"])
-               .groupBy("u").agg(F.min("cluster_id").alias("nbr_min")))
-        nxt = (labels.join(nbr, labels["id"] == nbr["u"], "left")
-               .select(labels["id"],
-                       F.least(F.col("cluster_id"),
-                               F.coalesce(F.col("nbr_min"),
-                                          F.col("cluster_id")))
-                       .alias("cluster_id"),
-                       (F.col("nbr_min") < F.col("cluster_id"))
-                       .alias("__changed")))
-        nxt = nxt.localCheckpoint(eager=True)
-        changed = nxt.filter(F.col("__changed")).count()
-        labels = nxt.drop("__changed")
-        if changed == 0:
+        obs = Observation()
+        labels = (nbr.groupBy("u")
+                  .agg(F.min("cluster_id").alias("cluster_id"),
+                       F.min(F.when(F.col("u") == F.col("v"),
+                                    F.col("cluster_id"))).alias("__own"))
+                  .observe(obs, F.sum((F.col("cluster_id") < F.col("__own"))
+                                      .cast("long")).alias("moved"))
+                  .select(F.col("u").alias("id"), "cluster_id")
+                  .localCheckpoint(eager=True))
+        if not obs.get["moved"]:
             return labels
+        nbr = sym.join(labels, sym["v"] == labels["id"]).drop("id")
     # labels still moving: returning them would split components silently
     raise RuntimeError(f"connected_components did not converge in "
                        f"{max_iters} rounds (a component's diameter exceeds "

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..util import read_fixture
+
 MEDIA_DDL = ("media_id bigint, kind string, payload binary, mime string, "
              "width int, height int, duration_ms int")
 
@@ -62,7 +64,7 @@ def media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     UTF-8 bytes of the trimmed text (an opaque blob as far as the decode
     path is concerned), kind cycling through the three modalities. Pure
     JVM expressions — the oracle can restate the construction in SQL."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_fixture(spark, sf_dir, "documents")
     kind = F.element_at(F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
                         (F.col("doc_id") % 3 + 1).cast("int"))
     return docs.select(

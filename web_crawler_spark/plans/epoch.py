@@ -14,10 +14,12 @@ One epoch is one DataFrame program (SURVEY.md §7, milestone M1-M4):
 
 Bookkeeping is driver work, not Spark jobs: the schedule counts ride the
 schedule checkpoint as an Observation, one (partition, host, source) cube
-of the fetch result is collected once, and partition_checkpoints, metrics,
-the sources stamp (S13) and the checkpoint row are folded from it and
+of the fetch result is collected once, and partition_checkpoints, the
+per-(host, source) metrics and the checkpoint row are folded from it and
 written by the driver with pyarrow; staged frontier row counts come from
 parquet footers, and the epoch's input count from the frontier manifest.
+The sources registry is written once, at bootstrap: S13's last_crawled is
+derived from the metrics rows when it is read (queries.with_last_crawled).
 
 Reference lifecycle being reproduced (SURVEY.md §3.1): get_article_urls →
 per-URL parse_article → date filter → batched sink, one source at a time
@@ -38,7 +40,7 @@ Scale notes (the 100 TB story):
   * parse (Arrow UDF) runs only on rows that survived seen+date gates.
   * an epoch is committed by ONE atomic write: the frontier manifest swap,
     which records the epoch the new frontier feeds. Everything an epoch
-    writes before it (articles, partition_checkpoints, metrics, sources,
+    writes before it (articles, partition_checkpoints, metrics,
     checkpoints) is uncommitted until then; a crashed attempt's rows are
     dropped when the epoch is redone (tables.DeltaFrontier contract).
 """
@@ -50,7 +52,6 @@ from dataclasses import dataclass, field
 from typing import Callable, Dict, Optional
 
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -71,12 +72,13 @@ FRONTIER_DDL = ("url string, host string, kind string, parser_class string, "
 ARTICLES_DDL = ("source_id bigint, url string, title string, content string, "
                 "published_date string, scraped_date string, epoch int, "
                 "priority int, discovered_seq bigint")
-METRICS_DDL = ("epoch int, host string, fetched bigint, parsed bigint, "
-               "discovered bigint, errors bigint")
+# one row per (host, source) that the epoch fetched from
+METRICS_DDL = ("epoch int, host string, source_id bigint, fetched bigint, "
+               "parsed bigint, discovered bigint, errors bigint")
 SOURCES_DDL = ("id bigint, name string, url string, parser_class string, "
-               "is_active int, last_crawled string, created_at string")
-# mirrors the reference sources DDL (models/database.py:40-50); last_crawled
-# per-epoch update = S13 (database.py:134-146, applied crawler_manager.py:134)
+               "is_active int, created_at string")
+# mirrors the reference sources DDL (models/database.py:40-50) but for
+# last_crawled, which queries.with_last_crawled derives from metrics
 CHECKPOINT_DDL = ("epoch int, watermark_ts double, frontier_in bigint, "
                   "frontier_out bigint, articles_out bigint, "
                   "skipped_dup bigint, skipped_date bigint, "
@@ -99,21 +101,22 @@ SCRAPED_TS = "2024-01-01T00:00:00"
 SEQ_STRIDE = 1_000_000
 
 
-def _fold(rows, key: str, sums=(), maxes=()) -> list:
-    """Fold collected cube rows by ``key``: per key, the sum of each
-    ``sums`` column and the max of each ``maxes`` column over its non-null
-    values (SQL SUM/MAX). Returns ``[(key, {col: value})]`` sorted by key,
-    a null key first."""
+def _fold(rows, keys: tuple, sums=(), maxes=()) -> list:
+    """Fold collected cube rows by the ``keys`` columns: per key tuple, the
+    sum of each ``sums`` column and the max of each ``maxes`` column over
+    its non-null values (SQL SUM/MAX). Returns ``[(key tuple, {col:
+    value})]`` sorted by key, nulls first."""
     out: Dict = {}
     for r in rows:
-        acc = out.setdefault(r[key],
+        acc = out.setdefault(tuple(r[k] for k in keys),
                              {**dict.fromkeys(sums, 0), **dict.fromkeys(maxes)})
         for c in sums:
             acc[c] += r[c]
         for c in maxes:
             if r[c] is not None and (acc[c] is None or r[c] > acc[c]):
                 acc[c] = r[c]
-    return sorted(out.items(), key=lambda kv: (kv[0] is not None, kv[0]))
+    return sorted(out.items(),
+                  key=lambda kv: [(v is not None, v) for v in kv[0]])
 
 
 def pages_fetcher(pages: DataFrame) -> Callable[[DataFrame], DataFrame]:
@@ -175,7 +178,8 @@ class CrawlEngine:
         seeded (S1: SELECT * FROM sources WHERE is_active = 1,
         database.py:127-132); inactive rows are registered but never
         crawled. Seeds are list pages (kind='list'); canonicalized like
-        everything."""
+        everything. The frontier write is bootstrap's commit: a registry
+        written before it is a crashed attempt's, dropped and redone."""
         if not self.frontier.is_empty():
             return                                    # resume: keep state
         cols = seeds.columns
@@ -187,8 +191,8 @@ class CrawlEngine:
             "url", "parser_class",
             (F.col("is_active") if "is_active" in cols else F.lit(1))
             .cast("int").alias("is_active"),
-            F.lit(None).cast("string").alias("last_crawled"),
             F.lit(SCRAPED_TS).alias("created_at"))
+        self.sources.rollback_to(0)
         self.sources.merge(self.spark, src, key="url", epoch=0)
         if "is_active" in cols:
             seeds = seeds.filter(F.col("is_active") == 1)     # S1 scan
@@ -381,9 +385,9 @@ class CrawlEngine:
         #    (physical partition, host, source): `fetched` is url-hashed by
         #    the dedup window, so a host spreads over the partitions and the
         #    cube holds at most partitions × hosts × sources rows. The
-        #    partition lineage, the epoch totals, the per-host metrics and
-        #    S13's touched sources are folded from those rows on the
-        #    driver — no re-aggregation job, no rescan of `fetched`.
+        #    partition lineage, the epoch totals and the per-(host, source)
+        #    metrics are folded from those rows on the driver — no
+        #    re-aggregation job, no rescan of `fetched`.
         ok_i = F.when(F.col("fetch_status") == "ok", 1).otherwise(0)
         art_i = F.when(F.col("kind") == "article", 1).otherwise(0)
         # parsed flag == finish_articles' keep-predicate, restated on `ext`
@@ -412,12 +416,12 @@ class CrawlEngine:
         # per-partition watermarked lineage (north_rule): partition id = the
         # physical partition that fetched the row, watermark = that
         # partition's politeness clock high-water mark
-        part_ck = _fold(cube, "partition_id", sums=("rows_in", "fetched_ok"),
+        part_ck = _fold(cube, ("partition_id",), sums=("rows_in", "fetched_ok"),
                         maxes=("watermark_ts",))
         self.partition_checkpoints.append(pa.Table.from_pylist(
             [{"epoch": epoch, "partition_id": p,
               "watermark_ts": a["watermark_ts"], "rows_in": a["rows_in"],
-              "rows_out": a["fetched_ok"]} for p, a in part_ck],
+              "rows_out": a["fetched_ok"]} for (p,), a in part_ck],
             schema=self.partition_checkpoints.arrow_schema), epoch)
 
         self.articles.append(
@@ -467,31 +471,15 @@ class CrawlEngine:
         # since the delete key includes epoch_added (a tombstone kills
         # exactly one live row).
         n_front_out = frontier_in - n_consumed + n_adds
-        per_host = _fold(cube, "host",
-                         sums=("fetched_ok", "errors", "parsed"))
+        # per (host, source): the cube folded over partitions
+        per_source = _fold(cube, ("host", "source_id"),
+                           sums=("fetched_ok", "errors", "parsed"))
         self.metrics.append(pa.Table.from_pylist(
-            [{"epoch": epoch, "host": h, "fetched": a["fetched_ok"],
-              "parsed": a["parsed"], "discovered": 0, "errors": a["errors"]}
-             for h, a in per_host],
+            [{"epoch": epoch, "host": h, "source_id": sid,
+              "fetched": a["fetched_ok"], "parsed": a["parsed"],
+              "discovered": 0, "errors": a["errors"]}
+             for (h, sid), a in per_source],
             schema=self.metrics.arrow_schema), epoch)
-        # S13 — last_crawled per source (database.py:134-146, applied after
-        # each source crawl at crawler_manager.py:134). Runs BEFORE the
-        # frontier swap, like every write of the epoch. A redo of a crashed
-        # epoch re-stamps the same sources with the same deterministic
-        # stamp (it encodes the epoch), so the rewrite is idempotent. The
-        # registry is a dim table: it is read, stamped and rewritten on the
-        # driver.
-        if not self.sources.is_empty():
-            touched = pa.array({r["source_id"] for r in cube
-                                if r["fetched_ok"] > 0
-                                and r["source_id"] is not None},
-                               pa.int64())
-            src = self.sources.read_arrow()
-            stamp = f"{SCRAPED_TS}#epoch={epoch:06d}"  # zero-padded: string max == numeric max
-            hit = pc.is_in(src["id"], value_set=touched)  # null id: False
-            self.sources.overwrite(src.set_column(
-                src.schema.get_field_index("last_crawled"), "last_crawled",
-                pc.if_else(hit, stamp, src["last_crawled"])), epoch + 1)
         # the skipped_* counts are epoch totals: they belong to the epoch's
         # row, not to every host row of metrics
         self.checkpoints.append(pa.Table.from_pylist(

@@ -23,6 +23,18 @@ def active_sources(sources: DataFrame) -> DataFrame:
     return sources.filter(F.col("is_active") == 1)
 
 
+def with_last_crawled(sources: DataFrame, metrics: DataFrame) -> DataFrame:
+    """S13 — sources plus ``last_crawled`` (database.py:134-146): the
+    zero-padded stamp of the last epoch whose metrics rows show the source
+    fetching a page, null for a source that never fetched."""
+    from .plans.epoch import SCRAPED_TS
+    last = (metrics.filter(F.col("fetched") > 0)
+            .groupBy(F.col("source_id").alias("id"))
+            .agg(F.format_string(f"{SCRAPED_TS}#epoch=%06d", F.max("epoch"))
+                 .alias("last_crawled")))
+    return sources.join(broadcast(last), "id", "left")
+
+
 def latest_with_source(articles: DataFrame, sources: DataFrame,
                        limit: int = 10) -> DataFrame:
     """J1 — articles ⋈ sources broadcast join + top-k (database.py:257-268)."""

@@ -7,15 +7,15 @@ Iceberg snapshots:
 
   table/
     _manifest.json          # {"epochs": [0, 1, ...]}  — listed snapshots
-    epoch=N/part-*.parquet  # one atomic append per epoch
-    epoch=N.k/              # an overwrite that replaced a listed
-                            # epoch=N, listed as {"dirs": {"N": "epoch=N.k"}}
+    epoch=N/part-*.parquet  # one atomic append (or overwrite) per epoch
 
 * Writers write epoch=N fully, then list it by atomically rewriting the
   manifest (os.replace — atomic on POSIX). A crash between data write and
   manifest commit leaves an orphan directory that the next run overwrites:
   exactly Iceberg's snapshot-commit semantics (single writer per table, as
   decided in SURVEY.md §7 "frontier claim semantics").
+* A listed epoch is never rewritten: append and overwrite both raise on
+  one, so a replay first drops it with rollback_to.
 * Readers list ONLY manifest-listed epochs — unlisted data is invisible.
 * Which epochs are DONE is not decided here: the crawl's one commit per
   epoch is the DeltaFrontier manifest swap, whose ``epoch`` field names the
@@ -120,18 +120,9 @@ class LakeTable:
     def committed_epochs(self) -> List[int]:
         return sorted(self._read_manifest()["epochs"])
 
-    def _commit(self, epoch: int) -> None:
-        man = self._read_manifest()
-        man["epochs"] = sorted(set(man["epochs"]) | {epoch})
-        _atomic_write_json(self.path, self._manifest_path, man)
-
     # -- io ------------------------------------------------------------------
-    def _epoch_dir(self, epoch: int, man: Optional[dict] = None) -> str:
-        """The directory of ``epoch`` — ``epoch=N`` unless an overwrite
-        published it under a fresh name (manifest ``dirs``)."""
-        man = self._read_manifest() if man is None else man
-        name = man.get("dirs", {}).get(str(epoch), f"epoch={epoch}")
-        return os.path.join(self.path, name)
+    def _epoch_dir(self, epoch: int) -> str:
+        return os.path.join(self.path, f"epoch={epoch}")
 
     @functools.cached_property
     def arrow_schema(self) -> pa.Schema:
@@ -154,62 +145,48 @@ class LakeTable:
         else:
             data.write.mode("overwrite").parquet(d)
 
-    def append(self, data: Union[DataFrame, pa.Table], epoch: int) -> None:
-        """Atomic append: write epoch dir (overwriting any unlisted orphan
-        from a crashed run), then list it in the manifest. A listed epoch
-        is never rewritten — a replay first drops it with rollback_to."""
+    def _publish(self, data: Union[DataFrame, pa.Table], epoch: int,
+                 epochs: List[int]) -> None:
+        """Write epoch dir ``epoch`` (overwriting any unlisted orphan from
+        a crashed run), then list ``epochs`` in ONE manifest swap. A
+        listed epoch is never rewritten — a replay first drops it with
+        rollback_to."""
         if epoch in self.committed_epochs():
             raise ValueError(f"epoch {epoch} already committed to {self.path}")
         d = self._epoch_dir(epoch)
         if os.path.exists(d):
             shutil.rmtree(d)                    # orphan from a crash — redo
         self._write(data, d)
-        self._commit(epoch)
+        _atomic_write_json(self.path, self._manifest_path,
+                           {"epochs": sorted(epochs)})
+
+    def append(self, data: Union[DataFrame, pa.Table], epoch: int) -> None:
+        """Atomic append of ``data`` as the snapshot ``epoch``."""
+        self._publish(data, epoch, self.committed_epochs() + [epoch])
+
+    def overwrite(self, data: Union[DataFrame, pa.Table], epoch: int) -> None:
+        """Replace table contents with ``data`` as the single snapshot
+        ``epoch``. The old snapshots stay committed (``data`` may read
+        them) until the manifest swap lists only the new one; their dirs
+        are removed after it."""
+        old = self.committed_epochs()
+        self._publish(data, epoch, [epoch])
+        for e in old:
+            shutil.rmtree(self._epoch_dir(e), ignore_errors=True)
 
     def rollback_to(self, epoch: int) -> None:
         """Drop every listed epoch >= ``epoch`` (Iceberg
         rollback_to_snapshot): one manifest swap unlists them, then their
         dirs are removed. A crash in between leaves unlisted orphans that
-        the next append of that epoch overwrites."""
-        man = self._read_manifest()
-        gone = [e for e in man["epochs"] if e >= epoch]
-        if not gone:
+        the next write of that epoch overwrites."""
+        epochs = self.committed_epochs()
+        if not any(e >= epoch for e in epochs):
             return
-        dirs = [self._epoch_dir(e, man) for e in gone]
-        new = {"epochs": sorted(e for e in man["epochs"] if e < epoch)}
-        kept = {k: v for k, v in man.get("dirs", {}).items()
-                if int(k) < epoch}
-        if kept:
-            new["dirs"] = kept
-        _atomic_write_json(self.path, self._manifest_path, new)
-        for d in dirs:
-            shutil.rmtree(d, ignore_errors=True)
-
-    def overwrite(self, data: Union[DataFrame, pa.Table], epoch: int) -> None:
-        """Replace table contents with data as the single epoch `epoch`.
-        Two-phase: data is written to a directory the manifest does not
-        list (``epoch=N``, or ``epoch=N.k`` when a committed snapshot holds
-        that name — a replayed overwrite), while the old contents stay
-        committed (data may read them); then ONE atomic manifest swap
-        publishes it and the old dirs are removed. A crash at any step
-        leaves the old or the new snapshot readable, never a listed dir
-        that is gone."""
-        man = self._read_manifest()
-        used = {os.path.basename(self._epoch_dir(e, man))
-                for e in man["epochs"]}
-        name, i = f"epoch={epoch}", 0
-        while name in used:
-            name, i = f"epoch={epoch}.{i}", i + 1
-        d = os.path.join(self.path, name)
-        if os.path.exists(d):
-            shutil.rmtree(d)          # unlisted: orphan of a crashed write
-        self._write(data, d)
-        new = {"epochs": [epoch]}
-        if name != f"epoch={epoch}":
-            new["dirs"] = {str(epoch): name}
-        _atomic_write_json(self.path, self._manifest_path, new)
-        for o in used:
-            shutil.rmtree(os.path.join(self.path, o), ignore_errors=True)
+        _atomic_write_json(self.path, self._manifest_path,
+                           {"epochs": [e for e in epochs if e < epoch]})
+        for e in epochs:
+            if e >= epoch:
+                shutil.rmtree(self._epoch_dir(e), ignore_errors=True)
 
     #: merge() rewrites the WHOLE table per call (the sandbox stand-in for
     #: Iceberg MERGE has no partition-pruned rewrite) — it is DIM-TABLE-ONLY
@@ -258,19 +235,8 @@ class LakeTable:
             return None
         return _reader(spark, self.schema_ddl).parquet(*dirs)
 
-    def read_arrow(self) -> Optional[pa.Table]:
-        """The committed snapshot as one ``pyarrow.Table`` in the DDL's
-        types, read on the driver (dim tables only), or None when nothing
-        is committed."""
-        dirs = self._committed_dirs()
-        if not dirs:
-            return None
-        return pa.concat_tables([pq.read_table(d, schema=self.arrow_schema)
-                                 for d in dirs])
-
     def _committed_dirs(self) -> list:
-        man = self._read_manifest()
-        dirs = [self._epoch_dir(e, man) for e in sorted(man["epochs"])]
+        dirs = [self._epoch_dir(e) for e in self.committed_epochs()]
         missing = [d for d in dirs if not os.path.exists(d)]
         if missing:
             # fail LOUD, like DeltaFrontier: silently reading fewer epochs
@@ -496,8 +462,8 @@ class DeltaFrontier:
 
     def overwrite(self, df: DataFrame, epoch: int) -> None:
         """Full rewrite as a single add snapshot feeding ``epoch``
-        (bootstrap / compaction / explicit state restore). Two-phase like
-        LakeTable.overwrite, into a FRESH directory: a crash at any point
+        (bootstrap / compaction / explicit state restore). Two-phase, into
+        a FRESH directory: a crash at any point
         leaves either the complete old snapshot (manifest untouched) or the
         complete new one; at worst an orphan dir stays until the next
         replace commit, never committed data."""
